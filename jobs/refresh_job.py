@@ -33,7 +33,11 @@ granularity; re-running a completed delta is a no-op):
            manifest row for each date is appended. A crash between the
            two just re-promotes the same deterministic staging content.
 3. DERIVE  tier partitions for ALL touched dates recompute from the final
-           hist (a pure function — idempotent), so tiers need no protocol.
+           hist (a pure function — idempotent), so tiers need no protocol:
+           one read of the touched hist partitions, one fused exchange
+           (rollup_tiers_fused) that yields every tier as a single persisted
+           frame, and three filtered writes, one per tier. The 1m blocks
+           encode from the same in-memory 1m rows.
 
 Scale shape at 10^12 stored rows: the delta is scanned once into its
 minute histogram; every hist/tier read is pruned to touched dates
@@ -60,8 +64,7 @@ from numalogic_spark.operators.rollup import (
     TIERS,
     RollupConfig,
     histogram,
-    merge_histogram,
-    tier_from_histogram,
+    rollup_tiers_fused,
 )
 from numalogic_spark.session import get_spark
 
@@ -131,45 +134,45 @@ def _read_marker(spark: SparkSession, path: str) -> str | None:
         return None
     stream = fs.open(hpath)
     try:
-        buf = bytearray()
-        b = stream.read()
-        while b != -1 and len(buf) < 1024:
-            buf.append(b)
-            b = stream.read()
-        return buf.decode("utf-8")
+        # one JVM call for the whole (capped) sidecar, not one per byte
+        return bytes(stream.readNBytes(1024)).decode("utf-8")
     finally:
         stream.close()
 
 
-def _write_tiers(hist_dates: DataFrame, state: str, cfg: RollupConfig) -> dict[str, int]:
-    counts = {}
-    for tier, (unit, _, _) in TIERS.items():
-        pts = _with_date(
-            tier_from_histogram(merge_histogram(hist_dates, unit), cfg, tier)
-        )
-        _write_partitioned(pts, f"{state}/tier_{tier}")
-        counts[tier] = pts.count()
-    return counts
+def _write_tiers(hist: DataFrame, state: str, cfg: RollupConfig) -> dict[str, int]:
+    """Derive every tier and the 1m blocks for the dates in ``hist``.
+
+    One fused pass computes all tiers as a single frame, persisted
+    once: each tier partition is written as a filter of it, the 1m blocks
+    encode from its 1m rows, and one aggregate counts its rows per tier.
+    Repartitioning by date before the persist puts each date in one task,
+    so every write leaves one file per date and tier; without it every
+    partition of the tier aggregate writes a file per date it holds.
+    Returns the rows per tier."""
+    pts = _with_date(rollup_tiers_fused(hist, cfg)).repartition(DATE_COL).persist()
+    try:
+        for tier in TIERS:
+            _write_partitioned(pts.filter(F.col("tier") == tier), f"{state}/tier_{tier}")
+        _write_blocks(pts.filter(F.col("tier") == "1m"), state)
+        n = {r["tier"]: int(r["count"]) for r in pts.groupBy("tier").count().collect()}
+        return {tier: n.get(tier, 0) for tier in TIERS}
+    finally:
+        pts.unpersist()
 
 
-
-def _write_blocks(spark: SparkSession, state: str, dates: list[str]) -> int:
+def _write_blocks(tier_1m: DataFrame, state: str) -> None:
     """Gorilla/delta-of-delta blocks for the 1m tier, date-aligned: each
-    touched date's points compress independently (chunk boundaries reset
-    at the date partition), so the incremental path can rewrite — and
-    expiry can drop — block partitions with the same dynamic-overwrite
-    unit as everything else. ONE applyInPandas grouped by
-    (source, tier, date) covers every touched date in a single pruned
-    shuffle — never a full-store recompress."""
+    date's points compress independently (chunk boundaries reset at the
+    date partition), so the incremental path can rewrite — and expiry can
+    drop — block partitions with the same dynamic-overwrite unit as
+    everything else. ONE applyInPandas grouped by (source, tier, date)
+    covers every date in ``tier_1m`` in a single shuffle — never a
+    full-store recompress."""
     from numalogic_spark.functions.compression import compress_tier
 
-    dates = sorted(set(dates))
-    if not dates:
-        return 0
-    tier = _read_state(spark, f"{state}/tier_1m", dates)
-    blocks = compress_tier(tier, "n_tok_mean", extra_group_cols=[DATE_COL])
+    blocks = compress_tier(tier_1m, "n_tok_mean", extra_group_cols=[DATE_COL])
     _write_partitioned(blocks, f"{state}/blocks_1m")
-    return len(dates)
 
 
 
@@ -249,13 +252,42 @@ def bootstrap(spark: SparkSession, raw: DataFrame, state: str, cfg: RollupConfig
     ).write.mode("overwrite").parquet(f"{state}/hist_manifest")
     counts = _write_tiers(h, state, cfg)
     date_rows = dates.collect()  # one row per calendar date — tiny
-    all_dates = [r[DATE_COL] for r in date_rows]
-    block_dates = _write_blocks(spark, state, all_dates)
     _write_gapfill(spark, state, None)
     n = sum(int(r["rows"]) for r in date_rows)
     h.unpersist()
     return {"mode": "init", "rows": n, "dates": len(date_rows),
-            "tier_points": counts, "block_dates": block_dates}
+            "tier_points": counts, "block_dates": len(date_rows)}
+
+
+def _probe_delta(dh: DataFrame) -> tuple[list[str], int]:
+    """The dates a delta's histogram touches and its content fingerprint,
+    from ONE query. The fingerprint is bit_xor of xxhash64 over every
+    histogram row — order-independent, 0 for an empty delta — taken per
+    date and folded here: xor is associative, so the fold equals one
+    bit_xor over the whole delta, the value stores already record."""
+    rows = (
+        dh.groupBy(DATE_COL)
+        .agg(F.bit_xor(F.xxhash64(F.struct(*HIST_KEYS, "cnt", DATE_COL))).alias("fp"))
+        .collect()
+    )
+    fp = 0
+    for r in rows:
+        fp ^= int(r["fp"])
+    return sorted(r[DATE_COL] for r in rows), fp
+
+
+def _ledger(manifest: DataFrame, delta_id: str) -> tuple[int, set[str], set[int]]:
+    """One aggregate over the manifest: the highest run_seq so far, the
+    dates already recorded for ``delta_id``, and the content fingerprints
+    recorded with them (stores written before fingerprints have none)."""
+    mine = F.col("delta_id") == delta_id
+    fp = F.col("delta_fp") if "delta_fp" in manifest.columns else F.lit(None).cast("long")
+    row = manifest.agg(
+        F.max("run_seq"),
+        F.collect_set(F.when(mine, F.col(DATE_COL))),
+        F.collect_set(F.when(mine, fp)),
+    ).collect()[0]
+    return row[0] or 0, set(row[1]), {int(x) for x in row[2]}
 
 
 def refresh(
@@ -282,7 +314,7 @@ def _refresh_inner(
     cfg: RollupConfig,
     t0: float,
 ) -> dict:
-    touched = sorted(r[DATE_COL] for r in dh.select(DATE_COL).distinct().collect())
+    touched, dfp = _probe_delta(dh)
 
     # late data for a date whose HIST was already expired is rejected: the
     # mergeable state it would need is gone, and re-deriving coarser tiers
@@ -301,41 +333,21 @@ def _refresh_inner(
         rejected = [d for d in touched if d in expired]
         touched = [d for d in touched if d not in expired]
 
-    manifest = spark.read.parquet(f"{state}/hist_manifest")
-    # content fingerprint of the WHOLE delta (order-independent): detects
-    # delta_id reuse with different content — e.g. a stream restarted with
-    # a fresh checkpoint but the same id_prefix — before any mutation
-    dfp_row = dh.agg(
-        F.bit_xor(F.xxhash64(F.struct(*HIST_KEYS, "cnt", DATE_COL))).alias("fp")
-    ).collect()[0]
-    dfp = int(dfp_row["fp"]) if dfp_row["fp"] is not None else 0
-    if "delta_fp" in manifest.columns:
-        prior = (
-            manifest.filter(
-                (F.col("delta_id") == delta_id) & F.col("delta_fp").isNotNull()
-            )
-            .select("delta_fp")
-            .distinct()
-            .collect()
+    last_seq, done, prior_fps = _ledger(spark.read.parquet(f"{state}/hist_manifest"), delta_id)
+    # the delta's content fingerprint detects delta_id reuse with different
+    # content — e.g. a stream restarted with a fresh checkpoint but the same
+    # id_prefix — before any mutation
+    if any(fp != dfp for fp in prior_fps):
+        raise ValueError(
+            f"delta_id {delta_id!r} was previously applied with DIFFERENT "
+            "content — refusing to merge. Use a fresh delta_id (or a new "
+            "id_prefix for a restarted stream checkpoint)."
         )
-        if any(int(r["delta_fp"]) != dfp for r in prior):
-            raise ValueError(
-                f"delta_id {delta_id!r} was previously applied with DIFFERENT "
-                "content — refusing to merge. Use a fresh delta_id (or a new "
-                "id_prefix for a restarted stream checkpoint)."
-            )
     # a (date, delta_id) pair with ANY manifest entry is done forever —
     # including after LATER deltas touched the date, when re-merging this
     # delta (or promoting its stale staging) would corrupt the newer state
-    done = {
-        r[DATE_COL]
-        for r in manifest.filter(F.col("delta_id") == delta_id)
-        .select(DATE_COL)
-        .distinct()
-        .collect()
-    }
     pending = [d for d in touched if d not in done]
-    run_seq = (manifest.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    run_seq = last_seq + 1
     staging = f"{state}/staging/{delta_id}"
 
     if pending:
@@ -382,11 +394,9 @@ def _refresh_inner(
 
     # DERIVE — tiers are a pure function of the final hist for touched dates
     counts: dict[str, int] = {}
-    block_dates = gapfill_dates = 0
+    gapfill_dates = 0
     if touched:
-        hist_touched = _read_state(spark, f"{state}/hist", touched)
-        counts = _write_tiers(hist_touched, state, cfg)
-        block_dates = _write_blocks(spark, state, touched)
+        counts = _write_tiers(_read_state(spark, f"{state}/hist", touched), state, cfg)
         gapfill_dates = _write_gapfill(spark, state, touched)
     # the delta is fully applied and derived: drop its staging scratch so
     # a future reuse of the id can never promote a stale snapshot (the
@@ -398,7 +408,7 @@ def _refresh_inner(
         "touched_dates": len(touched), "merged_dates": len(pending),
         "skipped_dates": len(touched) - len(pending),
         "rejected_expired_dates": len(rejected),
-        "tier_points_touched": counts, "block_dates": block_dates,
+        "tier_points_touched": counts, "block_dates": len(touched),
         "gapfill_dates": gapfill_dates,
         "wall_sec": round(time.time() - t0, 2),
     }

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g. The driver JVM grows
+    its heap up to this cap; a cap above the host's RAM let G1 try to
+    commit a 16 GB expansion on a 15 GB host and abort the JVM."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "numalogic_spark",
     cores: int | None = None,
@@ -67,7 +75,7 @@ def get_spark(
         # sub-chunks its ids (datagen.py) so its peak memory no longer
         # depends on this cap at all.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # token rows carry ~1k-element arrays: large columnar batches become

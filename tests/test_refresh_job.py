@@ -411,6 +411,68 @@ def test_delta_id_reuse_with_different_content_rejected(spark, tokens_df, tmp_pa
     _assert_state_matches(spark, state, base.unionByName(d1), cfg)
 
 
+def _three_days(tokens_df):
+    """The fixture spread over three calendar dates; the delta holds 10%
+    of the rows and only the first two dates."""
+    day = F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
+    multi = tokens_df.withColumn("event_ts", F.col("event_ts") + F.make_interval(days=day))
+    in_delta = (F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 7) & (day < 2)
+    return multi.filter(~in_delta), multi.filter(in_delta)
+
+
+def test_delta_fingerprint_matches_whole_delta_formula(spark, tokens_df, tmp_path):
+    """The manifest's delta_fp is one bit_xor over the whole delta
+    histogram, the value existing stores hold, although refresh() takes
+    it per date and folds the dates. An empty delta yields 0."""
+    from jobs.refresh_job import _probe_delta, _with_date
+
+    cfg = RollupConfig()
+    base, d1 = _three_days(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    refresh(spark, d1, "d1", state, cfg)
+
+    def whole_delta_fp(delta):
+        dh = _with_date(histogram(delta, cfg, "minute"))
+        return dh.agg(
+            F.bit_xor(F.xxhash64(F.struct("source", "bucket_ts", "v", "cnt", DATE_COL)))
+        ).collect()[0][0]
+
+    want = whole_delta_fp(d1)
+    assert want is not None
+    got = spark.read.parquet(f"{state}/hist_manifest").filter(F.col("delta_id") == "d1")
+    fps = {r["delta_fp"] for r in got.select("delta_fp").collect()}
+    assert fps == {want} and got.count() == 2  # one ledger row per touched date
+
+    empty = d1.limit(0)
+    assert whole_delta_fp(empty) is None  # recorded as 0
+    assert _probe_delta(_with_date(histogram(empty, cfg, "minute"))) == ([], 0)
+
+
+def test_tier_points_touched_counts_touched_partitions(spark, tokens_df, tmp_path):
+    """refresh() reports, per tier, the rows of that tier's touched-date
+    partitions — the whole rewritten partitions, not just the delta's
+    buckets."""
+    cfg = RollupConfig()
+    base, d1 = _three_days(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    out = refresh(spark, d1, "d1", state, cfg)
+
+    touched = sorted(
+        r[0] for r in d1.select(F.date_format("event_ts", "yyyy-MM-dd")).distinct().collect()
+    )
+    assert out["touched_dates"] == len(touched) == 2
+    want = {
+        tier: spark.read.parquet(f"{state}/tier_{tier}")
+        .filter(F.col(DATE_COL).cast("string").isin(touched))
+        .count()
+        for tier in ("1m", "1h", "1d")
+    }
+    assert out["tier_points_touched"] == want
+    assert want["1d"] < spark.read.parquet(f"{state}/tier_1d").count()
+
+
 def test_late_delta_for_expired_date_rejected(spark, tokens_df, tmp_path):
     """A delta for a date whose hist was already expired must NOT mutate
     the store: re-deriving coarser tiers from the delta alone would
@@ -437,6 +499,9 @@ def test_late_delta_for_expired_date_rejected(spark, tokens_df, tmp_path):
     out = refresh(spark, late, "late1", state, cfg)
     assert out["rejected_expired_dates"] >= 1
     assert out["touched_dates"] == 0 and out["merged_dates"] == 0
+    # a fully rejected delta records nothing in the ledger
+    ledger = spark.read.parquet(f"{state}/hist_manifest")
+    assert ledger.filter(F.col("delta_id") == "late1").count() == 0
 
     # retained coarser tiers are byte-identical — no delta-only overwrite
     for tier, before in (("1h", tier_1h_before), ("1d", tier_1d_before)):
