@@ -1232,8 +1232,7 @@ def _q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sample_sql(rate: float = 0.3) -> str:
-    from numalogic_spark.operators.dedup import MERSENNE31
-    from numalogic_spark.operators.sampling import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B
+    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
 
     p = MERSENNE31
     fold = (
@@ -1317,8 +1316,7 @@ def _q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _training_order_sql(n_shards: int = 4) -> str:
-    from numalogic_spark.operators.dedup import MERSENNE31
-    from numalogic_spark.operators.sampling import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B
+    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
 
     p = MERSENNE31
     fold = (
@@ -1810,8 +1808,7 @@ def _semdedup_replay_codebook():
     import duckdb
     import numpy as np
 
-    from numalogic_spark.operators.dedup import MERSENNE31
-    from numalogic_spark.operators.sampling import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B
+    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
     from numalogic_spark.operators.similarity import kmeans_fit
 
     seed, n_centroids, sample_rows = 42, 8, 2000
@@ -2531,8 +2528,7 @@ def _pca_sql() -> str:
     import duckdb
     import numpy as np
 
-    from numalogic_spark.operators.dedup import MERSENNE31
-    from numalogic_spark.operators.sampling import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B
+    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
     from numalogic_spark.operators.similarity import pca_fit_numpy
 
     rel = duckdb.sql(
@@ -3260,85 +3256,6 @@ SELECT source, pack_id, doc_id, pack_offset, n_tok FROM rec
 """
 
 
-_NB_VOCAB = 5000
-
-
-def _q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainable domain classifier (multinomial Naive Bayes, closed-form):
-    fit on the EVEN-doc_id half with label = lang, score the odd half.
-    All log-probabilities are 6dp-quantized at train time and summed as
-    decimals, so the joint scores are engine-exact (operators/classify.py)."""
-    from numalogic_spark.operators.classify import nb_score, nb_train
-
-    docs = _docs(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    test = docs.filter(F.col("doc_id") % 2 == 1)
-    priors, lik = nb_train(train, label_col="lang", max_vocab=_NB_VOCAB)
-    return nb_score(test, priors, lik).select("doc_id", "pred", "score")
-
-
-def _nb_classify_sql() -> str:
-    """DuckDB replay of train AND score: same vocabulary cap + tie-break,
-    same add-1 smoothing, same 6dp quantization before decimal sums."""
-    v = _NB_VOCAB
-    return rf"""
-WITH tr AS (
-  SELECT lang AS label,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-  FROM documents WHERE doc_id % 2 = 0
-), tok AS (
-  SELECT label, t.w AS word FROM tr, unnest(tr.ws) AS t(w)
-), vocab AS (
-  SELECT word FROM (SELECT word, count(*) AS cnt FROM tok GROUP BY 1)
-  ORDER BY cnt DESC, word LIMIT {v}
-), iv AS (
-  SELECT tok.label, tok.word FROM tok JOIN vocab USING (word)
-), wl AS (
-  SELECT word, label, count(*) AS c FROM iv GROUP BY 1, 2
-), tot AS (
-  SELECT label, count(*) AS t FROM iv GROUP BY 1
-), vs AS (SELECT count(*) AS vv FROM vocab),
-nd AS (SELECT count(*) AS n FROM documents WHERE doc_id % 2 = 0),
-labcnt AS (
-  SELECT lang AS label, count(*) AS nl FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
-), pri AS (
-  SELECT lc.label,
-         floor(ln(lc.nl / CAST((SELECT n FROM nd) AS DOUBLE)) * 1000000 + 0.5) / 1000000.0 AS log_prior,
-         floor(ln(1.0 / (coalesce(tot.t, 0) + 1.0 * ((SELECT vv FROM vs) + 1))) * 1000000 + 0.5) / 1000000.0 AS log_unk
-  FROM labcnt lc LEFT JOIN tot ON tot.label = lc.label
-), lik AS (
-  SELECT vocab.word, tot.label,
-         floor(ln((coalesce(wl.c, 0) + 1.0) / (tot.t + 1.0 * ((SELECT vv FROM vs) + 1))) * 1000000 + 0.5) / 1000000.0 AS log_p
-  FROM vocab CROSS JOIN tot
-  LEFT JOIN wl ON wl.word = vocab.word AND wl.label = tot.label
-), te AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-  FROM documents WHERE doc_id % 2 = 1
-), ttok AS (
-  SELECT doc_id, t.w AS word FROM te, unnest(te.ws) AS t(w)
-), pl AS (
-  SELECT ttok.doc_id, p.label,
-         CAST(coalesce(lik.log_p, p.log_unk) AS DECIMAL(28,6)) AS lp
-  FROM ttok CROSS JOIN pri p
-  LEFT JOIN lik ON lik.word = ttok.word AND lik.label = p.label
-), sums AS (
-  SELECT doc_id, label, sum(lp) AS wsum FROM pl GROUP BY 1, 2
-), sc AS (
-  SELECT te.doc_id, p.label,
-         CAST(p.log_prior AS DECIMAL(28,6)) + coalesce(s.wsum, CAST(0 AS DECIMAL(28,6))) AS score
-  FROM te CROSS JOIN pri p
-  LEFT JOIN sums s ON s.doc_id = te.doc_id AND s.label = p.label
-), ranked AS (
-  SELECT doc_id, label, score,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-  FROM sc
-)
-SELECT doc_id, label AS pred, CAST(score AS DOUBLE) AS score
-FROM ranked WHERE rn = 1
-"""
-
-
 def _q_sklearn_scalers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The four sklearn PreprocessFactory scalers (Standard/MinMax/MaxAbs/
     Robust, reference config/factory.py:45,59-63) fit per series and
@@ -3983,8 +3900,7 @@ def _fold_raw_sql(col: str, salt: int) -> str:
     portable hash BEFORE mixing) — emitted ONCE per hash site; the
     quadratic-map avalanche rounds are applied in staged CTE levels via
     `_mix_step_sql` so the O(len) fold never inlines 4x."""
-    from numalogic_spark.operators.dedup import MERSENNE31
-    from numalogic_spark.operators.sampling import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B
+    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
 
     p = MERSENNE31
     return (
@@ -3998,7 +3914,7 @@ def _fold_raw_sql(col: str, salt: int) -> str:
 def _mix_step_sql(x: str, c: int) -> str:
     """One quadratic-map round (x² + c mod p) over a BOUND column
     reference — column refs are free, so squaring costs nothing extra."""
-    from numalogic_spark.operators.dedup import MERSENNE31
+    from numalogic_spark.functions.exprs import MERSENNE31
 
     return f"((({x}) * ({x}) + {c}) % {MERSENNE31})"
 
@@ -4908,11 +4824,10 @@ FROM ee
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # --- driver-gate window: the driver verifies list(queries())[:50].
-        # Rounds 1-4 gated the historical head of this dict, leaving the
-        # later waves (LM, diagnostics, sketches, downsamplers, cleaning)
-        # with pytest/selfcheck evidence only. Round 5 promotes those 45
-        # entries into the gate window; 5 rollup anchors keep continuity.
+        # The correctness gate checks list(queries())[:50] against oracle_sql().
+        # Every entry has an oracle; the four that replay a fit over the
+        # sf0.01 fixture fall back to rows-only where it is missing (see
+        # oracle_sql). Keep the order stable.
         "scrub_pii_documents": _q_scrub_pii,
         "boilerplate_lines_documents": _q_boilerplate,
         "normalize_text_documents": _q_normalize,
@@ -4956,20 +4871,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_refresh_1h_events": _q_rollup_refresh,
         "dedup_clusters_documents": _q_dedup_clusters,
         "bpe_encode_documents": _q_bpe_encode,
-        "nb_classify_documents": _q_nb_classify,
         "ae_inference_events": _q_ae_inference,
         "conv_ae_inference_events": _q_conv_ae_inference,
         "lstm_ae_inference_events": _q_lstm_ae_inference,
         "sparse_ae_inference_events": _q_sparse_ae_inference,
         "transformer_ae_inference_events": _q_transformer_ae_inference,
         "vae_inference_events": _q_vae_inference,
-        # --- evidence tail: every entry below holds a green driver row
-        # in CORRECTNESS_r04.json or r03 (curriculum_order was demoted
-        # from the window — r3-green — to make room for the sixth model
-        # family, the mean-latent Conv1dVAE); rotated out of the 50-slot
-        # window to make room for the never-gated wave above;
-        # pack_greedy (r3-green) likewise demoted for the round-5
-        # incremental-refresh query.
         "pack_greedy_documents": _q_pack_greedy,
         "curriculum_order_documents": _q_curriculum,
         "rollup_1m_events": _q_rollup("1m"),
@@ -5079,7 +4986,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_clusters_documents": _dedup_clusters_sql(),
         "ann_topk_embeddings": _ann_sql(),
         "bpe_encode_documents": _bpe_encode_sql(),
-        "nb_classify_documents": _nb_classify_sql(),
         "pack_greedy_documents": _PACK_GREEDY_SQL,
         "curriculum_order_documents": _CURRICULUM_SQL,
         "scrub_pii_documents": _scrub_pii_sql(),

@@ -1,4 +1,6 @@
-"""Expression-level utilities.
+"""Expression-level utilities: the portable hash family under the HLL/CMS
+sketches and the document operators, the cross-engine rounding helper,
+and `let_bind`.
 
 `let_bind` is the workhorse: Catalyst's CollapseProject inlines a projected
 expression into every downstream reference, and runtime subexpression
@@ -15,6 +17,39 @@ from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Portable hash family: every member is pure 64-bit-safe modular
+# arithmetic, so the exact same numbers are computable in any ANSI-ish SQL
+# engine (the DuckDB correctness oracle recomputes them end-to-end) —
+# unlike engine-private hashes (xxhash64), which an oracle cannot replay.
+MERSENNE31 = 2_147_483_647  # 2^31 - 1; a*x+b stays < 2^62 for a,x < 2^31
+_SAMPLE_A = 1_103_515_245
+_SAMPLE_B = 12_345
+_CHAR_MULT = 131
+
+
+def _word_char_fold(w: Column, mult: int, init: int = 0) -> Column:
+    """Polynomial character fold of one word: acc = (acc·mult + codepoint)
+    mod p, seeded with ``init`` (the salt hook).
+
+    The string is split into its chars ONCE (split('') is a single pass; a
+    substr(i, 1) per position re-seeks the UTF-8 string for every char,
+    O(len²)). The empty string folds one 0-step (split('', '') is [''] and
+    ascii('') = 0); NULL propagates."""
+    chars = F.transform(F.split(w, ""), lambda c: F.ascii(c).cast("long"))
+    return F.aggregate(
+        chars,
+        F.lit(init % MERSENNE31).cast("long"),
+        lambda acc, c: (acc * F.lit(mult) + c) % F.lit(MERSENNE31),
+    )
+
+
+def portable_hash_long(id_col: str | Column, salt: int = 0) -> Column:
+    """id → integer hash in [0, p): the shared char fold of the id's
+    string form seeded with the salt, then (A·h + B) mod p."""
+    c = F.col(id_col) if isinstance(id_col, str) else id_col
+    folded = _word_char_fold(c.cast("string"), _CHAR_MULT, init=salt)
+    return (F.lit(_SAMPLE_A) * folded + F.lit(_SAMPLE_B)) % F.lit(MERSENNE31)
 
 
 def ensure_parallelism(df, min_parts: int | None = None):

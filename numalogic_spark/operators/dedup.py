@@ -28,15 +28,17 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from numalogic_spark.functions.exprs import ensure_parallelism, let_bind
+from numalogic_spark.functions.exprs import (
+    MERSENNE31,
+    _word_char_fold,
+    ensure_parallelism,
+    let_bind,
+)
 
-# Portable hash family shared by MinHash / SimHash / fingerprinting: every
-# member is pure 64-bit-safe modular arithmetic, so the exact same numbers
-# are computable in any ANSI-ish SQL engine (the DuckDB correctness oracle
-# recomputes them end-to-end) — unlike engine-private hashes (xxhash64),
-# which would leave candidate generation unverifiable.
+# MinHash / SimHash / fingerprinting build on the portable hash family of
+# functions/exprs.py (MERSENNE31, the char fold), so candidate generation
+# stays replayable by the SQL oracle.
 SHINGLE_BASE = 1_114_112  # > max Unicode code point → n-gram encoding is injective
-MERSENNE31 = 2_147_483_647  # 2^31 - 1; a*x+b stays < 2^62 for a,x < 2^31
 BAND_MULT = 1_000_003  # band-hash fold multiplier (p * BAND_MULT < 2^63)
 
 
@@ -680,24 +682,6 @@ def _simhash_params(seed: int = SIMHASH_SEED) -> list[tuple[int, int, int]]:
         (rng.randrange(1, MERSENNE31), rng.randrange(1, MERSENNE31), rng.randrange(MERSENNE31))
         for _ in range(4)
     ]
-
-
-def _word_char_fold(w: Column, mult: int, init: int = 0) -> Column:
-    """Polynomial character fold of one word: acc = (acc·mult + codepoint)
-    mod p, seeded with ``init`` (the salt hook — sampling.uniform_hash_unit
-    reuses this exact fold so the portable hash family lives in ONE place).
-
-    The string is split into its chars ONCE (split('') is a single pass);
-    the old substr(i, 1)-per-position form re-seeked the UTF-8 string from
-    the start for every char — O(len²), measured 2.2× slower on id-length
-    strings. Values identical, including the empty-string single 0-step
-    (split('', '') is [''] and ascii('') = 0) and NULL propagation."""
-    chars = F.transform(F.split(w, ""), lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(
-        chars,
-        F.lit(init % MERSENNE31).cast("long"),
-        lambda acc, c: (acc * F.lit(mult) + c) % F.lit(MERSENNE31),
-    )
 
 
 def simhash_word_packs(text_col: str, seed: int = SIMHASH_SEED) -> Column:

@@ -22,27 +22,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from numalogic_spark.operators.dedup import MERSENNE31
-
-_SAMPLE_A = 1_103_515_245
-_SAMPLE_B = 12_345
-_CHAR_MULT = 131
-
-
-def portable_hash_long(id_col: str | Column, salt: int = 0) -> Column:
-    """id → integer hash in [0, p): the shared char fold of the id's
-    string form seeded with the salt, then (A·h + B) mod p."""
-    from numalogic_spark.operators.dedup import _word_char_fold
-
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    folded = _word_char_fold(c.cast("string"), _CHAR_MULT, init=salt)
-    return (F.lit(_SAMPLE_A) * folded + F.lit(_SAMPLE_B)) % F.lit(MERSENNE31)
+from numalogic_spark.functions.exprs import (  # noqa: F401 — re-exported
+    _CHAR_MULT,
+    _SAMPLE_A,
+    _SAMPLE_B,
+    MERSENNE31,
+    portable_hash_long,
+)
 
 
 def uniform_hash_unit(id_col: str | Column, salt: int = 0) -> Column:
     """id → uniform [0, 1): the id's STRING FORM (integral ids are cast to
     their decimal string) goes through the shared portable char fold
-    (dedup._word_char_fold, mult 131 mod 2^31−1) SEEDED with the salt,
+    (exprs._word_char_fold, mult 131 mod 2^31−1) SEEDED with the salt,
     then an affine map (A·h + B) mod p. Identical arithmetic is
     expressible in any SQL engine (the DuckDB oracle replays it).
 
@@ -200,7 +192,7 @@ def dsir_importance(
     Returns (doc_id, n_tokens, log_weight). Positive ⇒ more target-like
     than the corpus average.
 
-    Engine shape (the classify.py discipline): ONE tokenize pass —
+    Engine shape: ONE tokenize pass —
     the word frame persists across the vocabulary pass and both count
     passes; the model is a (V+1)-row broadcast table of 6dp-quantized
     log-ratios (per-word quantization + decimal sums ⇒ the DuckDB oracle

@@ -9,8 +9,8 @@ cumulative buckets for histogram_quantile). Spark's built-in
 `approx_count_distinct` IS an HLL — but its register hashing is
 engine-private, so its estimates can't be replayed by an external
 oracle. This sketch builds the registers from the repo's PORTABLE hash
-family (the dedup/sampling Carter-Wegman fold — identical arithmetic in
-any SQL engine), making the estimate itself hash-gateable:
+family (the Carter-Wegman char fold of functions/exprs.py — identical
+arithmetic in any SQL engine), making the estimate itself hash-gateable:
 
   register j  = mix(h1(id)) mod m     (h1: salt-0 portable hash; mix =
                 two quadratic-map rounds, see _mix — the fold alone is
@@ -60,8 +60,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from numalogic_spark.operators.dedup import MERSENNE31
-from numalogic_spark.operators.sampling import portable_hash_long
+from numalogic_spark.functions.exprs import MERSENNE31, portable_hash_long
 
 # Pollard-rho-style quadratic mixing constants (the golden-ratio /
 # murmur3 words reduced mod p — arbitrary non-zero field elements)
@@ -150,7 +149,7 @@ def hll_distinct(
 
 def _hash_d(item: Column, d: int, width: int) -> Column:
     """Row-d CMS column index: mixed portable hash with salt d."""
-    from numalogic_spark.operators.sampling import portable_hash_long
+    from numalogic_spark.functions.exprs import portable_hash_long
 
     return (_mix(portable_hash_long(item, salt=d)) % F.lit(width)).cast("int")
 

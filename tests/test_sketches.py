@@ -1,12 +1,43 @@
 """Deterministic HLL sketch: estimate accuracy vs exact, merge =
-recompute, and determinism across partitionings."""
+recompute, and determinism across partitionings; the portable hash under
+HLL/CMS vs a pure-Python oracle."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from numalogic_spark.functions.exprs import (
+    _CHAR_MULT,
+    _SAMPLE_A,
+    _SAMPLE_B,
+    MERSENNE31,
+    portable_hash_long,
+)
 from numalogic_spark.operators.sketches import hll_distinct, hll_estimate, hll_registers
+
+
+def _hash_py(doc_id: str, salt: int = 0) -> int:
+    acc = salt % MERSENNE31
+    for ch in str(doc_id):
+        acc = (acc * _CHAR_MULT + ord(ch)) % MERSENNE31
+    return (_SAMPLE_A * acc + _SAMPLE_B) % MERSENNE31
+
+
+def test_portable_hash_matches_python_oracle(spark, tokens_df):
+    # salts 0 and 1 are the HLL register and rho hashes
+    got = (
+        tokens_df.select(
+            "doc_id",
+            portable_hash_long("doc_id").alias("h0"),
+            portable_hash_long("doc_id", salt=1).alias("h1"),
+        )
+        .limit(200)
+        .toPandas()
+    )
+    for salt in (0, 1):
+        exp = [_hash_py(d, salt) for d in got["doc_id"]]
+        assert [int(h) for h in got[f"h{salt}"]] == exp
 
 
 def _frame(spark, n_groups=4, per_group=(10, 100, 1000, 5000), seed=7):

@@ -77,21 +77,6 @@ def main() -> None:
         grab(centroid_cosine(emb)),
     ))
 
-    # round 3: NB classifier scoring — model tables ride broadcast joins,
-    # the only shuffle is the per-doc decimal sum
-    from numalogic_spark.operators.classify import nb_score, nb_train
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", ["alpha", "beta", "gamma"][i % 3], f"alpha beta w{i} gamma")
-         for i in range(60)],
-        "doc_id string, label string, text string",
-    )
-    priors, lik = nb_train(docs, max_vocab=100)
-    sections.append((
-        "NB classifier scoring (both model tables BroadcastHashJoin; one exchange for the per-doc decimal sum)",
-        grab(nb_score(docs, priors, lik)),
-    ))
-
     # round 4: time-series feature operators — every one rides a single
     # exchange on the series key; re-aggregations reuse that partitioning
     from numalogic_spark.operators.tsfeatures import (
