@@ -13,7 +13,6 @@ Conventions for oracle comparability:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -969,260 +968,6 @@ WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.
 """
 
 
-def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import text_stats
-
-    out = text_stats(_docs(spark, sf_dir), "text", "doc_id")
-    return out.select(
-        "doc_id", "n_chars", "n_words", "n_distinct_words", "n_tokens", "n_punct",
-        _r6("ttr").alias("ttr"),
-        _r6("mean_word_len").alias("mean_word_len"),
-        _r6("quality_score").alias("quality_score"),
-    )
-
-
-_TEXT_QUALITY_SQL = r"""
-WITH s AS (
-  SELECT doc_id,
-    length(text) AS n_chars,
-    len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS n_words,
-    len(list_filter(list_distinct(string_split_regex(lower(text), '\s+')), x -> x <> '')) AS n_distinct_words,
-    len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_tokens,
-    length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-    length(text) - length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace_removed
-  FROM documents
-)
-SELECT doc_id, n_chars, n_words, n_distinct_words, n_tokens, n_punct,
-  floor((n_distinct_words * 1.0 / n_words) * 1000000 + 0.5) / 1000000.0 AS ttr,
-  floor(((n_chars - n_nonspace_removed) * 1.0 / n_words) * 1000000 + 0.5) / 1000000.0 AS mean_word_len,
-  floor((least(n_words / 100.0, 1.0) * 0.4
-       + least(n_distinct_words * 1.0 / n_words, 1.0) * 0.4
-       + (1.0 - least(n_punct * 1.0 / greatest(n_chars, 1), 1.0)) * 0.2) * 1000000 + 0.5) / 1000000.0 AS quality_score
-FROM s
-"""
-
-
-def _q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source percent-rank calibration of the quality score
-    (sampling.quantile_transform): raw heuristic scores become
-    cross-domain-comparable quantiles before mixture planning."""
-    from numalogic_spark.operators.sampling import quantile_transform
-    from numalogic_spark.operators.textstats import text_stats
-
-    docs = _docs(spark, sf_dir)
-    qs = text_stats(docs, "text", "doc_id").select(
-        "doc_id", _r6("quality_score").alias("quality_score")
-    )
-    j = qs.join(docs.select("doc_id", "source"), "doc_id")
-    return quantile_transform(j, "quality_score", ("source",))
-
-
-_QUALITY_CALIBRATION_SQL = r"""
-WITH s AS (
-  SELECT doc_id,
-    floor((least(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) / 100.0, 1.0) * 0.4
-         + least(len(list_filter(list_distinct(string_split_regex(lower(text), '\s+')), x -> x <> '')) * 1.0
-                 / len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')), 1.0) * 0.4
-         + (1.0 - least((length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1), 1.0)) * 0.2) * 1000000 + 0.5) / 1000000.0 AS quality_score,
-    source
-  FROM documents
-)
-SELECT doc_id, quality_score, source,
-  floor(percent_rank() OVER (PARTITION BY source ORDER BY quality_score) * 1000000 + 0.5) / 1000000.0 AS q_unit
-FROM s
-"""
-
-
-def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import lang_id
-
-    return lang_id(_docs(spark, sf_dir), "text", "doc_id")
-
-
-def _langid_sql() -> str:
-    from numalogic_spark.operators.textstats import _STOPWORDS
-
-    hit_exprs = ",\n    ".join(
-        "len(list_intersect(list_distinct(string_split_regex(lower(text), '\\s+')), "
-        f"[{', '.join(repr(w) for w in sw)}])) AS hits_{lang}"
-        for lang, sw in _STOPWORDS.items()
-    )
-    langs = list(_STOPWORDS)
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    case = "CASE WHEN " + best + " = 0 THEN 'und' " + " ".join(
-        f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs
-    ) + " ELSE 'und' END"
-    return f"""
-WITH h AS (
-  SELECT doc_id,
-    {hit_exprs}
-  FROM documents
-)
-SELECT doc_id, {case} AS lang_pred, {', '.join(f'hits_{l}' for l in langs)}
-FROM h
-"""
-
-
-def _q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import lang_id_ngram
-
-    from numalogic_spark.operators.textstats import _lang_profiles
-
-    out = lang_id_ngram(_docs(spark, sf_dir), "text", "doc_id")
-    langs = list(_lang_profiles())
-    return out.select(
-        "doc_id", "lang_pred", *[_r6(F.col(f"score_{la}")).alias(f"score_{la}") for la in langs]
-    )
-
-
-def _lang_id_ngram_sql() -> str:
-    """DuckDB replay of the char-trigram profile scorer: same shingle
-    codes, same literal profiles, same containment fractions and
-    tie-break order."""
-    from numalogic_spark.operators.dedup import SHINGLE_BASE
-    from numalogic_spark.operators.textstats import _lang_profiles
-
-    profiles = _lang_profiles()
-    langs = list(profiles)
-    b = SHINGLE_BASE
-    score_cols = ",\n    ".join(
-        f"len(list_filter(sh, s -> list_contains([{', '.join(map(str, prof))}], s)))"
-        f" / CAST(greatest(len(sh), 1) AS DOUBLE) AS score_{la}"
-        for la, prof in profiles.items()
-    )
-    best = "greatest(" + ", ".join(f"score_{la}" for la in langs) + ")"
-    case = (
-        f"CASE WHEN {best} <= 0.0 THEN 'und' "
-        + " ".join(f"WHEN score_{la} = {best} THEN '{la}'" for la in langs)
-        + " ELSE 'und' END"
-    )
-    r6 = "floor(score_{la} * 1000000 + 0.5) / 1000000.0 AS score_{la}"
-    rounded = ", ".join(r6.format(la=la) for la in langs)
-    return f"""
-WITH docs AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(t) - 2, 1)),
-           i -> (coalesce(arr[i], 0) * {b} + coalesce(arr[i+1], 0)) * {b} + coalesce(arr[i+2], 0)) AS sh
-  FROM (SELECT doc_id, lower(text) AS t,
-               list_transform(string_split(lower(text), ''), c -> CAST(ascii(c) AS BIGINT)) AS arr
-        FROM documents)
-), sc AS (
-  SELECT doc_id,
-    {score_cols}
-  FROM docs
-)
-SELECT doc_id, {case} AS lang_pred, {rounded}
-FROM sc
-"""
-
-
-def _q_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus term/document frequencies over whitespace word tokens."""
-    from numalogic_spark.operators.tokens import token_frequencies
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.array_remove(F.split(F.lower("text"), r"\s+"), "").alias("tokens"),
-    )
-    return token_frequencies(docs)
-
-
-_TOKEN_FREQ_SQL = r"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS tokens
-  FROM documents
-), tf AS (
-  SELECT t.token, count(*) AS term_freq
-  FROM d, unnest(d.tokens) AS t(token)
-  GROUP BY 1
-), dfq AS (
-  SELECT t.token, count(*) AS doc_freq
-  FROM (SELECT list_distinct(tokens) AS tokens FROM d) u, unnest(u.tokens) AS t(token)
-  GROUP BY 1
-)
-SELECT tf.token, tf.term_freq, dfq.doc_freq
-FROM tf JOIN dfq USING (token)
-"""
-
-
-def _q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.tokens import tf_idf_topk
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.array_remove(F.split(F.lower("text"), r"\s+"), "").alias("tokens"),
-    )
-    out = tf_idf_topk(docs, top_k=5)
-    return out.select("doc_id", "token", "tf", _r6(F.col("score")).alias("score"), "rank")
-
-
-_TF_IDF_SQL = r"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS tokens
-  FROM documents
-), per_doc AS (
-  SELECT doc_id, t.token, count(*) AS tf
-  FROM d, unnest(d.tokens) AS t(token)
-  GROUP BY 1, 2
-), dfq AS (
-  SELECT t.token, count(*) AS doc_freq
-  FROM (SELECT list_distinct(tokens) AS tokens FROM d) u, unnest(u.tokens) AS t(token)
-  GROUP BY 1
-), scored AS (
-  SELECT doc_id, token, tf,
-         tf * (ln(((SELECT count(*) FROM documents) + 1.0) / (doc_freq + 1)) + 1.0) AS score
-  FROM per_doc JOIN dfq USING (token)
-), ranked AS (
-  SELECT doc_id, token, tf, score,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, token) AS rank
-  FROM scored
-)
-SELECT doc_id, token, tf, floor(score * 1000000 + 0.5) / 1000000.0 AS score, rank
-FROM ranked WHERE rank <= 5
-"""
-
-
-def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk pack plan (512-token training sequences) over the
-    documents' word tokens, deterministic doc_id order per source."""
-    from numalogic_spark.operators.tokens import sequence_pack_plan
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        F.size(F.array_remove(F.split(F.lower("text"), r"\s+"), "")).alias("n_tok"),
-    )
-    return sequence_pack_plan(docs, 512)
-
-
-_SEQ_PACK_SQL = r"""
-WITH d AS (
-  SELECT source, doc_id,
-         len(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')) AS n_tok
-  FROM documents
-), b AS (
-  SELECT source, doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-         -- CAST the windowed sum: DuckDB sum() yields HUGEINT which pandas
-         -- renders as float64, while Spark emits int64 (driver hash gate).
-         CAST(sum(CAST(n_tok AS BIGINT)) OVER (PARTITION BY source ORDER BY doc_id
-             ROWS UNBOUNDED PRECEDING) - n_tok AS BIGINT) AS "offset"
-  FROM d WHERE n_tok > 0
-), e AS (
-  SELECT source, doc_id, n_tok, "offset",
-         unnest(generate_series(CAST(floor("offset" / 512) AS BIGINT),
-                                CAST(floor(("offset" + n_tok - 1) / 512) AS BIGINT))) AS pack_id
-  FROM b
-)
-SELECT source, pack_id, doc_id, "offset",
-       greatest(pack_id * 512 - "offset", 0) AS tok_start,
-       least((pack_id + 1) * 512 - "offset", n_tok) AS tok_end
-FROM e
-"""
-
-
 def _q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 30% sample — reproducible keep/drop per row via the
     portable hash, replayed exactly by the oracle."""
@@ -1334,52 +1079,6 @@ FROM h
 """
 
 
-def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import repetition_stats
-
-    out = repetition_stats(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        _r6(F.col("dup_trigram_frac")).alias("dup_trigram_frac"),
-        _r6(F.col("dup_line_frac")).alias("dup_line_frac"),
-        _r6(F.col("top_word_frac")).alias("top_word_frac"),
-    )
-
-
-def _repetition_sql() -> str:
-    from numalogic_spark.operators.dedup import BAND_MULT, MERSENNE31
-
-    p = MERSENNE31
-    fold = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(generate_series(1, greatest(length(w), 1)), "
-        f"i -> CAST(ascii(w[i]) AS BIGINT))), (acc, c) -> (acc * 131 + c) % {p})"
-    )
-    gram = f"((hs[i] * {BAND_MULT} + hs[i+1]) % {p} * {BAND_MULT} + hs[i+2]) % {p}"
-    r6 = "floor(({x}) * 1000000 + 0.5) / 1000000.0"
-    return rf"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ws,
-         list_filter(string_split(text, chr(10)), x -> x <> '') AS lns
-  FROM documents
-), h AS (
-  SELECT doc_id, ws, lns, list_transform(ws, w -> {fold}) AS hs FROM d
-), g AS (
-  SELECT doc_id, ws, lns,
-         CASE WHEN len(hs) >= 3
-              THEN list_transform(generate_series(1, len(hs) - 2), i -> {gram})
-              ELSE [] END AS tri
-  FROM h
-)
-SELECT doc_id,
-       {r6.format(x="CASE WHEN len(tri) > 0 THEN 1.0 - CAST(len(list_distinct(tri)) AS DOUBLE) / len(tri) ELSE 0.0 END")} AS dup_trigram_frac,
-       {r6.format(x="CASE WHEN len(lns) > 0 THEN 1.0 - CAST(len(list_distinct(lns)) AS DOUBLE) / len(lns) ELSE 0.0 END")} AS dup_line_frac,
-       {r6.format(x="CASE WHEN len(ws) > 0 THEN CAST(list_max(list_transform(list_distinct(ws), w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / len(ws) ELSE 0.0 END")} AS top_word_frac
-FROM g
-"""
-
-
 def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test 5-gram decontamination: even doc_ids are the train
     corpus, odd doc_ids the test corpus."""
@@ -1439,39 +1138,6 @@ SELECT g.doc_id,
                   ELSE 0.0 END * 1000000 + 0.5) / 1000000.0 AS contamination
 FROM g LEFT JOIN m USING (doc_id)
 WHERE g.doc_id % 2 = 1
-"""
-
-
-def _q_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import trigram_entropy
-
-    out = trigram_entropy(_docs(spark, sf_dir))
-    return out.select("doc_id", _r6(F.col("trigram_entropy")).alias("trigram_entropy"))
-
-
-def _trigram_entropy_sql() -> str:
-    from numalogic_spark.operators.dedup import SHINGLE_BASE
-
-    b = SHINGLE_BASE
-    return rf"""
-WITH docs AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(t) - 2, 1)),
-           i -> (coalesce(arr[i], 0) * {b} + coalesce(arr[i+1], 0)) * {b} + coalesce(arr[i+2], 0)) AS sh
-  FROM (SELECT doc_id, lower(text) AS t,
-               list_transform(string_split(lower(text), ''), c -> CAST(ascii(c) AS BIGINT)) AS arr
-        FROM documents)
-), h AS (
-  SELECT doc_id, len(sh) AS n,
-         list_sum(list_transform(
-           list_sort(list_transform(list_distinct(sh), d -> len(list_filter(sh, x -> x = d)))),
-           c -> CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)))) AS s
-  FROM docs
-)
-SELECT doc_id,
-       floor((CASE WHEN n > 0 THEN ln(CAST(n AS DOUBLE)) - s / n ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0
-         AS trigram_entropy
-FROM h
 """
 
 
@@ -1639,28 +1305,6 @@ SELECT DISTINCT a.id AS id_a, b.id AS id_b,
        CAST(bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) AS BIGINT) AS hamming
 FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.cv = b.cv AND a.id < b.id
 WHERE bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) <= {max_hamming}
-"""
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.textstats import doc_fingerprint
-
-    return doc_fingerprint(_docs(spark, sf_dir), "text", "doc_id")
-
-
-_FINGERPRINT_SQL = """
-SELECT doc_id,
-       list_reduce(
-         list_prepend(CAST(0 AS BIGINT), list_transform(words, w ->
-           list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(generate_series(1, greatest(length(w), 1)),
-                              i -> CAST(ascii(w[i]) AS BIGINT))),
-             (acc, c) -> (acc * 131 + c) % 2147483647))),
-         (acc, h) -> (acc * 1000003 + h) % 2147483647) AS fingerprint
-FROM (SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS words
-      FROM documents)
 """
 
 
@@ -1956,276 +1600,6 @@ def entry(spark: SparkSession) -> DataFrame:
         "source", F.unix_timestamp("bucket_ts").alias("bucket_s"), "tier",
         "count", "n_tok_sum", "n_tok_mean", "n_tok_p95", "token_rate",
     )
-
-
-_BPE_VOCAB_RESOURCE = "bpe_frozen_150.json"  # loaded via
-# importlib.resources so a --py-files zip deployment works (a
-# __file__-relative path would point inside the archive)
-
-
-def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE encode of every document under the FROZEN committed
-    vocab (numalogic_spark/resources/bpe_frozen_150.json — trained once,
-    deterministic artifact, the way production tokenizers ship): per doc,
-    token count and a polynomial fold over the full token-id sequence.
-    Gates every token id and their order through the driver's value hash."""
-    from numalogic_spark.functions.bpe import BpeVocab, encode_words_fingerprint
-
-    vocab = BpeVocab.load_resource(_BPE_VOCAB_RESOURCE)
-    return encode_words_fingerprint(_docs(spark, sf_dir), vocab).select(
-        "doc_id", "n_tok", "tok_fp"
-    )
-
-
-def _bpe_encode_sql() -> str:
-    """DuckDB replay of BPE ENCODING as a recursive CTE: each iteration
-    applies one merge type (the best-ranked pair present, all occurrences
-    left-to-right via a list_reduce with a list accumulator; DuckDB slices
-    are INCLUSIVE, hence acc[:-2] for all-but-last) to every still-mergeable
-    DISTINCT word; the fixpoint row per word is the shortest. Base alphabet
-    is ascii() codepoints — equal to the engine's UTF-8 bytes on this ASCII
-    corpus. Encoded per-word ids are then reassembled per document in word
-    order and folded with the same (acc·1000003 + id) mod 2^31−1."""
-    from numalogic_spark.functions.bpe import _FP_MOD, _FP_MULT, BpeVocab
-
-    vocab = BpeVocab.load_resource(_BPE_VOCAB_RESOURCE)
-    K = 1 << 32
-    vals = ", ".join(
-        f"({a}, {b}, {256 + i})" for i, (a, b) in enumerate(vocab.merges)
-    )
-    return rf"""
-WITH RECURSIVE merges(a, b, nid) AS (VALUES {vals}),
-docs AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-  FROM documents
-),
-words(word) AS (
-  SELECT DISTINCT t.w FROM docs, unnest(docs.ws) AS t(w)
-),
-enc(word, ids) AS (
-  SELECT word, list_transform(string_split(word, ''), c -> CAST(ascii(c) AS BIGINT))
-  FROM words
-  UNION ALL
-  SELECT s.word,
-         list_reduce(
-           list_prepend(CAST([] AS BIGINT[]), list_transform(s.ids, x -> CAST([x] AS BIGINT[]))),
-           (acc, x) -> CASE WHEN len(acc) > 0 AND acc[-1] = m2.a AND x[1] = m2.b
-                            THEN list_concat(acc[:-2], [m2.nid])
-                            ELSE list_append(acc, x[1]) END)
-  FROM (
-    SELECT word, ids,
-           (SELECT min(m.nid) FROM merges m
-             WHERE list_contains(
-               list_transform(generate_series(1, len(ids) - 1), i -> ids[i] * {K} + ids[i+1]),
-               m.a * {K} + m.b)) AS nid
-    FROM enc
-  ) s JOIN merges m2 ON m2.nid = s.nid
-),
-final AS (
-  SELECT word, arg_min(ids, len(ids)) AS ids FROM enc GROUP BY word
-),
-perword AS (
-  SELECT d.doc_id, t.i, d.ws[t.i] AS word
-  FROM docs d, unnest(generate_series(1, len(d.ws))) AS t(i)
-),
-perdoc AS (
-  SELECT pw.doc_id, flatten(list(f.ids ORDER BY pw.i)) AS toks
-  FROM perword pw JOIN final f USING (word)
-  GROUP BY pw.doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(len(p.toks), 0) AS BIGINT) AS n_tok,
-       CAST(coalesce(
-         list_reduce(list_prepend(CAST(0 AS BIGINT), p.toks),
-                     (acc, x) -> (acc * {_FP_MULT} + x) % {_FP_MOD}),
-         0) AS BIGINT) AS tok_fp
-FROM docs d LEFT JOIN perdoc p USING (doc_id)
-"""
-
-
-def _q_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style text normalization (control-char strip, whitespace
-    collapse, blank-line squeeze, trim) — normalized text hash-gated."""
-    from numalogic_spark.operators.textstats import normalize_text_expr
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", normalize_text_expr("text").alias("normalized")
-    )
-
-
-def _normalize_sql() -> str:
-    from numalogic_spark.operators.textstats import NORMALIZE_STEPS
-
-    cur = "text"
-    for pat, repl in NORMALIZE_STEPS:
-        cur = f"regexp_replace({cur}, '{pat}', '{repl}', 'g')"
-    return f"SELECT doc_id, trim({cur}) AS normalized FROM documents"
-
-
-_LM_VOCAB = 4000
-
-
-def _q_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style bigram-LM perplexity per document (add-one smoothing,
-    top-V vocab with deterministic ties, <unk> OOV state, sorted-fold
-    log-prob sum so the double matches DuckDB bit-for-bit)."""
-    from numalogic_spark.operators.lm import bigram_perplexity
-
-    out = bigram_perplexity(_docs(spark, sf_dir), vocab_size=_LM_VOCAB)
-    return out.select("doc_id", _r6("ppl").alias("ppl"), "n_bigrams")
-
-
-def _lm_ppl_sql() -> str:
-    """DuckDB replay of the full bigram-LM pipeline: tokenize, top-V
-    vocabulary (count desc, word asc — same tie-break), OOV mapping via
-    vocab anti-lookup, per-doc bigram multiplicities, corpus model
-    c12/c1 derived from the per-doc counts, and the per-doc log-prob sum
-    folded over the SORTED term list (list_sum∘list_sort ≡ Spark's
-    aggregate∘array_sort — the trigram-entropy discipline)."""
-    from numalogic_spark.operators.lm import UNK
-
-    return rf"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-  FROM documents
-), wc AS (
-  SELECT t.w AS word, count(*) AS c
-  FROM d, unnest(d.ws) AS t(w)
-  GROUP BY 1
-), vocab AS (
-  SELECT word FROM wc ORDER BY c DESC, word ASC LIMIT {_LM_VOCAB}
-), vsz AS (
-  SELECT CAST(count(*) + 1 AS DOUBLE) AS v_sm FROM vocab
-), raw AS (
-  SELECT doc_id, ws[g.i] AS w1r, ws[g.i + 1] AS w2r
-  FROM d, unnest(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-), mapped AS (
-  SELECT doc_id,
-         coalesce(v1.word, '{UNK}') AS w1,
-         coalesce(v2.word, '{UNK}') AS w2
-  FROM raw
-  LEFT JOIN vocab v1 ON v1.word = raw.w1r
-  LEFT JOIN vocab v2 ON v2.word = raw.w2r
-), k AS (
-  SELECT doc_id, w1, w2, count(*) AS k FROM mapped GROUP BY 1, 2, 3
-), c12 AS (
-  SELECT w1, w2, CAST(sum(k) AS BIGINT) AS c12 FROM k GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1
-), terms AS (
-  SELECT k.doc_id, k.k,
-         CAST(k.k AS DOUBLE)
-           * (ln(CAST(c12.c12 AS DOUBLE) + 1.0)
-              - ln(CAST(c1.c1 AS DOUBLE) + (SELECT v_sm FROM vsz))) AS term
-  FROM k JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
-), agg AS (
-  SELECT doc_id,
-         list_sum(list_sort(list(term))) AS s,
-         CAST(sum(k) AS BIGINT) AS m
-  FROM terms GROUP BY 1
-)
-SELECT dd.doc_id,
-       floor(coalesce(exp(-agg.s / agg.m), 0.0) * 1000000 + 0.5) / 1000000.0 AS ppl,
-       coalesce(agg.m, 0) AS n_bigrams
-FROM (SELECT doc_id FROM documents) dd LEFT JOIN agg USING (doc_id)
-"""
-
-
-def _q_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail corpus partition over the bigram-LM
-    perplexity (equal-count buckets, lowest-ppl = head)."""
-    from numalogic_spark.operators.lm import perplexity_buckets
-
-    return perplexity_buckets(_q_lm_ppl(spark, sf_dir))
-
-
-def _lm_buckets_sql() -> str:
-    return f"""
-WITH scored AS ({_lm_ppl_sql()})
-SELECT doc_id, ppl, n_bigrams,
-       (['head', 'middle', 'tail'])[ntile(3) OVER (ORDER BY ppl ASC, doc_id ASC)] AS bucket
-FROM scored
-"""
-
-
-_KL_VOCAB = 4000
-_KL_ALPHA = 0.5
-
-
-def _q_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-distribution drift vs the corpus (smoothed KL and
-    Jensen–Shannon over the top-V vocabulary + <unk>) — the domain-mixture
-    monitor."""
-    from numalogic_spark.operators.tokens import token_distribution_divergence
-
-    out = token_distribution_divergence(
-        _docs(spark, sf_dir), group_col="source",
-        vocab_size=_KL_VOCAB, alpha=_KL_ALPHA,
-    )
-    return out.select(
-        F.col("grp").alias("source"), "n_tokens",
-        _r6("kl").alias("kl"), _r6("js").alias("js"),
-    )
-
-
-def _token_divergence_sql() -> str:
-    from numalogic_spark.operators.lm import UNK
-
-    a = repr(float(_KL_ALPHA))
-    vd = f"({a} * CAST((SELECT vplus FROM vs) AS DOUBLE))"
-    return rf"""
-WITH d AS (
-  SELECT source AS grp,
-         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-  FROM documents
-), tok AS (
-  SELECT grp, t.w AS word FROM d, unnest(d.ws) AS t(w)
-), wc AS (
-  SELECT grp, word, count(*) AS c FROM tok GROUP BY 1, 2
-), corpus AS (
-  SELECT word, sum(c) AS cc FROM wc GROUP BY 1
-), vocab AS (
-  SELECT word FROM corpus ORDER BY cc DESC, word ASC LIMIT {_KL_VOCAB}
-), vs AS (
-  SELECT count(*) + 1 AS vplus FROM vocab
-), folded AS (
-  SELECT grp,
-         CASE WHEN v.word IS NOT NULL THEN wc.word ELSE '{UNK}' END AS w,
-         CAST(sum(c) AS BIGINT) AS c
-  FROM wc LEFT JOIN vocab v USING (word) GROUP BY 1, 2
-), groups AS (
-  SELECT grp, CAST(sum(c) AS BIGINT) AS n_tokens FROM folded GROUP BY 1
-), cf AS (
-  SELECT w, CAST(sum(c) AS BIGINT) AS cq FROM folded GROUP BY 1
-), states AS (
-  SELECT word FROM vocab UNION ALL SELECT '{UNK}'
-), ncorp AS (
-  SELECT CAST(sum(c) AS DOUBLE) AS n FROM folded
-), grid AS (
-  SELECT g.grp, g.n_tokens,
-         (CAST(coalesce(f.c, 0) AS DOUBLE) + {a})
-           / (CAST(g.n_tokens AS DOUBLE) + {vd}) AS p,
-         (CAST(coalesce(cf.cq, 0) AS DOUBLE) + {a})
-           / ((SELECT n FROM ncorp) + {vd}) AS q
-  FROM groups g
-  CROSS JOIN states s
-  LEFT JOIN folded f ON f.grp = g.grp AND f.w = s.word
-  LEFT JOIN cf ON cf.w = s.word
-), terms AS (
-  SELECT grp, n_tokens,
-         p * ln(p / q) AS t_kl,
-         p * ln(p / ((p + q) / 2.0)) AS t_pm,
-         q * ln(q / ((p + q) / 2.0)) AS t_qm
-  FROM grid
-)
-SELECT grp AS source, n_tokens,
-       floor(list_sum(list_sort(list(t_kl))) * 1000000 + 0.5) / 1000000.0 AS kl,
-       floor(((list_sum(list_sort(list(t_pm))) + list_sum(list_sort(list(t_qm)))) / 2.0)
-             * 1000000 + 0.5) / 1000000.0 AS js
-FROM terms GROUP BY 1, 2
-"""
 
 
 _ACF_LAGS = (1, 2, 3, 6, 12)
@@ -3107,155 +2481,6 @@ FROM m
 """
 
 
-def _q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style PII redaction (email/IPv4/phone, typed placeholders, per-
-    category counts); the scrubbed text itself is hash-gated."""
-    from numalogic_spark.operators.textstats import scrub_pii
-
-    return scrub_pii(_docs(spark, sf_dir))
-
-
-def _scrub_pii_sql() -> str:
-    """DuckDB replay: identical conservative patterns (RE2 ≡ Java on
-    char-classes + bounded quantifiers), same sequencing — each category
-    counted on the text as scrubbed by the PREVIOUS categories."""
-    from numalogic_spark.operators.textstats import PII_PATTERNS
-
-    cur = "text"
-    count_cols = []
-    for name, pat, repl in PII_PATTERNS:
-        count_cols.append(f"len(regexp_extract_all({cur}, '{pat}')) AS n_{name}")
-        cur = f"regexp_replace({cur}, '{pat}', '{repl}', 'g')"
-    return f"""
-SELECT doc_id,
-       {', '.join(count_cols)},
-       {cur} AS scrubbed
-FROM documents
-"""
-
-
-_BOILER_SQL = r"""
-WITH ex AS (
-  SELECT d.doc_id AS id, t.i - 1 AS pos, d.ls[t.i] AS line, trim(d.ls[t.i]) AS tline
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM documents) d,
-       unnest(generate_series(1, len(d.ls))) AS t(i)
-), boiler AS (
-  SELECT tline FROM (
-    SELECT tline, count(*) AS n_docs
-    FROM (SELECT DISTINCT id, tline FROM ex WHERE length(tline) >= 5)
-    GROUP BY 1
-  ) WHERE n_docs >= 3
-), marked AS (
-  SELECT ex.id, ex.pos, ex.line,
-         EXISTS (SELECT 1 FROM boiler b WHERE b.tline = ex.tline) AS is_b
-  FROM ex
-)
-SELECT id AS doc_id,
-       count(*) AS n_lines,
-       CAST(sum(CASE WHEN NOT is_b THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       coalesce(string_agg(CASE WHEN NOT is_b THEN line END, chr(10) ORDER BY pos), '') AS cleaned
-FROM marked
-GROUP BY id
-"""
-
-
-def _q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide repeated-line (boilerplate) removal: lines in ≥3 distinct
-    docs are dropped from every doc (trimmed match, short lines exempt);
-    the reconstructed text is hash-gated line for line."""
-    from numalogic_spark.operators.textstats import remove_boilerplate_lines
-
-    return remove_boilerplate_lines(_docs(spark, sf_dir), min_docs=3).select(
-        F.col("id").alias("doc_id"), "n_lines", "n_kept", "cleaned"
-    )
-
-
-def _q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-curriculum data order: per SOURCE (the scale-safe
-    partitioned form), docs tier into quartiles of the 6dp-rounded quality
-    score (clean docs in tier 1) with a reproducible portable-hash shuffle
-    inside each tier."""
-    from numalogic_spark.operators.sampling import curriculum_order
-    from numalogic_spark.operators.textstats import text_stats
-
-    docs = _docs(spark, sf_dir)
-    scores = text_stats(docs, "text", "doc_id").select(
-        "doc_id", _r6(F.col("quality_score")).alias("q6")
-    )
-    scored = docs.select("doc_id", "source").join(scores, "doc_id")
-    out = curriculum_order(scored, "q6", n_tiers=4, partition_cols=["source"])
-    return out.select("doc_id", "source", "q6", "tier", "ord")
-
-
-_CURRICULUM_SQL = r"""
-WITH s AS (
-  SELECT doc_id, source,
-    length(text) AS n_chars,
-    len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS n_words,
-    len(list_filter(list_distinct(string_split_regex(lower(text), '\s+')), x -> x <> '')) AS n_distinct_words,
-    length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct
-  FROM documents
-), q AS (
-  SELECT doc_id, source,
-    floor((least(n_words / 100.0, 1.0) * 0.4
-         + least(n_distinct_words * 1.0 / n_words, 1.0) * 0.4
-         + (1.0 - least(n_punct * 1.0 / greatest(n_chars, 1), 1.0)) * 0.2) * 1000000 + 0.5) / 1000000.0 AS q6
-  FROM s
-), h AS (
-  SELECT doc_id, source, q6,
-         (1103515245 * (list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(generate_series(1, greatest(length(CAST(doc_id AS VARCHAR)), 1)),
-              i -> CAST(ascii(CAST(doc_id AS VARCHAR)[i]) AS BIGINT))),
-            (acc, c) -> (acc * 131 + c) % 2147483647)) + 12345) % 2147483647 AS oh,
-         ntile(4) OVER (PARTITION BY source ORDER BY q6 DESC, doc_id) AS tier
-  FROM q
-)
-SELECT doc_id, source, q6, CAST(tier AS INTEGER) AS tier,
-       CAST(row_number() OVER (PARTITION BY source, tier ORDER BY oh, doc_id) - 1 AS INTEGER) AS ord
-FROM h
-"""
-
-
-def _q_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """No-split greedy packing of documents' word-token counts into
-    512-token packs (docs whole; sequential per-source fill — the packing
-    variant for training setups where sequences must not straddle doc
-    boundaries)."""
-    from numalogic_spark.operators.tokens import pack_greedy_no_split
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        F.size(F.array_remove(F.split(F.lower("text"), r"\s+"), "")).alias("n_tok"),
-    )
-    return pack_greedy_no_split(docs, 512)
-
-
-_PACK_GREEDY_SQL = r"""
-WITH RECURSIVE d AS (
-  SELECT source, doc_id,
-         CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')) AS BIGINT) AS n_tok,
-         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS i
-  FROM (SELECT source, doc_id, text FROM documents)
-  WHERE len(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')) > 0
-), rec(source, i, pack_id, doc_id, pack_offset, n_tok, off_next) AS (
-  SELECT source, i, CAST(0 AS BIGINT), doc_id, CAST(0 AS BIGINT), n_tok, n_tok
-  FROM d WHERE i = 1
-  UNION ALL
-  -- current fill off_next is always > 0 (every doc has n_tok > 0), so the
-  -- engine's `off > 0 AND off + n > cap` reduces to the overflow test
-  SELECT d.source, d.i,
-         CASE WHEN r.off_next + d.n_tok > 512 THEN r.pack_id + 1 ELSE r.pack_id END,
-         d.doc_id,
-         CASE WHEN r.off_next + d.n_tok > 512 THEN CAST(0 AS BIGINT) ELSE r.off_next END,
-         d.n_tok,
-         CASE WHEN r.off_next + d.n_tok > 512 THEN d.n_tok ELSE r.off_next + d.n_tok END
-  FROM rec r JOIN d ON d.source = r.source AND d.i = r.i + 1
-)
-SELECT source, pack_id, doc_id, pack_offset, n_tok FROM rec
-"""
-
-
 def _q_sklearn_scalers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The four sklearn PreprocessFactory scalers (Standard/MinMax/MaxAbs/
     Robust, reference config/factory.py:45,59-63) fit per series and
@@ -4028,9 +3253,7 @@ def _q_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "").alias("words"),
     )
     # ONE tokenize pass: the checkpointed (source, token, c) table feeds
-    # the sketch, the top-10 rank window AND the probe join — ranking
-    # over it is exactly heavy_hitters_per_group's second stage (a
-    # separate call would re-tokenize the whole corpus)
+    # the sketch, the top-10 rank window AND the probe join
     counts = (
         docs.select("source", F.explode("words").alias("token"))
         .groupBy("source", "token")
@@ -4098,42 +3321,6 @@ FROM probes p
 JOIN hh h ON h.source = p.source AND h.token = p.token
 LEFT JOIN sketch s ON s.source = p.source AND s.d = p.d AND s.col = p.col
 GROUP BY 1, 2, 3, 4
-"""
-
-
-def _q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 PMI collocations over adjacent word pairs (operators/lm.py
-    pmi_collocations) — marginals over the unfiltered joint, min-count 5."""
-    from numalogic_spark.operators.lm import pmi_collocations
-
-    return pmi_collocations(_docs(spark, sf_dir), min_count=5, top_k=50)
-
-
-_PMI_SQL = r"""
-WITH w AS (
-  SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ws
-  FROM documents
-), bg AS (
-  SELECT ws[i] AS a, ws[i + 1] AS b
-  FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM w WHERE len(ws) >= 2)
-), bc AS (
-  SELECT a, b, count(*) AS c_ab FROM bg GROUP BY 1, 2
-), ca AS (SELECT a, sum(c_ab) AS c_a FROM bc GROUP BY 1),
-cb AS (SELECT b, sum(c_ab) AS c_b FROM bc GROUP BY 1),
-nt AS (SELECT sum(c_ab) AS n FROM bc)
-SELECT a, b, c_ab, pmi, rnk FROM (
-  SELECT s.*, row_number() OVER (ORDER BY pmi DESC, a, b) AS rnk FROM (
-    SELECT bc.a, bc.b, bc.c_ab,
-           floor(ln(CAST(nt.n AS DOUBLE) * CAST(bc.c_ab AS DOUBLE)
-                    / (CAST(ca.c_a AS DOUBLE) * CAST(cb.c_b AS DOUBLE)))
-                 * 1000000 + 0.5) / 1000000.0 AS pmi
-    FROM bc
-    JOIN ca ON ca.a = bc.a
-    JOIN cb ON cb.b = bc.b
-    CROSS JOIN nt
-    WHERE bc.c_ab >= 5
-  ) s
-) WHERE rnk <= 50
 """
 
 
@@ -4321,33 +3508,6 @@ SELECT source, bucket_s, CAST((s).total AS BIGINT) AS total,
          * ((s).rank - (s).prev_cum) / ((s).cum - (s).prev_cum) END)
     * 1000000 + 0.5) / 1000000.0 AS phi
 FROM sel
-"""
-
-
-def _q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 heavy-hitter words per source (operators/tokens.py
-    heavy_hitters_per_group over whitespace words)."""
-    from numalogic_spark.operators.tokens import heavy_hitters_per_group
-
-    docs = _docs(spark, sf_dir).select(
-        "source",
-        F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "").alias("words"),
-    )
-    return heavy_hitters_per_group(docs, group_col="source", tokens_col="words", k=10)
-
-
-_HEAVY_HITTERS_SQL = r"""
-WITH t AS (
-  SELECT source,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token
-  FROM documents
-), c AS (
-  SELECT source, token, count(*) AS cnt FROM t GROUP BY 1, 2
-)
-SELECT source, token, cnt, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY source ORDER BY cnt DESC, token) AS rnk
-  FROM c
-) WHERE rnk <= 10
 """
 
 
@@ -4828,11 +3988,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Every entry has an oracle; the four that replay a fit over the
         # sf0.01 fixture fall back to rows-only where it is missing (see
         # oracle_sql). Keep the order stable.
-        "scrub_pii_documents": _q_scrub_pii,
-        "boilerplate_lines_documents": _q_boilerplate,
-        "normalize_text_documents": _q_normalize,
-        "lm_perplexity_documents": _q_lm_ppl,
-        "lm_ppl_buckets_documents": _q_lm_buckets,
         "acf_events": _q_acf,
         "cusum_changepoint_events": _q_cusum,
         "hampel_filter_events": _q_hampel,
@@ -4844,7 +3999,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "psi_drift_events": _q_psi_drift,
         "dominant_period_events": _q_dominant_period,
         "kalman_level_1h_events": _q_kalman,
-        "token_divergence_documents": _q_token_divergence,
         "pca_project_embeddings": _q_pca_project,
         "series_summary_events": _q_series_summary,
         "trend_slope_events": _q_trend_slope,
@@ -4855,7 +4009,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "retention_policy_events": _q_retention,
         "sax_symbols_events": _q_sax,
         "dup_ngram_spans_documents": _q_dup_ngrams,
-        "heavy_hitter_tokens_documents": _q_heavy_hitters,
         "lttb_downsample_events": _q_lttb,
         "histogram_quantile_events": _q_hist_quantile,
         "asof_join_events": _q_asof,
@@ -4864,21 +4017,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize_events": _q_sessionize,
         "hll_tier_cascade_events": _q_hll_cascade,
         "interval_overlap_join_events": _q_interval_join,
-        "quality_calibration_documents": _q_quality_calibration,
         "cms_freq_documents": _q_cms,
-        "pmi_collocations_documents": _q_pmi,
         "staleness_report_events": _q_staleness,
         "rollup_refresh_1h_events": _q_rollup_refresh,
         "dedup_clusters_documents": _q_dedup_clusters,
-        "bpe_encode_documents": _q_bpe_encode,
         "ae_inference_events": _q_ae_inference,
         "conv_ae_inference_events": _q_conv_ae_inference,
         "lstm_ae_inference_events": _q_lstm_ae_inference,
         "sparse_ae_inference_events": _q_sparse_ae_inference,
         "transformer_ae_inference_events": _q_transformer_ae_inference,
         "vae_inference_events": _q_vae_inference,
-        "pack_greedy_documents": _q_pack_greedy,
-        "curriculum_order_documents": _q_curriculum,
         "rollup_1m_events": _q_rollup("1m"),
         "rollup_1h_events": _q_rollup("1h"),
         "rollup_1d_events": _q_rollup("1d"),
@@ -4898,21 +4046,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "centroid_cosine_embeddings": _q_centroid_cosine,
         "embedding_near_pairs": _q_embedding_pairs,
         "semdedup_prune_embeddings": _q_semdedup,
-        "text_quality_documents": _q_text_quality,
-        "lang_id_documents": _q_lang_id,
-        "lang_id_ngram_documents": _q_lang_id_ngram,
-        "token_frequencies_documents": _q_token_freq,
-        "tf_idf_topk_documents": _q_tf_idf,
-        "sequence_pack_documents": _q_sequence_pack,
         "ngram_contamination_documents": _q_contamination,
-        "repetition_stats_documents": _q_repetition,
-        "trigram_entropy_documents": _q_trigram_entropy,
         "stratified_sample_documents": _q_sample,
         "training_order_documents": _q_training_order,
         "mixture_plan_documents": _q_mixture,
         "minhash_near_dup_documents": _q_minhash,
         "simhash_near_dup_documents": _q_simhash,
-        "doc_fingerprint_documents": _q_fingerprint,
         "ann_topk_embeddings": _q_ann_topk,
         "ivf_ann_topk_embeddings": _q_ivf_topk,
         "score_pipeline_events": _q_score_pipeline,
@@ -4954,15 +4093,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_cosine_scores": _COSINE_SQL,
         "centroid_cosine_embeddings": _CENTROID_COSINE_SQL,
         "embedding_near_pairs": _EMB_PAIRS_SQL,
-        "text_quality_documents": _TEXT_QUALITY_SQL,
-        "lang_id_documents": _langid_sql(),
-        "lang_id_ngram_documents": _lang_id_ngram_sql(),
-        "token_frequencies_documents": _TOKEN_FREQ_SQL,
-        "tf_idf_topk_documents": _TF_IDF_SQL,
-        "sequence_pack_documents": _SEQ_PACK_SQL,
         "ngram_contamination_documents": _contamination_sql(),
-        "repetition_stats_documents": _repetition_sql(),
-        "trigram_entropy_documents": _trigram_entropy_sql(),
         "stratified_sample_documents": _sample_sql(),
         "training_order_documents": _training_order_sql(),
         "mixture_plan_documents": _MIXTURE_SQL,
@@ -4975,7 +4106,6 @@ def oracle_sql() -> dict[str, str]:
         "multi_metric_rollup_lineitem": _MULTI_ROLLUP_SQL,
         "minhash_near_dup_documents": _minhash_sql(),
         "simhash_near_dup_documents": _simhash_sql(),
-        "doc_fingerprint_documents": _FINGERPRINT_SQL,
         "mahalanobis_events": _mahalanobis_sql(),
         "sklearn_scalers_events": _SKLEARN_SCALERS_SQL,
         "seasonal_naive_1h_events": _SEASONAL_NAIVE_SQL,
@@ -4985,14 +4115,6 @@ def oracle_sql() -> dict[str, str]:
         "prometheus_frame_events": _prom_frame_sql(),
         "dedup_clusters_documents": _dedup_clusters_sql(),
         "ann_topk_embeddings": _ann_sql(),
-        "bpe_encode_documents": _bpe_encode_sql(),
-        "pack_greedy_documents": _PACK_GREEDY_SQL,
-        "curriculum_order_documents": _CURRICULUM_SQL,
-        "scrub_pii_documents": _scrub_pii_sql(),
-        "boilerplate_lines_documents": _BOILER_SQL,
-        "normalize_text_documents": _normalize_sql(),
-        "lm_perplexity_documents": _lm_ppl_sql(),
-        "lm_ppl_buckets_documents": _lm_buckets_sql(),
         "acf_events": _acf_sql(),
         "cusum_changepoint_events": _cusum_sql(),
         "hampel_filter_events": _hampel_sql(),
@@ -5004,7 +4126,6 @@ def oracle_sql() -> dict[str, str]:
         "psi_drift_events": _psi_sql(),
         "dominant_period_events": _dominant_period_sql(),
         "kalman_level_1h_events": _kalman_sql(),
-        "token_divergence_documents": _token_divergence_sql(),
         "series_summary_events": _series_summary_sql(),
         "trend_slope_events": _trend_slope_sql(),
         "seasonal_anomalies_events": _seasonal_anomalies_sql(),
@@ -5014,7 +4135,6 @@ def oracle_sql() -> dict[str, str]:
         "retention_policy_events": _retention_sql(),
         "sax_symbols_events": _SAX_SQL,
         "dup_ngram_spans_documents": _DUP_NGRAM_SQL,
-        "heavy_hitter_tokens_documents": _HEAVY_HITTERS_SQL,
         "lttb_downsample_events": _lttb_sql(),
         "histogram_quantile_events": _hist_quantile_sql(),
         "asof_join_events": _ASOF_SQL,
@@ -5023,9 +4143,7 @@ def oracle_sql() -> dict[str, str]:
         "sessionize_events": _SESSIONIZE_SQL,
         "hll_tier_cascade_events": _hll_cascade_sql(),
         "interval_overlap_join_events": _interval_join_sql(),
-        "quality_calibration_documents": _QUALITY_CALIBRATION_SQL,
         "cms_freq_documents": _cms_sql(),
-        "pmi_collocations_documents": _PMI_SQL,
         "staleness_report_events": _STALENESS_SQL,
         "rollup_refresh_1h_events": _rollup_refresh_sql(),
         "conv_ae_inference_events": _conv_ae_sql(),

@@ -25,8 +25,7 @@ re-runs are full runs; the output write is an atomic overwrite.
 Ordering note: this job applies NO quality filter — empty/whitespace docs
 are dropped from near-dup candidate generation by the pair generators
 themselves (degenerate-signature guard in operators/dedup.py) but still
-pass through to the kept corpus. Run prep_job (quality → lang → dedup)
-when garbage docs should be removed rather than merely not paired.
+pass through to the kept corpus.
 """
 
 from __future__ import annotations

@@ -18,9 +18,8 @@ Spark translation of each piece:
 - Stateless blocks are compiled Column chains (TRANSFORM_FACTORY) — no
   state, nothing saved (``stateful=False``, mirroring StatelessBlock).
 - The registry is a JSON-artifact store over the Hadoop FileSystem API
-  (works for file:///, hdfs://, s3a:// — same discipline as
-  BpeVocab.save_hadoop), keyed by skeys/dkeys like the reference's
-  RedisRegistry (registry/redis_registry.py key construction).
+  (works for file:///, hdfs://, s3a://), keyed by skeys/dkeys like the
+  reference's RedisRegistry (registry/redis_registry.py key construction).
 
 Scale note: artifact size = Σ per-block stats rows = O(groups · blocks),
 the same cardinality the reference stores per composite key; the corpus

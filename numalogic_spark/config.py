@@ -244,169 +244,3 @@ def fit_and_score(
     fit_kw, tx_kw = _split_estimator_conf(fit_fn, apply_fn, cfg.threshold.conf)
     stats = fit_fn(train_df if train_df is not None else df, cfg.metrics, by=by, **fit_kw)
     return apply_fn(df, stats, cfg.metrics, by=by, **tx_kw)
-
-
-# --------------------------------------------------------------------------
-# corpus (training-data) pipelines as data
-# --------------------------------------------------------------------------
-
-def _doc_stage_factory():
-    """name → callable(df, *, text_col, id_col, **conf) -> DataFrame, each
-    mapping a document corpus to a document corpus (filters) or to its
-    terminal representation (Tokenize/SequencePack). The training-data
-    analog of TRANSFORM_FACTORY: jobs declare the corpus pipeline as data
-    (jobs/prep_job.py is the hand-written equivalent)."""
-    from pyspark.sql import functions as F
-
-    from numalogic_spark.operators import dedup as DD
-    from numalogic_spark.operators import textstats as TS
-    from numalogic_spark.operators import tokens as TK
-
-    def quality_filter(df, *, text_col, id_col, min_words=5, max_word_len=25.0):
-        stats = TS.text_stats(df, text_col, id_col)
-        ok = stats.filter(
-            (F.col("n_words") >= min_words) & (F.col("mean_word_len") <= max_word_len)
-        ).select(id_col)
-        return df.join(ok, id_col, "left_semi")
-
-    def lang_filter(df, *, text_col, id_col, langs):
-        lids = TS.lang_id(df, text_col, id_col)
-        keep = lids.filter(F.col("lang_pred").isin(list(langs))).select(id_col)
-        return df.join(keep, id_col, "left_semi")
-
-    def repetition_filter(df, *, text_col, id_col, max_dup_trigram_frac=0.5,
-                          max_top_word_frac=0.5):
-        rep = TS.repetition_stats(df, text_col, id_col)
-        ok = rep.filter(
-            (F.col("dup_trigram_frac") <= max_dup_trigram_frac)
-            & (F.col("top_word_frac") <= max_top_word_frac)
-        ).select(id_col)
-        return df.join(ok, id_col, "left_semi")
-
-    def exact_dedup(df, *, text_col, id_col):
-        return DD.drop_exact_dups(df, text_col, id_col)
-
-    def near_dedup(df, *, text_col, id_col, threshold=0.8):
-        pairs = DD.minhash_lsh_pairs(df, text_col, id_col, threshold=threshold)
-        clusters = DD.near_dup_clusters(pairs)
-        drop = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-            F.col("id").alias(id_col)
-        )
-        return df.join(drop, id_col, "left_anti")
-
-    def decontaminate(df, *, text_col, id_col, against, n=13, max_contamination=0.1):
-        scores = DD.ngram_contamination(df, against, text_col, id_col, n=n)
-        ok = scores.filter(F.col("contamination") <= max_contamination).select(id_col)
-        return df.join(ok, id_col, "left_semi")
-
-    def normalize(df, *, text_col, id_col):
-        # row-local rewrite: control chars stripped, whitespace collapsed,
-        # line structure preserved (BoilerplateFilter still sees lines)
-        return df.withColumn(text_col, TS.normalize_text_expr(text_col))
-
-    def scrub_pii(df, *, text_col, id_col):
-        # row-local rewrite: ONE projection, no join/shuffle, NULL text
-        # passes through, duplicate ids cannot multiply
-        return df.withColumn(text_col, TS.scrub_pii_expr(text_col))
-
-    def boilerplate_filter(df, *, text_col, id_col, min_docs=3, min_line_chars=5):
-        # reserved temp name (never clobbers a caller column) + LEFT join:
-        # a NULL-text doc has no lines and no aggregate row — it must pass
-        # through unchanged, not be silently dropped by an inner join
-        tmp = "__boilerplate_cleaned"
-        out = TS.remove_boilerplate_lines(
-            df, text_col, id_col, min_docs=min_docs, min_line_chars=min_line_chars
-        ).select(F.col("id").alias(id_col), F.col("cleaned").alias(tmp))
-        return (
-            df.join(out, id_col, "left")
-            .withColumn(
-                text_col,
-                F.when(F.col(text_col).isNull(), F.col(text_col)).otherwise(F.col(tmp)),
-            )
-            .drop(tmp)
-        )
-
-    def sample(df, *, text_col, id_col, rate, salt=0):
-        from numalogic_spark.operators.sampling import deterministic_sample
-
-        return deterministic_sample(df, rate, id_col=id_col, salt=salt)
-
-    def tokenize(df, *, text_col, id_col, source_col="source", method="hash",
-                 vocab_path=None, n_merges=4096, max_words=100_000,
-                 sample_fraction=None, save_vocab_path=None):
-        if method == "bpe":
-            from numalogic_spark.functions.bpe import (
-                BpeVocab,
-                tokenize_corpus,
-                train_bpe,
-            )
-
-            if vocab_path:
-                vocab = BpeVocab.load_hadoop(df.sparkSession, vocab_path)
-            else:
-                # trains on THIS corpus, every run — pass save_vocab_path
-                # to persist the replayable artifact (and vocab_path on
-                # later runs to reuse it); untracked retraining gives two
-                # runs over drifted corpora different token-id spaces
-                vocab = train_bpe(df, n_merges, text_col=text_col,
-                                  max_words=max_words,
-                                  sample_fraction=sample_fraction)
-                if save_vocab_path:
-                    vocab.save_hadoop(df.sparkSession, save_vocab_path)
-            return tokenize_corpus(df, vocab, text_col=text_col,
-                                   id_col=id_col, source_col=source_col)
-        return df.select(
-            id_col,
-            F.col(source_col).alias("source"),
-            F.transform(
-                F.array_remove(F.split(F.lower(text_col), r"\s+"), ""),
-                lambda w: F.xxhash64(w),
-            ).alias("tokens"),
-        ).withColumn("n_tok", F.size("tokens"))
-
-    def sequence_pack(df, *, text_col, id_col, max_tokens=2048):
-        return TK.pack_tokens(df, max_tokens, id_col=id_col)
-
-    def training_order(df, *, text_col, id_col, n_shards, salt=0, key_cols=None):
-        from numalogic_spark.operators.sampling import training_order as _to
-
-        # after SequencePack the natural key is (source, pack_id); over a
-        # raw/tokenized corpus pass key_cols=[id_col] (or any unique key)
-        return _to(df, n_shards, key_cols or ["source", "pack_id"], salt=salt)
-
-    return {
-        "QualityFilter": quality_filter,
-        "LangFilter": lang_filter,
-        "RepetitionFilter": repetition_filter,
-        "Normalize": normalize,
-        "PiiScrub": scrub_pii,
-        "BoilerplateFilter": boilerplate_filter,
-        "ExactDedup": exact_dedup,
-        "NearDedup": near_dedup,
-        "Decontaminate": decontaminate,
-        "Sample": sample,
-        "Tokenize": tokenize,
-        "SequencePack": sequence_pack,
-        "TrainingOrder": training_order,
-    }
-
-
-def run_doc_pipeline(
-    df: DataFrame,
-    stages: list[StageConf],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Run a declared corpus pipeline stage by stage, yielding
-    (stage_name, DataFrame) after each stage so callers can count funnels
-    or persist between stages. Unknown names raise with the available set."""
-    factory = _doc_stage_factory()
-    for st in stages:
-        try:
-            fn = factory[st.name]
-        except KeyError:
-            raise ValueError(
-                f"unknown corpus stage: {st.name!r}; available: {sorted(factory)}"
-            ) from None
-        df = fn(df, text_col=text_col, id_col=id_col, **st.conf)
-        yield st.name, df

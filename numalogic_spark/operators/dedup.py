@@ -671,7 +671,6 @@ def ngram_contamination(
 # independent character folds of the word; each signature long packs two
 # 31-bit g values (bits 0..61) so a 124-bit signature lives in two BIGINTs.
 SIMHASH_SEED = 7
-SIMHASH_BITS = 124  # 2 longs × 62 bits
 _CHAR_MULT_1, _CHAR_MULT_2 = 131, 137
 _PACK = 1 << 31
 
@@ -953,6 +952,24 @@ def simhash_near_pairs(
     )
 
 
+def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Order-sensitive rolling polynomial hash over the word stream:
+    fp = Σ h(w_i)·B^(n-1-i) mod M, computed as a left fold
+    fp_i = (fp_{i-1}·B + h(w_i)) mod M with M=2^31-1, B=1000003 (products
+    stay < 2^63 → safe under ANSI arithmetic). h is the portable character
+    fold shared with the SimHash words, so a SQL engine recomputes
+    fingerprints exactly. Same-words-different-order docs get different
+    fingerprints, unlike the word-set hash."""
+    M, B = MERSENNE31, 1000003
+    words = F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
+    fp = F.aggregate(
+        words,
+        F.lit(0).cast("long"),
+        lambda acc, w: (acc * B + _word_char_fold(w, _CHAR_MULT_1)) % M,
+    )
+    return df.select(F.col(id_col), fp.alias("fingerprint"))
+
+
 # --------------------------------------------------------------------------
 # near-dup clustering: pairs → connected components → canonical keeper
 # --------------------------------------------------------------------------
@@ -1164,39 +1181,6 @@ def embedding_near_pairs_lsh(
     return out.dropDuplicates(["id_a", "id_b"])
 
 
-def pair_dot_kernel():
-    """Arrow twin of the zip_with/aggregate dot fold for PAIR-scale call
-    sites: dot(a, b) per row, accumulated dimension-by-dimension IN INDEX
-    ORDER across the whole batch — bit-identical to the Spark fold (no
-    numpy pairwise-summation reordering) while the work is one vectorized
-    multiply-add per dimension instead of millions of interpreted lambda
-    evaluations (HOFs never enter codegen — the same JIT-hostility that
-    made the minhash signature kernel the default).
-
-    Cross-engine caveat: DuckDB's `list_inner_product` is NOT bit-bound to
-    this fold — its accumulation can differ by 1 ulp — so oracles that
-    consume dot products keep the repo-wide 6-dp rounding on hashed
-    outputs and need real margin on unrounded threshold comparisons (the
-    pre-existing contract shared by every cosine oracle in this repo).
-
-    Inputs must be non-null arrays without null elements (Arrow would
-    coerce a null element to NaN, silently diverging from the fold's NULL
-    propagation — callers filter degenerates upstream, as semdedup_prune
-    does)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def dot(a, b):
-        ma = np.stack([np.asarray(x, dtype=np.float64) for x in a])
-        mb = np.stack([np.asarray(x, dtype=np.float64) for x in b])
-        acc = np.zeros(len(ma))
-        for j in range(ma.shape[1]):  # dim order = the fold's order
-            acc += ma[:, j] * mb[:, j]
-        return pd.Series(acc)
-
-    return pandas_udf(dot, "double")
-
-
 def _semdedup_assign_kernel(cents: "np.ndarray"):
     """Big-codebook twin of the literal `_dots` path: one Arrow matmul
     yielding (argmax cluster, max dot) per row, mirroring
@@ -1320,7 +1304,7 @@ def semdedup_prune(
         # cluster partitioning) and evaluates the same upper-triangular
         # comparisons as blocked numpy — accumulated DIMENSION BY
         # DIMENSION in index order, so every pair's dot is bit-identical
-        # to the zip_with fold / pair_dot_kernel (no BLAS reordering).
+        # to the zip_with fold (no BLAS reordering).
         # Mixed-dimension rows (corrupt input) degrade exactly like the
         # expression path — a cross-dimension pair never prunes (zip_with
         # over unequal lengths null-propagates to a false comparison) —
@@ -1575,3 +1559,35 @@ def duplicate_ngram_spans(
     # doc-count-sized result; materialize so callers can fan out cheaply
     # (checkpoint=False keeps the full lineage visible for plan audits)
     return out.localCheckpoint(eager=True) if checkpoint else out
+
+
+def heavy_hitters_per_group(
+    df: DataFrame,
+    group_col: str = "source",
+    tokens_col: str = "tokens",
+    k: int = 10,
+) -> DataFrame:
+    """Exact top-k heavy-hitter tokens per group: (group, token, cnt,
+    rnk), ties broken by token ascending (deterministic cross-engine).
+
+    The group column keeps its input name.
+
+    Two-level shape: the (group, token) count is ONE map-side-combinable
+    groupBy (partial aggregation absorbs the Zipf head before the
+    shuffle — the hot token contributes one partial row per input
+    partition, not one row per occurrence), then the rank window runs
+    over groups of vocabulary size, never corpus size. At 100 TB this is
+    the exact counterpart of a SpaceSaving sketch — exactness costs one
+    shuffle of the (group × vocab) grid, which Zipf keeps far below the
+    row count."""
+    counts = (
+        df.select(F.col(group_col), F.explode(tokens_col).alias("token"))
+        .groupBy(group_col, "token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    w = Window.partitionBy(group_col).orderBy(F.col("cnt").desc(), F.col("token"))
+    return (
+        counts.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(group_col, "token", "cnt", "rnk")
+    )

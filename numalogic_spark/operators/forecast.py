@@ -253,8 +253,7 @@ def holt_linear(
     The smoothing constants are pre-folded in python (OM_* = 1-α etc.)
     and every step is a fixed IEEE op sequence, so a SQL recursion
     emitting the SAME expression text replays it bit-for-bit — that is
-    how the driver oracle gates this operator (recursive CTE, the BPE
-    merge-loop discipline).
+    how the DuckDB oracle gates this operator (recursive CTE).
 
     Output: (source, bucket_s, val, level, trend, fitted)."""
     if not (0.0 < alpha <= 1.0 and 0.0 <= beta <= 1.0):

@@ -55,95 +55,6 @@ def test_config_pipeline_end_to_end(spark, df):
     np.testing.assert_allclose(scored["x__score"], x / thr, rtol=1e-9)
 
 
-def test_doc_pipeline_as_data(spark):
-    """A corpus pipeline declared as data runs stage-by-stage and matches
-    the hand-chained operators (prep_job's shape)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from numalogic_spark.config import StageConf, run_doc_pipeline
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(6)],
-            "source": "s",
-            "text": [
-                "a good document with plenty of distinct words inside it",
-                "a good document with plenty of distinct words inside it",  # exact dup
-                "tiny",  # fails min_words
-                "loop loop loop loop loop loop loop loop",  # repetition
-                "another perfectly fine document about completely other things",
-                "short but still has five words",
-            ],
-        }
-    )
-    df = spark.createDataFrame(docs)
-    stages = [
-        StageConf("QualityFilter", {"min_words": 5}),
-        StageConf("RepetitionFilter", {"max_top_word_frac": 0.5}),
-        StageConf("ExactDedup", {}),
-        StageConf("Tokenize", {}),
-        StageConf("SequencePack", {"max_tokens": 8}),
-    ]
-    funnel = {}
-    out = None
-    for name, out in run_doc_pipeline(df, stages):
-        funnel[name] = out
-    kept = funnel["ExactDedup"].select("doc_id").toPandas()["doc_id"].tolist()
-    assert sorted(kept) == ["d0", "d4", "d5"]  # d1 exact dup, d2 short, d3 loopy
-    packs = out.toPandas()
-    toks = funnel["Tokenize"].select(F.sum("n_tok")).collect()[0][0]
-    assert packs["n_tok"].sum() == toks
-    assert (packs["n_tok"] <= 8).all()
-
-
-def test_pii_and_boilerplate_stages(spark):
-    """The PiiScrub and BoilerplateFilter corpus stages rewrite text in
-    place and compose inside run_doc_pipeline."""
-    import pandas as pd
-
-    from numalogic_spark.config import StageConf, run_doc_pipeline
-
-    chrome = "Subscribe to our newsletter right away"
-    rows = [
-        (f"d{i}", "s0", f"{chrome}\nwrite to user{i}@example.com for info number {i}")
-        for i in range(4)
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "source", "text"]))
-    stages = [StageConf("PiiScrub", {}), StageConf("BoilerplateFilter", {"min_docs": 3})]
-    out = dict(run_doc_pipeline(df, stages))
-    final = out["BoilerplateFilter"].orderBy("doc_id").collect()
-    assert len(final) == 4
-    for i, r in enumerate(final):
-        assert r["text"] == f"write to <EMAIL> for info number {i}"
-        assert r["source"] == "s0"
-
-
-def test_rewrite_stages_null_text_and_collisions(spark):
-    """Null-text docs pass through both rewrite stages unchanged; an input
-    column named 'scrubbed'/'cleaned' never collides (review findings)."""
-    import pandas as pd
-
-    from numalogic_spark.config import StageConf, run_doc_pipeline
-
-    chrome = "Subscribe to our newsletter right away"
-    rows = [(f"d{i}", "s0", f"{chrome}\nbody {i} mail x@y.com", "keepme")
-            for i in range(3)]
-    rows.append(("dn", "s0", None, "keepme"))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "source", "text", "cleaned"]),
-        "doc_id string, source string, text string, cleaned string",
-    )
-    stages = [StageConf("PiiScrub", {}), StageConf("BoilerplateFilter", {"min_docs": 3})]
-    out = dict(run_doc_pipeline(df, stages))["BoilerplateFilter"]
-    got = {r["doc_id"]: r.asDict() for r in out.collect()}
-    assert len(got) == 4  # null-text row NOT dropped
-    assert got["dn"]["text"] is None
-    for i in range(3):
-        assert got[f"d{i}"]["text"] == f"body {i} mail <EMAIL>"
-        assert got[f"d{i}"]["cleaned"] == "keepme"  # caller column untouched
-
-
 def test_factory_dispatch_covers_reference_preprocess_names(spark):
     """Every PreprocessFactory name with a closed-form analog is reachable
     declaratively (reference UX, config/factory.py:42-97): column exprs

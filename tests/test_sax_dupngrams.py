@@ -6,8 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from numalogic_spark.operators.dedup import duplicate_ngram_spans
-from numalogic_spark.operators.tokens import heavy_hitters_per_group
+from numalogic_spark.operators.dedup import duplicate_ngram_spans, heavy_hitters_per_group
 from numalogic_spark.operators.tsfeatures import _SAX_BREAKPOINTS, sax_symbols
 
 

@@ -1,47 +1,8 @@
-import numpy as np
+"""Order-sensitive document fingerprint (operators/dedup.py)."""
+
 import pandas as pd
-import pytest
 
-from numalogic_spark.operators.textstats import doc_fingerprint, lang_id, text_stats
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a", "b", "c", "d"],
-            "text": [
-                "the cat sat on the mat!",
-                "der hund ist ein guter hund und er ist brav",
-                "le chat est dans la maison et il dort pour un moment",
-                "xyzzy plugh qwerty",
-            ],
-        }
-    )
-    return spark.createDataFrame(pdf), pdf
-
-
-def test_text_stats_exact(spark, docs):
-    df, pdf = docs
-    got = text_stats(df).orderBy("doc_id").toPandas()
-    r = got.iloc[0]  # "the cat sat on the mat!"
-    assert r["n_chars"] == 23
-    assert r["n_words"] == 6
-    assert r["n_distinct_words"] == 5  # 'the' twice
-    assert r["n_tokens"] == 7  # 6 words + '!'
-    assert r["n_punct"] == 1
-    np.testing.assert_allclose(r["ttr"], 5 / 6)
-    np.testing.assert_allclose(r["mean_word_len"], (23 - 5) / 6)
-    assert 0.0 <= r["quality_score"] <= 1.0
-
-
-def test_lang_id(spark, docs):
-    df, _ = docs
-    got = lang_id(df).orderBy("doc_id").toPandas().set_index("doc_id")
-    assert got.loc["a", "lang_pred"] == "en"
-    assert got.loc["b", "lang_pred"] == "de"
-    assert got.loc["c", "lang_pred"] == "fr"
-    assert got.loc["d", "lang_pred"] == "und"  # no stopword hits
+from numalogic_spark.operators.dedup import doc_fingerprint
 
 
 def test_fingerprint_semantics(spark):
@@ -56,211 +17,3 @@ def test_fingerprint_semantics(spark):
     assert got["x"] == got["z"]  # identical text → identical fp
     assert got["x"] != got["y"]  # order-sensitive (unlike word-set hashes)
     assert 0 <= got["x"] < 2147483647
-
-
-def test_lang_id_ngram_real_languages(spark):
-    """Char-trigram profile language ID classifies real sentences in the
-    four profiled languages (the briefed 'n-gram heuristic'; the stopword
-    lang_id stays as the cheap fallback)."""
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import lang_id_ngram
-
-    samples = [
-        ("e1", "en", "it was the best of times and it was the worst of times for all of them"),
-        ("e2", "en", "she said that there would be another meeting in the morning before the others arrived"),
-        ("d1", "de", "es war einmal ein kleines mädchen das mit seiner mutter in einem haus am wald wohnte"),
-        ("d2", "de", "ich habe nicht gewusst dass der zug schon um acht uhr fährt und wir deshalb früher gehen müssen"),
-        ("f1", "fr", "il était une fois une petite fille qui vivait avec sa mère dans une maison près de la forêt"),
-        ("f2", "fr", "je ne savais pas que le train partait déjà à huit heures et que nous devions partir plus tôt"),
-        ("s1", "es", "había una vez una niña pequeña que vivía con su madre en una casa cerca del bosque"),
-        ("s2", "es", "no sabía que el tren salía ya a las ocho y que por eso teníamos que salir más temprano"),
-    ]
-    pdf = pd.DataFrame(samples, columns=["doc_id", "lang", "text"])
-    out = lang_id_ngram(spark.createDataFrame(pdf[["doc_id", "text"]])).toPandas()
-    got = out.set_index("doc_id")["lang_pred"].to_dict()
-    exp = pdf.set_index("doc_id")["lang"].to_dict()
-    assert got == exp
-    # scores are containment fractions in [0, 1]
-    for la in ("en", "de", "fr", "es"):
-        assert out[f"score_{la}"].between(0.0, 1.0).all()
-
-
-def test_repetition_stats(spark):
-    """Gopher-style repetition signals on hand-built docs with known
-    duplicate-trigram/line/top-word fractions."""
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import repetition_stats
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": ["loop", "clean", "lines", "tiny"],
-            "text": [
-                # "a b c" trigram repeated: words a b c a b c a b c ->
-                # 7 trigrams, 3 distinct -> dup = 4/7; top word 3/9
-                "a b c a b c a b c",
-                "all distinct words here never repeat anything today",
-                "same line\nsame line\nother line",
-                "hi",
-            ],
-        }
-    )
-    got = repetition_stats(spark.createDataFrame(docs)).toPandas().set_index("doc_id")
-    assert abs(got.loc["loop", "dup_trigram_frac"] - 4 / 7) < 1e-12
-    assert abs(got.loc["loop", "top_word_frac"] - 3 / 9) < 1e-12
-    assert got.loc["clean", "dup_trigram_frac"] == 0.0
-    assert abs(got.loc["clean", "top_word_frac"] - 1 / 8) < 1e-12
-    assert abs(got.loc["lines", "dup_line_frac"] - 1 / 3) < 1e-12
-    assert got.loc["tiny", "dup_trigram_frac"] == 0.0  # < 3 words
-    assert got.loc["tiny", "top_word_frac"] == 1.0
-
-
-def test_trigram_entropy(spark):
-    """Entropy vs a python oracle; looping text scores far below diverse
-    text; sub-trigram docs score 0."""
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import trigram_entropy
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": ["diverse", "loop", "tiny"],
-            "text": [
-                "the quick brown fox jumps over the lazy dog by the river",
-                "ababababababababababababababab",
-                "ab",
-            ],
-        }
-    )
-    got = trigram_entropy(spark.createDataFrame(docs)).toPandas().set_index("doc_id")
-
-    def oracle(text):
-        t = text.lower()
-        if len(t) < 1:
-            return 0.0
-        grams = [t[i : i + 3] for i in range(max(len(t) - 2, 1))]
-        n = len(grams)
-        c = Counter(grams)
-        return math.log(n) - sum(v * math.log(v) for v in c.values()) / n
-
-    for d in ("diverse", "loop"):
-        assert abs(got.loc[d, "trigram_entropy"] - oracle(docs.set_index("doc_id").loc[d, "text"])) < 1e-12
-    assert got.loc["diverse", "trigram_entropy"] > got.loc["loop", "trigram_entropy"] + 2.0
-
-
-def test_lang_id_ngram_confusion_matrix_12_languages(spark):
-    """Round-3 widened inventory: one held-out sentence per language (all
-    distinct from the profile seeds) — the confusion matrix must be
-    diagonal (every sample classified as its own language)."""
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import _SEED_TEXT, lang_id_ngram
-
-    assert len(_SEED_TEXT) >= 10
-    samples = {
-        "en": "they walked along the river in the evening while the light was fading over the hills",
-        "de": "am nächsten morgen gingen sie zusammen über die brücke und sprachen über das wetter",
-        "fr": "le lendemain matin ils ont traversé le pont ensemble en parlant de la pluie et du vent",
-        "es": "a la mañana siguiente cruzaron juntos el puente mientras hablaban del tiempo y del viento",
-        "it": "la mattina seguente attraversarono insieme il ponte parlando del tempo e del vento",
-        "pt": "na manhã seguinte atravessaram juntos a ponte enquanto falavam do tempo e do vento",
-        "nl": "de volgende ochtend liepen ze samen over de brug en praatten over het weer en de wind",
-        "sv": "nästa morgon gick de tillsammans över bron och pratade om vädret och vinden",
-        "pl": "następnego ranka przeszli razem przez most rozmawiając o pogodzie i o wietrze",
-        "tr": "ertesi sabah birlikte köprüden geçtiler ve hava ile rüzgar hakkında konuştular",
-        "id": "keesokan paginya mereka berjalan bersama melintasi jembatan sambil berbicara tentang cuaca dan angin",
-        "fi": "seuraavana aamuna he kävelivät yhdessä sillan yli ja puhuivat säästä ja tuulesta",
-    }
-    pdf = pd.DataFrame(
-        [(la, la, s) for la, s in samples.items()], columns=["doc_id", "lang", "text"]
-    )
-    out = lang_id_ngram(spark.createDataFrame(pdf[["doc_id", "text"]])).toPandas()
-    got = out.set_index("doc_id")["lang_pred"].to_dict()
-    confusion = {(exp, got[exp]) for exp in samples}
-    off_diagonal = {p for p in confusion if p[0] != p[1]}
-    assert not off_diagonal, f"misclassified: {sorted(off_diagonal)}"
-
-
-def test_scrub_pii(spark):
-    """Emails / IPv4s / phone numbers redact with typed placeholders and
-    per-category counts; ordering keeps emails whole and IPs out of the
-    phone class."""
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import scrub_pii
-
-    rows = [
-        ("a", "contact john.doe+spam@example.co.uk or call +1 (555) 123-4567 now"),
-        ("b", "server at 192.168.1.100 and 10.0.0.1 responded"),
-        ("c", "mail root@10.0.0.1 for help"),  # no alpha TLD -> not an email; IP scrubbed
-        ("d", "totally clean text with numbers 42 and 7"),
-        ("e", "dial 555.867.5309 then 555 867 5310"),
-        ("f", "scores 100 200 300 and years 2019 2020 2021 2022 stay"),
-        ("g", "bare 4155550123 redacts"),
-        ("h", "card 1234567890123456 fully gone"),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    got = {r["doc_id"]: r.asDict() for r in scrub_pii(df).collect()}
-    assert got["a"]["n_email"] == 1 and got["a"]["n_phone"] == 1
-    assert got["a"]["scrubbed"] == "contact <EMAIL> or call <PHONE> now"
-    assert got["b"]["n_ipv4"] == 2 and got["b"]["n_phone"] == 0
-    assert got["b"]["scrubbed"] == "server at <IP> and <IP> responded"
-    assert got["c"]["n_email"] == 0 and got["c"]["n_ipv4"] == 1
-    assert got["c"]["scrubbed"] == "mail root@<IP> for help"
-    assert got["d"] == {"doc_id": "d", "n_email": 0, "n_ipv4": 0, "n_phone": 0,
-                        "scrubbed": rows[3][1]}
-    assert got["e"]["n_phone"] == 2
-    assert got["e"]["scrubbed"] == "dial <PHONE> then <PHONE>"
-    # number-heavy prose is NOT phone-shaped (single-sep short-group rule)
-    assert got["f"]["n_phone"] == 0 and got["f"]["scrubbed"] == rows[5][1]
-    assert got["g"]["n_phone"] == 1 and got["g"]["scrubbed"] == "bare <PHONE> redacts"
-    # a 16-digit run redacts WHOLE — no trailing-digit residue
-    assert got["h"]["scrubbed"] == "card <PHONE> fully gone"
-
-
-def test_remove_boilerplate_lines(spark):
-    """Lines recurring across >= min_docs docs vanish from every doc;
-    unique lines and short lines survive; order is preserved."""
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import remove_boilerplate_lines
-
-    chrome = "Subscribe to our newsletter today"
-    footer = "Copyright Example Corp 2026"
-    docs = []
-    for i in range(4):
-        body = f"unique content of document number {i}"
-        docs.append((f"d{i}", f"{chrome}\n{body}\n--\n{footer}"))
-    docs.append(("solo", "a single document\nwith its own lines\n--"))
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    got = {r["id"]: r.asDict() for r in remove_boilerplate_lines(df, min_docs=3).collect()}
-    for i in range(4):
-        r = got[f"d{i}"]
-        assert r["n_lines"] == 4 and r["n_kept"] == 2
-        # "--" is under min_line_chars -> exempt; chrome+footer removed
-        assert r["cleaned"] == f"unique content of document number {i}\n--"
-    assert got["solo"]["n_kept"] == 3
-    assert got["solo"]["cleaned"] == "a single document\nwith its own lines\n--"
-
-
-def test_normalize_text(spark):
-    import pandas as pd
-
-    from numalogic_spark.operators.textstats import normalize_text_expr
-
-    rows = [
-        ("a", "  hello\tworld  \n\n\n\n  next   line \x07\x00 done  "),
-        ("b", "already clean\nsecond line"),
-        ("n", None),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]),
-                               "doc_id string, text string")
-    got = {r["doc_id"]: r["norm"] for r in
-           df.select("doc_id", normalize_text_expr("text").alias("norm")).collect()}
-    assert got["a"] == "hello world\n\nnext line done"
-    assert got["b"] == "already clean\nsecond line"
-    assert got["n"] is None

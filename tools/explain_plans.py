@@ -48,11 +48,6 @@ def main() -> None:
     fused = rollup_tiers_fused(histogram_with_fingerprint(df, RollupConfig(), "minute"), RollupConfig())
     sections.append(("fused all-tier rollup (invariant fingerprint in the same scan; one window chain for 1m/1h/1d)", grab(fused)))
 
-    from numalogic_spark.operators.tokens import sequence_pack_plan, token_frequencies
-
-    sections.append(("corpus token frequencies (partial agg map-side; count-distinct via per-doc array_distinct, never a shuffle-wide distinct)", grab(token_frequencies(df))))
-    sections.append(("sequence packing plan (one exchange per source partition: window cumsum + sequence explode)", grab(sequence_pack_plan(df, 2048))))
-
     stats = fit_stddev_threshold(df, ["n_tok"], by=["source"])
     sections.append(("fitted threshold score (stats joined back via BroadcastHashJoin)", grab(score_threshold(df, stats, ["n_tok"], by=["source"]))))
 
@@ -132,20 +127,6 @@ def main() -> None:
         grab(ccf_pairs(hourly)),
     ))
 
-    # round 4: bigram-LM perplexity — vocab and model ride broadcasts,
-    # the corpus is tokenized exactly once
-    from numalogic_spark.operators.lm import bigram_perplexity
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", " ".join(f"w{(i * 7 + j) % 50}" for j in range(30)))
-         for i in range(200)],
-        "doc_id string, text string",
-    )
-    sections.append((
-        "bigram-LM perplexity (vocab + model BroadcastHashJoin; bigrams formed JVM-side from the persisted word arrays; scoring join shuffles only per-doc bigram counts)",
-        grab(bigram_perplexity(docs, vocab_size=50, checkpoint=False)),
-    ))
-
     # round 4 third wave: counter semantics, downsampling, as-of, sketch
     from numalogic_spark.operators.joins import asof_join_backward
     from numalogic_spark.operators.promql import (
@@ -179,14 +160,9 @@ def main() -> None:
 
     # round 4 fourth wave: selection + sketch + interval operators
     from numalogic_spark.operators.joins import interval_overlap_join
-    from numalogic_spark.operators.lm import pmi_collocations
     from numalogic_spark.operators.sampling import quantile_transform
     from numalogic_spark.operators.sketches import cms_sketch
 
-    sections.append((
-        "PMI collocations (one tokenize pass; marginals re-aggregated from persisted joint; top-k = TakeOrderedAndProject, no global rank window)",
-        grab(pmi_collocations(docs.withColumnRenamed("label", "source"), min_count=2, top_k=20)),
-    ))
     iv_l = ev.select("source", F.col("event_id").alias("lid"),
                      F.col("ts_s").alias("start_s"), (F.col("ts_s") + 1000).alias("end_s")).limit(500)
     iv_r = ev.select("source", F.col("event_id").alias("rid"),
