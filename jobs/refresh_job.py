@@ -42,9 +42,10 @@ granularity; re-running a completed delta is a no-op):
 Scale shape at 10^12 stored rows: the delta is scanned once into its
 minute histogram; every hist/tier read is pruned to touched dates
 (`bucket_date` is the storage partition key, so pruning is a directory
-listing, not a scan); the touched-date collect() is bounded by calendar
-days in the delta, never by rows. Untouched partitions are never read,
-shuffled, or rewritten.
+listing, not a scan); every table's schema is pinned from the config
+(`_store_schema`), so no read runs a schema-inference job; the
+touched-date collect() is bounded by calendar days in the delta, never by
+rows. Untouched partitions are never read, shuffled, or rewritten.
 
 Reference analog: numalogic re-ingests into Druid segments and lets the
 broker merge query-time (approximate sketches); here the merge is exact
@@ -59,7 +60,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from numalogic_spark.functions.compression import BLOCK_SCHEMA, compress_tier
+from numalogic_spark.operators.gapfill import METRIC_COLS, gapfill_linear
 from numalogic_spark.operators.rollup import (
     TIERS,
     RollupConfig,
@@ -91,15 +95,44 @@ def _write_partitioned(df: DataFrame, path: str) -> None:
     )
 
 
-def _read_state(spark: SparkSession, path: str, dates: list[str] | None = None) -> DataFrame:
-    """Read a date-partitioned state table. The filter runs BEFORE the
-    string cast so partition pruning sees the raw partition column
-    (Spark's partition type inference reads the directory values back as
-    DATE; everything downstream keys on the canonical string form)."""
-    df = spark.read.parquet(path)
-    if dates is not None:
-        df = df.filter(F.col(DATE_COL).isin(dates))
-    return df.withColumn(DATE_COL, F.col(DATE_COL).cast("string"))
+def _store_schema(table: str, cfg: RollupConfig | None = None) -> T.StructType:
+    """The pinned schema of a store table, as its writer emits it, with
+    ``bucket_date`` a string. Readers pass it, so no read runs a
+    schema-inference job or types the partition column as a date. Only
+    the tiers' ``n_tok_sum`` depends on ``cfg`` (None means
+    ``RollupConfig()``); staging shares the ``hist`` schema."""
+    cfg = cfg or RollupConfig()
+    string, ts, double, long = T.StringType(), T.TimestampType(), T.DoubleType(), T.LongType()
+    key = [("source", string), ("bucket_ts", ts)]
+    tier_types = {"count": long, "n_tok_sum": long if cfg.integral_values else double}
+    tier = [*key, ("tier", string), *((c, tier_types.get(c, double)) for c in METRIC_COLS)]
+    cols = {
+        "hist": [*key, ("v", double), ("cnt", long), (DATE_COL, string)],
+        **{f"tier_{t}": [*tier, (DATE_COL, string)] for t in TIERS},
+        "gapfill_1m": [*key, ("tier", string), *((c, double) for c in METRIC_COLS),
+                       ("is_interpolated", T.BooleanType()), (DATE_COL, string)],
+        "blocks_1m": [*((f.name, f.dataType) for f in BLOCK_SCHEMA), (DATE_COL, string)],
+        "hist_manifest": [(DATE_COL, string), ("delta_id", string), ("run_seq", T.IntegerType()),
+                          ("rows", long), ("delta_fp", long)],
+        "expiry_log": [("table", string), (DATE_COL, string), ("watermark", string),
+                       ("max_age_s", long)],
+    }[table]
+    return T.StructType([T.StructField(n, t) for n, t in cols])
+
+
+def _read_state(
+    spark: SparkSession,
+    path: str,
+    dates: list[str] | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    """Read a date-partitioned store table with its pinned ``schema``.
+    The default is the ``hist`` schema, which staging shares, and it is
+    only right for those two: any other table must pass its own, or its
+    columns read back as null. ``dates`` becomes an ``isin`` filter on the
+    partition column, so the scan opens only those dates' files."""
+    df = spark.read.schema(schema or _store_schema("hist")).parquet(path)
+    return df if dates is None else df.filter(F.col(DATE_COL).isin(dates))
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -169,8 +202,6 @@ def _write_blocks(tier_1m: DataFrame, state: str) -> None:
     everything else. ONE applyInPandas grouped by (source, tier, date)
     covers every date in ``tier_1m`` in a single shuffle — never a
     full-store recompress."""
-    from numalogic_spark.functions.compression import compress_tier
-
     blocks = compress_tier(tier_1m, "n_tok_mean", extra_group_cols=[DATE_COL])
     _write_partitioned(blocks, f"{state}/blocks_1m")
 
@@ -188,7 +219,7 @@ def _expand_dates(dates: list[str], days: int) -> list[str]:
 
 
 def _write_gapfill(
-    spark: SparkSession, state: str, touched: list[str] | None
+    spark: SparkSession, state: str, touched: list[str] | None, cfg: RollupConfig
 ) -> int:
     """Maintain the gap-filled 1m view incrementally. A delta can change
     interpolated rows only inside gaps that overlap a touched date; the
@@ -199,14 +230,12 @@ def _write_gapfill(
     view. Rewriting an unaffected halo date is harmless: same inputs,
     same rows, idempotent dynamic overwrite. ``touched=None`` = full
     rebuild (bootstrap)."""
-    from numalogic_spark.operators.gapfill import gapfill_linear
-
     if touched is not None and not touched:
         return 0
     read_dates = None if touched is None else _expand_dates(touched, 2)
     write_dates = None if touched is None else _expand_dates(touched, 1)
-    tier = _read_state(spark, f"{state}/tier_1m", read_dates).drop(DATE_COL)
-    gf = _with_date(gapfill_linear(tier, "1m", max_gap_s=GAP_HORIZON_S))
+    tier_1m = _read_state(spark, f"{state}/tier_1m", read_dates, _store_schema("tier_1m", cfg))
+    gf = _with_date(gapfill_linear(tier_1m.drop(DATE_COL), "1m", max_gap_s=GAP_HORIZON_S))
     if write_dates is not None:
         gf = gf.filter(F.col(DATE_COL).isin(write_dates))
     _write_partitioned(gf, f"{state}/gapfill_1m")
@@ -220,19 +249,22 @@ def read_tier(
     table: str = "1m",
     start_date: str | None = None,
     end_date: str | None = None,
+    cfg: RollupConfig | None = None,
 ) -> DataFrame:
     """Query surface of the state store: a pruned range read of one
     table. ``table`` is a tier name ("1m"/"1h"/"1d") or one of "hist",
-    "gapfill_1m", "blocks_1m". The date bounds land on the partition
-    column BEFORE the string cast, so a month-range query against a
-    10^12-row store lists ~30 directories and scans nothing else."""
+    "gapfill_1m", "blocks_1m". ``cfg`` is the store's config, the one
+    ``bootstrap``/``refresh`` take (None means ``RollupConfig()``); it
+    fixes the pinned schema, so the read infers nothing. The date bounds
+    land on the partition column, so a month-range query against a
+    10^12-row store reads ~30 directories and scans nothing else."""
     name = f"tier_{table}" if table in TIERS else table
-    df = spark.read.parquet(f"{state}/{name}")
+    df = spark.read.schema(_store_schema(name, cfg)).parquet(f"{state}/{name}")
     if start_date is not None:
         df = df.filter(F.col(DATE_COL) >= start_date)
     if end_date is not None:
         df = df.filter(F.col(DATE_COL) <= end_date)
-    return df.withColumn(DATE_COL, F.col(DATE_COL).cast("string"))
+    return df
 
 
 def bootstrap(spark: SparkSession, raw: DataFrame, state: str, cfg: RollupConfig) -> dict:
@@ -252,7 +284,7 @@ def bootstrap(spark: SparkSession, raw: DataFrame, state: str, cfg: RollupConfig
     ).write.mode("overwrite").parquet(f"{state}/hist_manifest")
     counts = _write_tiers(h, state, cfg)
     date_rows = dates.collect()  # one row per calendar date — tiny
-    _write_gapfill(spark, state, None)
+    _write_gapfill(spark, state, None, cfg)
     n = sum(int(r["rows"]) for r in date_rows)
     h.unpersist()
     return {"mode": "init", "rows": n, "dates": len(date_rows),
@@ -279,13 +311,14 @@ def _probe_delta(dh: DataFrame) -> tuple[list[str], int]:
 def _ledger(manifest: DataFrame, delta_id: str) -> tuple[int, set[str], set[int]]:
     """One aggregate over the manifest: the highest run_seq so far, the
     dates already recorded for ``delta_id``, and the content fingerprints
-    recorded with them (stores written before fingerprints have none)."""
+    recorded with them. Files written before fingerprints read
+    ``delta_fp`` as null under the pinned schema, and collect_set skips
+    nulls."""
     mine = F.col("delta_id") == delta_id
-    fp = F.col("delta_fp") if "delta_fp" in manifest.columns else F.lit(None).cast("long")
     row = manifest.agg(
         F.max("run_seq"),
         F.collect_set(F.when(mine, F.col(DATE_COL))),
-        F.collect_set(F.when(mine, fp)),
+        F.collect_set(F.when(mine, F.col("delta_fp"))),
     ).collect()[0]
     return row[0] or 0, set(row[1]), {int(x) for x in row[2]}
 
@@ -324,7 +357,8 @@ def _refresh_inner(
     if _exists(spark, f"{state}/expiry_log"):
         expired = {
             r[DATE_COL]
-            for r in spark.read.parquet(f"{state}/expiry_log")
+            for r in spark.read.schema(_store_schema("expiry_log", cfg))
+            .parquet(f"{state}/expiry_log")
             .filter(F.col("table") == "hist")
             .select(DATE_COL)
             .distinct()
@@ -333,7 +367,8 @@ def _refresh_inner(
         rejected = [d for d in touched if d in expired]
         touched = [d for d in touched if d not in expired]
 
-    last_seq, done, prior_fps = _ledger(spark.read.parquet(f"{state}/hist_manifest"), delta_id)
+    manifest = spark.read.schema(_store_schema("hist_manifest", cfg))
+    last_seq, done, prior_fps = _ledger(manifest.parquet(f"{state}/hist_manifest"), delta_id)
     # the delta's content fingerprint detects delta_id reuse with different
     # content — e.g. a stream restarted with a fresh checkpoint but the same
     # id_prefix — before any mutation
@@ -349,6 +384,7 @@ def _refresh_inner(
     pending = [d for d in touched if d not in done]
     run_seq = last_seq + 1
     staging = f"{state}/staging/{delta_id}"
+    hist_schema = _store_schema("hist", cfg)  # staging's too
 
     if pending:
         # STAGE — pure function of the (un-mutated for pending dates) hist.
@@ -375,7 +411,7 @@ def _refresh_inner(
             # completed, so promote never ran and hist is un-mutated for
             # pending dates) — recomputing is safe
             _delete(spark, staging)
-            stored = _read_state(spark, f"{state}/hist", pending)
+            stored = _read_state(spark, f"{state}/hist", pending, hist_schema)
             merged = (
                 stored.unionByName(dh.filter(F.col(DATE_COL).isin(pending)))
                 .groupBy(*HIST_KEYS, DATE_COL)
@@ -384,7 +420,7 @@ def _refresh_inner(
             merged.write.mode("overwrite").partitionBy(DATE_COL).parquet(staging)
             _write_marker(spark, f"{staging}/_DELTA_FP", str(dfp))
         # PROMOTE — deterministic replace from staging, then lineage
-        staged = _read_state(spark, staging, pending)
+        staged = _read_state(spark, staging, pending, hist_schema)
         _write_partitioned(staged, f"{state}/hist")
         staged.groupBy(DATE_COL).agg(F.sum("cnt").alias("rows")).select(
             DATE_COL, F.lit(delta_id).alias("delta_id"),
@@ -396,8 +432,9 @@ def _refresh_inner(
     counts: dict[str, int] = {}
     gapfill_dates = 0
     if touched:
-        counts = _write_tiers(_read_state(spark, f"{state}/hist", touched), state, cfg)
-        gapfill_dates = _write_gapfill(spark, state, touched)
+        hist = _read_state(spark, f"{state}/hist", touched, hist_schema)
+        counts = _write_tiers(hist, state, cfg)
+        gapfill_dates = _write_gapfill(spark, state, touched, cfg)
     # the delta is fully applied and derived: drop its staging scratch so
     # a future reuse of the id can never promote a stale snapshot (the
     # manifest fp guard and the _DELTA_FP sidecar both catch
@@ -451,9 +488,10 @@ def compact(spark: SparkSession, state: str, max_files: int = 4) -> dict:
         # a path while a live plan still reads it, and a crash mid-compact
         # leaves either the old files or the full replacement, never less
         stage = f"{state}/staging/__compact__"
-        rows = _read_state(spark, f"{state}/hist", dates).repartition(F.col(DATE_COL))
+        hist_schema = _store_schema("hist")
+        rows = _read_state(spark, f"{state}/hist", dates, hist_schema).repartition(F.col(DATE_COL))
         rows.write.mode("overwrite").partitionBy(DATE_COL).parquet(stage)
-        _write_partitioned(_read_state(spark, stage, dates), f"{state}/hist")
+        _write_partitioned(_read_state(spark, stage, dates, hist_schema), f"{state}/hist")
         _delete(spark, stage)
     return {
         "mode": "compact",

@@ -608,3 +608,102 @@ def test_reinit_clears_expiry_log(spark, tokens_df, tmp_path):
     out = refresh(spark, d1, "d1", state, cfg)
     assert out["rejected_expired_dates"] == 0 and out["merged_dates"] > 0
     _assert_state_matches(spark, state, base.unionByName(d1), cfg)
+
+
+def test_store_reads_run_no_spark_job(spark, tokens_df, tmp_path):
+    """Building a store read runs no Spark job: every table's schema is
+    pinned, so nothing is inferred."""
+    from jobs.refresh_job import _read_state, read_tier
+
+    cfg = RollupConfig()
+    base, d1 = _three_days(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    refresh(spark, d1, "d1", state, cfg)
+    dates = sorted(
+        p.split("=", 1)[1] for p in os.listdir(f"{state}/hist") if p.startswith(DATE_COL)
+    )
+
+    sc = spark.sparkContext
+    group = "test.store_read_construction"
+    sc.setJobGroup(group, group)
+    try:
+        for table in ("1m", "1h", "1d", "hist", "gapfill_1m", "blocks_1m"):
+            read_tier(spark, state, table)
+            read_tier(spark, state, table, dates[0], dates[-1])
+            read_tier(spark, state, table, start_date=dates[1])
+        _read_state(spark, f"{state}/hist", dates[:2])
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert jobs == []
+
+
+@pytest.mark.parametrize("integral", [True, False])
+def test_store_schema_pins_match_files_and_reads_are_exact(spark, tokens_df, tmp_path, integral):
+    """Each table's pinned schema equals what its writer puts in the files
+    (a writer whose output type changes without its pin fails here), for
+    integral values and for a double value column summed as decimal. A
+    one-day read opens only that day's directory, and a range with no
+    existing date reads nothing."""
+    from jobs.refresh_job import _store_schema, expire, read_tier
+
+    cfg = RollupConfig(integral_values=integral, decimal_sum=not integral)
+    raw = tokens_df if integral else tokens_df.withColumn("n_tok", F.col("n_tok") / 4)
+    base, d1 = _three_days(raw)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    refresh(spark, d1, "d1", state, cfg)
+    expire(spark, state, {"1m": 86400, "1h": None, "1d": None})  # writes expiry_log
+
+    tables = ("hist", "tier_1m", "tier_1h", "tier_1d", "gapfill_1m", "blocks_1m",
+              "hist_manifest", "expiry_log")
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # bucket_date as written: a string
+    try:
+        inferred = {t: spark.read.parquet(f"{state}/{t}").schema for t in tables}
+    finally:
+        spark.conf.set(key, old)
+    for t in tables:
+        got = [(f.name, f.dataType) for f in inferred[t]]
+        want = [(f.name, f.dataType) for f in _store_schema(t, cfg)]
+        assert got == want, t
+
+    day = max(
+        p.split("=", 1)[1] for p in os.listdir(f"{state}/tier_1m") if p.startswith(DATE_COL)
+    )
+    for table in ("1m", "1h", "1d", "hist", "gapfill_1m", "blocks_1m"):
+        one = read_tier(spark, state, table, day, day, cfg)
+        assert one.collect(), table
+        # with no exchange in the plan, the file scan is its only leaf
+        scan = one._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+        name = f"tier_{table}" if table in ("1m", "1h", "1d") else table
+        day_files = [f for f in os.listdir(f"{state}/{name}/{DATE_COL}={day}") if f.endswith(".parquet")]
+        assert scan.metrics().apply("numFiles").value() == len(day_files), table
+    assert read_tier(spark, state, "1h", "1999-01-01", "1999-01-03", cfg).count() == 0
+
+
+def test_manifest_written_before_fingerprints_still_gates(spark, tokens_df, tmp_path):
+    """A hist_manifest whose files have no delta_fp column (written before
+    fingerprints) still loads: the pinned schema reads the column as null,
+    and re-applying a delta it records is a no-op, not an error."""
+    import shutil
+
+    cfg = RollupConfig()
+    base, d1 = _three_days(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    refresh(spark, d1, "d1", state, cfg)
+
+    manifest, old = f"{state}/hist_manifest", str(tmp_path / "manifest_without_fp")
+    spark.read.parquet(manifest).drop("delta_fp").write.parquet(old)
+    shutil.rmtree(manifest)
+    os.rename(old, manifest)
+    assert "delta_fp" not in spark.read.parquet(manifest).columns
+
+    out = refresh(spark, d1, "d1", state, cfg)
+    assert out["merged_dates"] == 0 and out["skipped_dates"] == out["touched_dates"] == 2
+    _assert_state_matches(spark, state, base.unionByName(d1), cfg)
