@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry`` runs the flagship rollup cascade on the deterministic synthetic
+``entry`` runs the flagship tier rollup on the deterministic synthetic
 token table; ``queries``/``oracle_sql`` expose each implemented operator
 over the shared testdata tables so the driver can DuckDB-verify them.
 
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from numalogic_spark.functions import transforms as TX
 from numalogic_spark.operators.gapfill import gapfill_linear
-from numalogic_spark.operators.rollup import RollupConfig, rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 
 def _r6(col):
     """Deterministic 6-dp rounding: floor(x*1e6 + 0.5)/1e6 on BOTH engines.
@@ -55,10 +55,16 @@ def _rounded_tier(tier_df: DataFrame) -> DataFrame:
     )
 
 
+def _events_tier(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
+    """One tier of the events table: the fused derive filtered on ``tier``
+    (the filter lands below the aggregate's exchange)."""
+    tiers = rollup_tiers_fused(histogram(_events(spark, sf_dir), EVENTS_CFG, "minute"), EVENTS_CFG)
+    return tiers.filter(F.col("tier") == tier)
+
+
 def _q_rollup(tier: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        tiers = rollup_cascade(_events(spark, sf_dir), EVENTS_CFG)
-        return _rounded_tier(tiers[tier])
+        return _rounded_tier(_events_tier(spark, sf_dir, tier))
 
     return q
 
@@ -78,10 +84,7 @@ GROUP BY 1, 2
 
 
 def _q_rollup_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All three tiers in one exchange + one window chain (the batch-optimal
-    fused plan; row-identical to the cascade union)."""
-    from numalogic_spark.operators.rollup import histogram, rollup_tiers_fused
-
+    """All three tiers in one exchange + one window chain."""
     fused = rollup_tiers_fused(
         histogram(_events(spark, sf_dir), EVENTS_CFG, "minute"), EVENTS_CFG
     )
@@ -106,41 +109,8 @@ def _rollup_fused_sql() -> str:
     )
 
 
-def _q_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental continuous-aggregate refresh (operators/rollup.py
-    refresh_tier): events deterministically split base/delta on
-    event_id % 10, the base rolled into a stored minute histogram, then
-    the delta merged in and ONLY the delta-touched hour buckets
-    recomputed — the replacement rows a dynamic-partition-overwrite job
-    writes. Exact-identical to a from-scratch 1h rollup over base+delta
-    restricted to touched hours (the oracle), because the histogram merge
-    is lossless. At 10^12 stored rows this is the path that makes a daily
-    delta O(|delta| + touched buckets), not a full rescan."""
-    from numalogic_spark.operators.rollup import histogram, refresh_tier
-
-    ev = _events(spark, sf_dir)
-    base = ev.filter(F.col("event_id") % 10 != 7)
-    delta = ev.filter(F.col("event_id") % 10 == 7)
-    stored = histogram(base, EVENTS_CFG, "minute")
-    dh = histogram(delta, EVENTS_CFG, "minute")
-    return _rounded_tier(refresh_tier(stored, dh, EVENTS_CFG, "1h"))
-
-
-def _rollup_refresh_sql() -> str:
-    return f"""
-SELECT q.* FROM ({_rollup_sql("hour", 3600)}) q
-WHERE EXISTS (
-  SELECT 1 FROM events d
-  WHERE d.event_id % 10 = 7
-    AND d.event_type = q.source
-    AND CAST(epoch(date_trunc('hour', d.ts)) AS BIGINT) = q.bucket_s
-)
-"""
-
-
 def _q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tiers = rollup_cascade(_events(spark, sf_dir), EVENTS_CFG)
-    gf = gapfill_linear(tiers["1m"], "1m")
+    gf = gapfill_linear(_events_tier(spark, sf_dir, "1m"), "1m")
     return gf.select(
         "source",
         F.unix_timestamp("bucket_ts").alias("bucket_s"),
@@ -380,8 +350,7 @@ def _q_compress_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec is bit-exact end-to-end through Spark."""
     from numalogic_spark.functions.compression import compress_tier, decompress_blocks
 
-    tiers = rollup_cascade(_events(spark, sf_dir), EVENTS_CFG)
-    blocks = compress_tier(tiers["1m"], "n_tok_mean")
+    blocks = compress_tier(_events_tier(spark, sf_dir, "1m"), "n_tok_mean")
     points = decompress_blocks(blocks)
     return points.select(
         "source",
@@ -480,7 +449,7 @@ FROM agg WHERE rn >= {L}
 
 def _q_multi_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-metric daily rollup over lineitem: quantity + extendedprice
-    per (l_returnflag, ship day) through one unpivoted cascade."""
+    per (l_returnflag, ship day) through one unpivoted rollup."""
     from numalogic_spark.operators.rollup import RollupConfig, rollup_cascade_multi
 
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1588,11 +1557,9 @@ FROM events GROUP BY 1
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full rollup cascade over the synthetic token table at
-    smoke scale — union of all tiers (the engine's continuous aggregates)."""
+    """Flagship: every rollup tier of the synthetic token table at smoke
+    scale, as one frame (the engine's continuous aggregates)."""
     from numalogic_spark.datagen import gen_tokens_spark
-
-    from numalogic_spark.operators.rollup import histogram, rollup_tiers_fused
 
     df = gen_tokens_spark(spark, 10_000, n_sources=20)
     out = rollup_tiers_fused(histogram(df, RollupConfig(), "minute"), RollupConfig())
@@ -2807,11 +2774,10 @@ _RETENTION_POLICY = {"1m": 3 * 86400, "1h": 10 * 86400, "1d": None}
 
 
 def _q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention-ladder audit over the fused tier cascade: per tier the
+    """Retention-ladder audit over the fused tiers: per tier the
     kept/expired split against its horizon, clocked off the data
     watermark (operators/retention.py)."""
     from numalogic_spark.operators.retention import retention_summary
-    from numalogic_spark.operators.rollup import histogram, rollup_tiers_fused
 
     fused = rollup_tiers_fused(
         histogram(_events(spark, sf_dir), EVENTS_CFG, "minute"), EVENTS_CFG
@@ -4019,7 +3985,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_overlap_join_events": _q_interval_join,
         "cms_freq_documents": _q_cms,
         "staleness_report_events": _q_staleness,
-        "rollup_refresh_1h_events": _q_rollup_refresh,
         "dedup_clusters_documents": _q_dedup_clusters,
         "ae_inference_events": _q_ae_inference,
         "conv_ae_inference_events": _q_conv_ae_inference,
@@ -4145,7 +4110,6 @@ def oracle_sql() -> dict[str, str]:
         "interval_overlap_join_events": _interval_join_sql(),
         "cms_freq_documents": _cms_sql(),
         "staleness_report_events": _STALENESS_SQL,
-        "rollup_refresh_1h_events": _rollup_refresh_sql(),
         "conv_ae_inference_events": _conv_ae_sql(),
         "lstm_ae_inference_events": _lstm_ae_sql(),
         "sparse_ae_inference_events": _ae_sql(_sparse_ae_weights()),

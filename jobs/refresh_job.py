@@ -121,17 +121,13 @@ def _store_schema(table: str, cfg: RollupConfig | None = None) -> T.StructType:
 
 
 def _read_state(
-    spark: SparkSession,
-    path: str,
-    dates: list[str] | None = None,
-    schema: T.StructType | None = None,
+    spark: SparkSession, path: str, dates: list[str] | None, schema: T.StructType
 ) -> DataFrame:
-    """Read a date-partitioned store table with its pinned ``schema``.
-    The default is the ``hist`` schema, which staging shares, and it is
-    only right for those two: any other table must pass its own, or its
-    columns read back as null. ``dates`` becomes an ``isin`` filter on the
-    partition column, so the scan opens only those dates' files."""
-    df = spark.read.schema(schema or _store_schema("hist")).parquet(path)
+    """Read a date-partitioned store table with its pinned ``schema``
+    (``_store_schema`` of the table; staging shares ``hist``'s). ``dates``
+    becomes an ``isin`` filter on the partition column, so the scan opens
+    only those dates' files; None reads every date."""
+    df = spark.read.schema(schema).parquet(path)
     return df if dates is None else df.filter(F.col(DATE_COL).isin(dates))
 
 
@@ -275,7 +271,8 @@ def bootstrap(spark: SparkSession, raw: DataFrame, state: str, cfg: RollupConfig
     partitions without lineage, and staging scratch must not survive."""
     _delete(spark, state)
     h = _with_date(histogram(raw, cfg, "minute")).persist()
-    _write_partitioned(h, f"{state}/hist")
+    # one task per date, so each date directory holds one file
+    _write_partitioned(h.repartition(DATE_COL), f"{state}/hist")
     dates = h.groupBy(DATE_COL).agg(F.sum("cnt").alias("rows"))
     dates.select(
         DATE_COL, F.lit("__init__").alias("delta_id"),

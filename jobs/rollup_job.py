@@ -8,7 +8,7 @@ Usage (local or cluster — only --master and the catalog config change):
         jobs/rollup_job.py --input <tokens path> --output <tier path> \
         --manifest <manifest path> [--gen-rows N] [--buckets 32]
 
-Runs: token-invariant fingerprint → tier cascade (1m/1h/1d) under the
+Runs: token-invariant fingerprint → 1m/1h/1d tiers under the
 checkpoint manifest (resume at bucket granularity) → gap-fill → Gorilla
 compression blocks. Prints a one-line JSON summary.
 """
@@ -28,19 +28,19 @@ from numalogic_spark.operators.rollup import (
     histogram,
     histogram_with_fingerprint,
     invariant_from_histogram,
-    merge_histogram,
-    tier_from_histogram,
+    rollup_tiers_fused,
 )
 from numalogic_spark.plans.manifest import BUCKET_COL, run_with_manifest
 from numalogic_spark.session import get_spark
 
 
 def tier_job(subset):
-    """Per-bucket 1m tier via the engine's own histogram cascade, with the
+    """Per-bucket 1m tier via the engine's fused tier derivation, with the
     manifest bucket column carried through as an extra grouping key."""
     cfg = RollupConfig()
     h1m = histogram(subset, cfg, "minute", extra_keys=[BUCKET_COL])
-    return tier_from_histogram(h1m, cfg, "1m", extra_keys=[BUCKET_COL])
+    tiers = rollup_tiers_fused(h1m, cfg, extra_keys=[BUCKET_COL])
+    return tiers.filter(F.col("tier") == "1m")
 
 
 def main() -> None:
@@ -90,8 +90,10 @@ def main() -> None:
         max_age_sec=args.max_age_sec, snapshot_id=args.snapshot_id,
     )
 
-    h1m = merge_histogram(hb, "minute")  # drop the bucket key: global 1m histogram
-    t1m = tier_from_histogram(h1m, cfg, "1m").persist()
+    # without extra keys the fused derive merges the resume buckets: every
+    # global tier from the same histogram, persisted once
+    tiers = rollup_tiers_fused(hb, cfg).persist()
+    t1m = tiers.filter(F.col("tier") == "1m")
 
     # every downstream stage writes its own per-partition manifest too —
     # gap-fill and compression are keyed by source (a series must stay in
@@ -126,7 +128,7 @@ def main() -> None:
         "blocks_processed": len(cp_summary["processed_buckets"]),
         "blocks_skipped": len(cp_summary["skipped_buckets"]),
         "tier_1m_points": t1m.count(),
-        "tier_1h_points": tier_from_histogram(merge_histogram(h1m, "hour"), cfg, "1h").count(),
+        "tier_1h_points": tiers.filter(F.col("tier") == "1h").count(),
         "gapfilled_points": spark.read.parquet(args.output + "_gapfill").count(),
         "compressed_blocks": spark.read.parquet(args.output + "_blocks").count(),
         "wall_sec": round(time.time() - t0, 2),

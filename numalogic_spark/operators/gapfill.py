@@ -52,7 +52,7 @@ def gapfill_linear(
 
     ``max_gap_s`` bounds the gap horizon: a silence LONGER than this many
     seconds is left unfilled (it is staleness, not a gap — see
-    tsfeatures.staleness_report). Default None fills every interior gap
+    retention.staleness_report). Default None fills every interior gap
     (the original behavior, and what the gapfill_1m_events oracle
     replays). Incremental maintenance (jobs/refresh_job.py) requires a
     finite horizon so a delta's interpolation blast radius is bounded.

@@ -1,19 +1,22 @@
-"""Continuous-aggregate rollup with cascading retention tiers.
+"""Continuous-aggregate rollup into retention tiers.
 
 Semantics mirror the reference's Druid granularity rollup — time-bucket
 aggregation with count/sum/mean plus an approximate-quantile aggregator
 (/root/reference/numalogic/connectors/druid/_druid.py:106-115 granularity
 params; aggregators.py:1-22 quantilesDoublesSketch) — except our quantiles
-are EXACT: instead of a DataSketch we cascade a *mergeable exact histogram*
-(value → count) per bucket, which supports numpy-style linear-interpolation
+are EXACT: instead of a DataSketch we keep a *mergeable exact histogram*
+(value → count) per minute bucket, which supports numpy-style linear-interpolation
 percentiles at every tier without rescanning raw data.
 
 Plan shape (one raw scan total, all JVM-side):
 
     raw ─groupBy(source, 1m-bucket, value)→ hist_1m      (partial agg map-side)
-        hist_1m ─window+groupBy→ tier_1m (count/sum/mean/p95/rate)
-        hist_1m ─groupBy(hour)→ hist_1h ─→ tier_1h
-        hist_1h ─groupBy(day)→  hist_1d ─→ tier_1d
+        hist_1m ─explode(tier, bucket)→ groupBy(tier, source, bucket, value)
+                ─window+groupBy→ tier_1m ∪ tier_1h ∪ tier_1d
+                  (count/sum/mean/p95/rate, one frame with a ``tier`` column)
+
+A caller that needs one tier filters on ``tier``; the filter lands right
+after the explode, below the aggregate's exchange.
 
 The (source, bucket, value) grouping key spreads a hot source across many
 reducers (value acts as a natural salt), and partial aggregation collapses
@@ -63,7 +66,7 @@ def histogram(
 ) -> DataFrame:
     """(*extra_keys, source, bucket_ts, v) → cnt — the mergeable exact
     histogram. `extra_keys` carries orthogonal grouping columns (a metric
-    name, a manifest bucket id) through the whole cascade."""
+    name, a manifest bucket id) through every tier."""
     extra_keys = extra_keys or []
     return (
         df.select(
@@ -124,15 +127,6 @@ def invariant_from_histogram(hist: DataFrame) -> DataFrame:
     )
 
 
-def merge_histogram(hist: DataFrame, unit: str, extra_keys: list[str] | None = None) -> DataFrame:
-    """Re-bucket a finer histogram to a coarser tier (pure merge, no raw scan)."""
-    extra_keys = extra_keys or []
-    return (
-        hist.groupBy(*extra_keys, "source", bucket("bucket_ts", unit).alias("bucket_ts"), "v")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def _percentile_cols(p: float) -> list[Column]:
     """Exact linear-interpolation percentile over a (v, cnt) histogram.
 
@@ -149,97 +143,25 @@ def _percentile_cols(p: float) -> list[Column]:
     return [v_lo.alias("_v_lo"), v_hi.alias("_v_hi"), F.max(frac).alias("_frac")]
 
 
-def _tier_agg(
-    hist: DataFrame,
-    cfg: RollupConfig,
-    keys: list[str],
-    tier_col: Column,
-    secs_col: Column,
-    extra_keys: list[str],
-) -> DataFrame:
-    """Shared histogram → tier aggregation: window cum/total over `keys`,
-    exact-percentile agg, final metric projection. The window partitioning
-    matches the groupBy key prefix, so Catalyst reuses one exchange for
-    both. `tier_col`/`secs_col` are expressions so the per-tier
-    (tier_from_histogram) and fused all-tier (rollup_tiers_fused) paths
-    share ONE copy of the percentile/metric semantics."""
-    w = Window.partitionBy(*keys).orderBy("v", "cnt")
-    enriched = hist.withColumn("cum", F.sum("cnt").over(w)).withColumn(
-        "total", F.sum("cnt").over(Window.partitionBy(*keys))
-    )
-    if cfg.decimal_sum and not cfg.integral_values:
-        vsum = F.sum(F.col("v").cast("decimal(20,6)") * F.col("cnt")).cast("double")
-    else:
-        vsum = F.sum(F.col("v") * F.col("cnt"))
-    if cfg.integral_values:
-        vsum = vsum.cast("long")
-    agg = enriched.groupBy(*keys).agg(
-        F.sum("cnt").alias("count"),
-        vsum.alias("n_tok_sum"),
-        *_percentile_cols(cfg.percentile),
-    )
-    return agg.select(
-        *extra_keys,
-        "source",
-        "bucket_ts",
-        tier_col.alias("tier"),
-        "count",
-        "n_tok_sum",
-        (F.col("n_tok_sum") / F.col("count")).alias("n_tok_mean"),
-        (F.col("_v_lo") + F.col("_frac") * (F.col("_v_hi") - F.col("_v_lo"))).alias("n_tok_p95"),
-        (F.col("n_tok_sum") / secs_col).alias("token_rate"),
-    )
-
-
-def tier_from_histogram(
-    hist: DataFrame, cfg: RollupConfig, tier: str, extra_keys: list[str] | None = None
-) -> DataFrame:
-    """Histogram → continuous-aggregate tier table.
-
-    Output: (*extra_keys, source, bucket_ts, tier, count, n_tok_sum,
-    n_tok_mean, n_tok_p95, token_rate)."""
-    extra_keys = extra_keys or []
-    _, secs, _ = TIERS[tier]
-    keys = [*extra_keys, "source", "bucket_ts"]
-    return _tier_agg(hist, cfg, keys, F.lit(tier), F.lit(float(secs)), extra_keys)
-
-
-def rollup_cascade(
-    df: DataFrame, cfg: RollupConfig | None = None, extra_keys: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Full raw → 1m → 1h → 1d cascade from ONE scan of the raw table.
-
-    Returns {"1m": df, "1h": df, "1d": df}. count/sum/mean re-aggregate
-    exactly by construction; p95 is exact at every tier because the
-    histogram merge is lossless (reference analog: Druid would re-ingest or
-    merge quantile sketches — approximate; we are exact).
-    """
-    cfg = cfg or RollupConfig()
-    h1m = histogram(df, cfg, "minute", extra_keys)
-    h1h = merge_histogram(h1m, "hour", extra_keys)
-    h1d = merge_histogram(h1h, "day", extra_keys)
-    return {
-        "1m": tier_from_histogram(h1m, cfg, "1m", extra_keys),
-        "1h": tier_from_histogram(h1h, cfg, "1h", extra_keys),
-        "1d": tier_from_histogram(h1d, cfg, "1d", extra_keys),
-    }
-
-
 def rollup_tiers_fused(
     h1m: DataFrame, cfg: RollupConfig | None = None, extra_keys: list[str] | None = None
 ) -> DataFrame:
-    """Every retention tier from the minute histogram in ONE exchange and
-    ONE window/aggregate chain, as a single frame with a ``tier`` column.
+    """Histogram → continuous-aggregate tiers, the engine's one tier
+    derivation: every retention tier from the minute histogram through
+    one merge→window→aggregate chain, as a single frame with a ``tier``
+    column.
 
-    Row-identical to ``unionByName`` over ``rollup_cascade``'s tiers. The
-    cascade shape (1m → 1h → 1d as separate merges) is what an INCREMENTAL
-    production pipeline wants — coarse tiers re-derive from stored fine
-    histograms without touching raw. For a BATCH job that computes all
-    tiers at once, exploding each histogram row into its (tier, bucket)
-    memberships replaces three small merge→window→agg job chains with one
-    chain over ~3× histogram rows: fewer stage barriers, fewer exchanges,
-    and the scheduling latency of five small jobs stops serializing — the
-    difference between 0.6 and 0.9 scaling efficiency on short tiers.
+    Output: (*extra_keys, source, bucket_ts, tier, count, n_tok_sum,
+    n_tok_mean, n_tok_p95, token_rate).
+
+    Each histogram row explodes into its (tier, bucket) memberships, so
+    one chain over ~3× histogram rows replaces a chain per tier: fewer
+    stage barriers, fewer exchanges, and no serialized scheduling of
+    small per-tier jobs. The window partitioning matches the groupBy key
+    prefix, so Catalyst reuses one exchange for both. ``tier`` is a
+    grouping key, so a ``filter(tier == ...)`` on the result is pushed
+    onto the explode, below the merge's exchange: a single-tier caller
+    shuffles and aggregates only its tier's rows.
     """
     cfg = cfg or RollupConfig()
     extra_keys = extra_keys or []
@@ -270,118 +192,32 @@ def rollup_tiers_fused(
     secs = F.lit(None).cast("double")
     for t, (_, s, _) in TIERS.items():
         secs = F.when(F.col("tier") == t, F.lit(float(s))).otherwise(secs)
-    return _tier_agg(h_all, cfg, keys, F.col("tier"), secs, extra_keys)
-
-
-def touched_coarse_buckets(
-    delta_h1m: DataFrame, tier: str, extra_keys: list[str] | None = None
-) -> DataFrame:
-    """Distinct (*extra_keys, source, bucket_ts) at `tier` granularity that
-    a delta's minute histogram touches — the rewrite set for an incremental
-    refresh. Bounded by |distinct (source, coarse bucket)| of the delta
-    (e.g. one day of new data touches ≤ 1440·S minute buckets, 24·S hour
-    buckets, S day buckets), independent of the stored table's size."""
-    extra_keys = extra_keys or []
-    unit, _, _ = TIERS[tier]
-    return delta_h1m.select(
-        *extra_keys, "source", bucket("bucket_ts", unit).alias("bucket_ts")
-    ).distinct()
-
-
-def refresh_histogram(
-    stored_h1m: DataFrame,
-    delta_h1m: DataFrame,
-    extra_keys: list[str] | None = None,
-    touched_only: bool = False,
-    broadcast_touched: bool = True,
-) -> DataFrame:
-    """Merge a raw delta's minute histogram into the stored minute
-    histogram — the incremental-ingest path of the continuous aggregate.
-    The merge is a pure (key, v)-count addition, so late/out-of-order
-    delta rows land in their true buckets with no special casing
-    (TimescaleDB-style continuous-aggregate refresh; the reference would
-    re-ingest into Druid segments — we re-aggregate mergeable state).
-
-    ``touched_only=True`` returns ONLY the minute buckets the delta
-    touches — the replacement partitions for a dynamic-partition-overwrite
-    write; rows for untouched buckets are never read, shuffled, or
-    rewritten. At 10^12 stored rows the work is O(|delta| + |stored
-    histogram rows in touched buckets|): the semi-join prunes the stored
-    scan to touched partitions (bucket_ts is the storage partition key),
-    and the touched set broadcasts (``broadcast_touched``) because it is
-    delta-bounded, never table-bounded."""
-    extra_keys = extra_keys or []
-    keys = [*extra_keys, "source", "bucket_ts"]
-    if touched_only:
-        touched = touched_coarse_buckets(delta_h1m, "1m", extra_keys)
-        if broadcast_touched:
-            touched = F.broadcast(touched)
-        stored_h1m = stored_h1m.join(touched, on=keys, how="left_semi")
-    return (
-        stored_h1m.unionByName(delta_h1m)
-        .groupBy(*keys, "v")
-        .agg(F.sum("cnt").alias("cnt"))
+    w = Window.partitionBy(*keys).orderBy("v", "cnt")
+    enriched = h_all.withColumn("cum", F.sum("cnt").over(w)).withColumn(
+        "total", F.sum("cnt").over(Window.partitionBy(*keys))
     )
-
-
-def refresh_tier(
-    stored_h1m: DataFrame,
-    delta_h1m: DataFrame,
-    cfg: RollupConfig | None = None,
-    tier: str = "1m",
-    extra_keys: list[str] | None = None,
-    broadcast_touched: bool = True,
-) -> DataFrame:
-    """Replacement tier rows for ONLY the coarse buckets a delta touches.
-
-    Semantics: for every (*extra_keys, source, tier-bucket) with at least
-    one delta row, recompute the continuous-aggregate point from (stored
-    minute histogram restricted to that bucket) ∪ (delta histogram) —
-    exactly what a from-scratch rollup over base+delta would produce for
-    those buckets, including exact percentiles (the histogram is lossless,
-    so refresh ≡ recompute is an identity, not an approximation). Buckets
-    the delta does not touch are never read: a daily delta against a
-    10^12-row table reads O(|delta| + touched-bucket histogram rows), not
-    the table. A job writes the result with dynamic partition overwrite
-    keyed by (tier, source/bucket date) and the tier table stays exact."""
-    cfg = cfg or RollupConfig()
-    extra_keys = extra_keys or []
-    unit, _, _ = TIERS[tier]
-    touched = touched_coarse_buckets(delta_h1m, tier, extra_keys)
-    if broadcast_touched:
-        touched = F.broadcast(touched)
-    stored_c = stored_h1m.withColumn("_cb", bucket("bucket_ts", unit))
-    on = [
-        *[stored_c[k] == touched[k] for k in extra_keys],
-        stored_c["source"] == touched["source"],
-        stored_c["_cb"] == touched["bucket_ts"],
-    ]
-    relevant = stored_c.join(touched, on=on, how="left_semi").drop("_cb")
-    merged = merge_histogram(relevant.unionByName(delta_h1m), unit, extra_keys)
-    return tier_from_histogram(merged, cfg, tier, extra_keys)
-
-
-def refresh_cascade(
-    stored_h1m: DataFrame,
-    delta: DataFrame,
-    cfg: RollupConfig | None = None,
-    extra_keys: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """Incremental refresh of the whole retention cascade from one delta:
-    {"h1m": touched minute-histogram replacement rows, "1m"/"1h"/"1d":
-    replacement tier points for the delta-touched buckets at each tier}.
-    A minute touched by the delta dirties its enclosing hour and day, and
-    the per-tier semi-joins encode exactly that propagation. ONE
-    histogram() scan of the delta feeds all four outputs (persist the
-    returned delta histogram upstream if materializing all of them)."""
-    cfg = cfg or RollupConfig()
-    dh1m = histogram(delta, cfg, "minute", extra_keys)
-    out: dict[str, DataFrame] = {
-        "h1m": refresh_histogram(stored_h1m, dh1m, extra_keys, touched_only=True)
-    }
-    for tier in TIERS:
-        out[tier] = refresh_tier(stored_h1m, dh1m, cfg, tier, extra_keys)
-    return out
+    if cfg.decimal_sum and not cfg.integral_values:
+        vsum = F.sum(F.col("v").cast("decimal(20,6)") * F.col("cnt")).cast("double")
+    else:
+        vsum = F.sum(F.col("v") * F.col("cnt"))
+    if cfg.integral_values:
+        vsum = vsum.cast("long")
+    agg = enriched.groupBy(*keys).agg(
+        F.sum("cnt").alias("count"),
+        vsum.alias("n_tok_sum"),
+        *_percentile_cols(cfg.percentile),
+    )
+    return agg.select(
+        *extra_keys,
+        "source",
+        "bucket_ts",
+        "tier",
+        "count",
+        "n_tok_sum",
+        (F.col("n_tok_sum") / F.col("count")).alias("n_tok_mean"),
+        (F.col("_v_lo") + F.col("_frac") * (F.col("_v_hi") - F.col("_v_lo"))).alias("n_tok_p95"),
+        (F.col("n_tok_sum") / secs).alias("token_rate"),
+    )
 
 
 def rollup_cascade_multi(
@@ -389,7 +225,7 @@ def rollup_cascade_multi(
     value_cols: list[str],
     cfg: RollupConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """Multi-metric cascade: unpivot the metric columns into the histogram
+    """Multi-metric rollup: unpivot the metric columns into the histogram
     key — one shuffle covers every metric (the reference's wide frames,
     prometheus.py:113-118, become long rows with a `metric` column).
 
@@ -401,16 +237,14 @@ def rollup_cascade_multi(
         F.col(cfg.source_col).alias("source"), F.col(cfg.ts_col).alias("event_ts"),
         *[F.col(c) for c in value_cols],
     ).unpivot(["source", "event_ts"], value_cols, "metric", "n_tok")
-    tiers = rollup_cascade(
-        long,
-        RollupConfig(percentile=cfg.percentile, integral_values=cfg.integral_values,
-                     decimal_sum=cfg.decimal_sum),
-        extra_keys=["metric"],
-    )
+    long_cfg = RollupConfig(percentile=cfg.percentile, integral_values=cfg.integral_values,
+                            decimal_sum=cfg.decimal_sum)
+    tiers = rollup_tiers_fused(histogram(long, long_cfg, "minute", ["metric"]), long_cfg, ["metric"])
     return {
-        tier: t.select("source", "metric", "bucket_ts", "tier", "count",
-                       "n_tok_sum", "n_tok_mean", "n_tok_p95", "token_rate")
-        for tier, t in tiers.items()
+        tier: tiers.filter(F.col("tier") == tier).select(
+            "source", "metric", "bucket_ts", "tier", "count",
+            "n_tok_sum", "n_tok_mean", "n_tok_p95", "token_rate")
+        for tier in TIERS
     }
 
 

@@ -60,9 +60,10 @@ def test_val_compression_ratio_constant():
 
 def test_spark_roundtrip(spark, tokens_df):
     """Tier table → blocks → points: exact equality on (ts, value)."""
-    from numalogic_spark.operators.rollup import rollup_cascade
+    from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 
-    tier = rollup_cascade(tokens_df)["1m"]
+    cfg = RollupConfig()
+    tier = rollup_tiers_fused(histogram(tokens_df, cfg, "minute"), cfg).filter("tier = '1m'")
     blocks = compress_tier(tier, "n_tok_mean")
     back = decompress_blocks(blocks).toPandas().sort_values(["source", "bucket_ts"], ignore_index=True)
     orig = (

@@ -1,12 +1,18 @@
+from pyspark.sql import functions as F
+
 from numalogic_spark.operators.gapfill import gapfill_linear
-from numalogic_spark.operators.rollup import rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 from numalogic_spark.oracle import gapfill_oracle, rollup_oracle
 from tests.conftest import assert_frames_match
 
 
+def _tier_1m(tokens_df):
+    cfg = RollupConfig()
+    return rollup_tiers_fused(histogram(tokens_df, cfg, "minute"), cfg).filter(F.col("tier") == "1m")
+
+
 def test_gapfill_matches_oracle(spark, tokens_df, tokens_pdf):
-    tiers = rollup_cascade(tokens_df)
-    got = gapfill_linear(tiers["1m"], "1m").toPandas()
+    got = gapfill_linear(_tier_1m(tokens_df), "1m").toPandas()
     exp = gapfill_oracle(rollup_oracle(tokens_pdf, "1m"), "1m")
     assert got["is_interpolated"].any(), "datagen gaps should produce interpolated buckets"
     assert_frames_match(
@@ -19,8 +25,7 @@ def test_gapfill_matches_oracle(spark, tokens_df, tokens_pdf):
 
 
 def test_gapfill_no_extrapolation(spark, tokens_df):
-    tiers = rollup_cascade(tokens_df)
-    gf = gapfill_linear(tiers["1m"], "1m").toPandas()
+    gf = gapfill_linear(_tier_1m(tokens_df), "1m").toPandas()
     # boundaries are real rows; every interpolated row has finite values
     for src, g in gf.groupby("source"):
         g = g.sort_values("bucket_ts")

@@ -1,12 +1,15 @@
 import pandas as pd
+from pyspark.sql import functions as F
 
-from numalogic_spark.operators.rollup import rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 from numalogic_spark.sources.lakehouse import expire_tier, read_tokens, write_tier
 
 
 def test_write_read_expire_roundtrip(spark, tokens_df, tmp_path):
     path = str(tmp_path / "tiers")
-    tiers = rollup_cascade(tokens_df)
+    cfg = RollupConfig()
+    fused = rollup_tiers_fused(histogram(tokens_df, cfg, "minute"), cfg)
+    tiers = {t: fused.filter(F.col("tier") == t) for t in ("1h", "1d")}
     write_tier(tiers["1d"], path, mode="overwrite")
     write_tier(tiers["1h"], path, mode="append")
     back = spark.read.parquet(path)

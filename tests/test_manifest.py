@@ -2,17 +2,9 @@
 
 import numpy as np
 
-from numalogic_spark.operators.rollup import RollupConfig, histogram, tier_from_histogram
+from jobs.rollup_job import tier_job as _job  # per-bucket 1m rollup of the batch job
 from numalogic_spark.plans.manifest import BUCKET_COL, run_with_manifest
 from numalogic_spark.plans.skew import hot_keys, salted_repartition
-
-
-def _job(subset):
-    """Per-bucket 1m rollup through the engine cascade (extra_keys)."""
-    cfg = RollupConfig()
-    return tier_from_histogram(
-        histogram(subset, cfg, "minute", extra_keys=[BUCKET_COL]), cfg, "1m", extra_keys=[BUCKET_COL]
-    )
 
 
 def test_run_skip_resume(spark, tokens_df, tmp_path):

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jobs.refresh_job import DATE_COL, bootstrap, refresh
-from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 from tests.conftest import assert_frames_match
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,19 +29,23 @@ def _split3(tokens_df):
     )
 
 
+def _full_tier(full_df, cfg, tier):
+    """One tier derived from scratch over ``full_df``."""
+    return rollup_tiers_fused(histogram(full_df, cfg, "minute"), cfg).filter(F.col("tier") == tier)
+
+
 def _assert_state_matches(spark, state, full_df, cfg):
-    """hist == histogram(full), every tier == from-scratch cascade(full)."""
+    """hist == histogram(full), every tier == a from-scratch derive over full."""
     got_h = spark.read.parquet(f"{state}/hist").drop(DATE_COL)
     exp_h = histogram(full_df, cfg, "minute")
     assert_frames_match(
         got_h.toPandas(), exp_h.toPandas(),
         sort_cols=["source", "bucket_ts", "v"], float_cols=("v",), atol=0.0,
     )
-    full = rollup_cascade(full_df, cfg)
     for tier in ("1m", "1h", "1d"):
         got_t = spark.read.parquet(f"{state}/tier_{tier}").drop(DATE_COL)
         assert_frames_match(
-            got_t.toPandas(), full[tier].toPandas(),
+            got_t.toPandas(), _full_tier(full_df, cfg, tier).toPandas(),
             sort_cols=["source", "bucket_ts"],
             float_cols=("n_tok_mean", "n_tok_p95", "token_rate"), atol=0.0,
         )
@@ -68,6 +72,51 @@ def test_bootstrap_refresh_and_idempotent_rerun(spark, tokens_df, tmp_path):
     # a second delta stacks exactly
     refresh(spark, d2, "d2", state, cfg)
     _assert_state_matches(spark, state, tokens_df, cfg)
+
+
+def test_delta_of_a_new_source_creates_its_tiers(spark, tokens_df, tmp_path):
+    """A delta whose only source is absent from the store creates that
+    source's rows at every tier, from the delta alone, and the store
+    then equals a from-scratch derive over base + delta."""
+    cfg = RollupConfig()
+    base, d1, _ = _split3(tokens_df)
+    new_src = d1.withColumn("source", F.lit("brand_new_src"))
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+
+    out = refresh(spark, new_src, "new_src", state, cfg)
+    assert out["merged_dates"] == out["touched_dates"] > 0
+    for tier in ("1m", "1h", "1d"):
+        rows = spark.read.parquet(f"{state}/tier_{tier}").filter(F.col("source") == "brand_new_src")
+        assert rows.count() > 0, tier
+    _assert_state_matches(spark, state, base.unionByName(new_src), cfg)
+
+
+def test_empty_delta_changes_nothing(spark, tokens_df, tmp_path):
+    """An empty delta merges no date, appends no ledger row and leaves
+    every table of the store unchanged."""
+    cfg = RollupConfig()
+    base, d1, _ = _split3(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    refresh(spark, d1, "d1", state, cfg)
+
+    tables = ("hist", "tier_1m", "tier_1h", "tier_1d", "gapfill_1m", "blocks_1m", "hist_manifest")
+
+    def snapshot():
+        out = {}
+        for t in tables:
+            pdf = spark.read.parquet(f"{state}/{t}").toPandas()
+            out[t] = pdf.sort_values(list(pdf.columns), ignore_index=True)
+        return out
+
+    before = snapshot()
+    out = refresh(spark, d1.limit(0), "empty", state, cfg)
+    assert out["touched_dates"] == out["merged_dates"] == 0
+    after = snapshot()
+    for t in tables:
+        assert before[t].equals(after[t]), t
+    assert after["hist_manifest"].query("delta_id == 'empty'").empty
 
 
 def test_crash_window_resume_no_double_count(spark, tokens_df, tmp_path):
@@ -156,7 +205,7 @@ def test_state_read_partition_pruned(spark, tokens_df, tmp_path):
     cfg = RollupConfig()
     state = str(tmp_path / "state")
     bootstrap(spark, tokens_df, state, cfg)
-    from jobs.refresh_job import _read_state
+    from jobs.refresh_job import _read_state, _store_schema
 
     dates = sorted(
         r[DATE_COL]
@@ -165,7 +214,7 @@ def test_state_read_partition_pruned(spark, tokens_df, tmp_path):
         .distinct()
         .collect()
     )
-    pruned = _read_state(spark, f"{state}/hist", dates[:1])
+    pruned = _read_state(spark, f"{state}/hist", dates[:1], _store_schema("hist"))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     # the filter is IN the partition-filter clause, not a post-scan Filter
@@ -173,7 +222,7 @@ def test_state_read_partition_pruned(spark, tokens_df, tmp_path):
     assert DATE_COL in pf and "dynamicpruning" not in pf
     # a filter on a date no partition directory matches prunes to ZERO
     # files — proof the predicate executes at listing time, not scan time
-    miss = _read_state(spark, f"{state}/hist", ["1970-01-01"])
+    miss = _read_state(spark, f"{state}/hist", ["1970-01-01"], _store_schema("hist"))
     mplan = miss._jdf.queryExecution().executedPlan().toString()
     assert miss.count() == 0 and "PartitionFilters" in mplan
     assert pruned.count() > 0
@@ -230,9 +279,9 @@ def test_compaction_reduces_files_content_and_ledger_neutral(spark, tokens_df, t
 
     # a many-task promote write leaves many files per date partition —
     # replay the same content through an 8-way repartition to simulate it
-    from jobs.refresh_job import _read_state, _write_partitioned
+    from jobs.refresh_job import _read_state, _store_schema, _write_partitioned
 
-    snap = _read_state(spark, f"{state}/hist")
+    snap = _read_state(spark, f"{state}/hist", None, _store_schema("hist"))
     materialized = spark.createDataFrame(snap.toPandas(), schema=snap.schema)
     _write_partitioned(materialized.repartition(8), f"{state}/hist")
 
@@ -297,14 +346,13 @@ def test_expiry_drops_old_partitions_per_tier(spark, tokens_df, tmp_path):
 
     # surviving content is untouched: retained tier rows equal the
     # from-scratch rollup restricted to the surviving dates
-    full = rollup_cascade(multi, cfg)
     for tier in ("1m", "1h", "1d"):
         got = spark.read.parquet(f"{state}/tier_{tier}")
         kept_dates = [
             os.path.basename(p).split("=", 1)[1]
             for p in glob.glob(f"{state}/tier_{tier}/{DATE_COL}=*")
         ]
-        exp = full[tier].filter(
+        exp = _full_tier(multi, cfg, tier).filter(
             F.date_format("bucket_ts", "yyyy-MM-dd").isin(kept_dates)
         )
         assert_frames_match(
@@ -384,7 +432,7 @@ def test_gapfill_view_maintained_incrementally(spark, tokens_df, tmp_path):
     refresh(spark, d1, "d1", state, cfg)
 
     got = spark.read.parquet(f"{state}/gapfill_1m").drop(DATE_COL)
-    full_tier = rollup_cascade(multi, cfg)["1m"]
+    full_tier = _full_tier(multi, cfg, "1m")
     from jobs.refresh_job import GAP_HORIZON_S
 
     exp = gapfill_linear(full_tier, "1m", max_gap_s=GAP_HORIZON_S)
@@ -471,6 +519,21 @@ def test_tier_points_touched_counts_touched_partitions(spark, tokens_df, tmp_pat
     }
     assert out["tier_points_touched"] == want
     assert want["1d"] < spark.read.parquet(f"{state}/tier_1d").count()
+
+
+def test_bootstrap_writes_one_hist_file_per_date(spark, tokens_df, tmp_path):
+    """bootstrap() writes each hist date directory as one file, like the
+    tiers, gap-fill and blocks, so a refresh reads a date from one file."""
+    import glob
+
+    cfg = RollupConfig()
+    base, _ = _three_days(tokens_df)
+    state = str(tmp_path / "state")
+    bootstrap(spark, base, state, cfg)
+    dirs = glob.glob(f"{state}/hist/{DATE_COL}=*")
+    assert len(dirs) == 3
+    for d in dirs:
+        assert len(glob.glob(f"{d}/part-*.parquet")) == 1, d
 
 
 def test_late_delta_for_expired_date_rejected(spark, tokens_df, tmp_path):
@@ -613,7 +676,7 @@ def test_reinit_clears_expiry_log(spark, tokens_df, tmp_path):
 def test_store_reads_run_no_spark_job(spark, tokens_df, tmp_path):
     """Building a store read runs no Spark job: every table's schema is
     pinned, so nothing is inferred."""
-    from jobs.refresh_job import _read_state, read_tier
+    from jobs.refresh_job import _read_state, _store_schema, read_tier
 
     cfg = RollupConfig()
     base, d1 = _three_days(tokens_df)
@@ -632,7 +695,7 @@ def test_store_reads_run_no_spark_job(spark, tokens_df, tmp_path):
             read_tier(spark, state, table)
             read_tier(spark, state, table, dates[0], dates[-1])
             read_tier(spark, state, table, start_date=dates[1])
-        _read_state(spark, f"{state}/hist", dates[:2])
+        _read_state(spark, f"{state}/hist", dates[:2], _store_schema("hist"))
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:

@@ -1,22 +1,28 @@
-"""Rollup cascade vs pandas/numpy oracle — exact-match gate.
+"""Rollup tiers vs pandas/numpy oracle — exact-match gate.
 
 Ports the reference's aggregation semantics checks (Druid granularity
 rollup, /root/reference/tests/connectors/test_druid.py:39-140) onto the
 token table: counts/sums exact, mean = sum/count, p95 == numpy.percentile
-(linear) at EVERY tier including cascaded ones.
+(linear) at EVERY tier of the fused derive.
 """
 
 import numpy as np
+from pyspark.sql import functions as F
 
-from numalogic_spark.operators.rollup import RollupConfig, rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 from numalogic_spark.oracle import rollup_oracle
 from tests.conftest import assert_frames_match
 
 
+def _tiers(df, cfg=None):
+    cfg = cfg or RollupConfig()
+    return rollup_tiers_fused(histogram(df, cfg, "minute"), cfg)
+
+
 def test_cascade_matches_oracle(spark, tokens_df, tokens_pdf):
-    tiers = rollup_cascade(tokens_df, RollupConfig())
+    tiers = _tiers(tokens_df)
     for tier in ("1m", "1h", "1d"):
-        got = tiers[tier].toPandas()
+        got = tiers.filter(F.col("tier") == tier).toPandas()
         exp = rollup_oracle(tokens_pdf, tier)
         assert_frames_match(
             got,
@@ -29,9 +35,9 @@ def test_cascade_matches_oracle(spark, tokens_df, tokens_pdf):
 
 def test_cascade_consistency(spark, tokens_df):
     """1h re-aggregation must equal direct-from-raw 1h (lossless merge)."""
-    tiers = rollup_cascade(tokens_df)
-    t1m = tiers["1m"].toPandas()
-    t1h = tiers["1h"].toPandas()
+    tiers = _tiers(tokens_df)
+    t1m = tiers.filter(F.col("tier") == "1m").toPandas()
+    t1h = tiers.filter(F.col("tier") == "1h").toPandas()
     # count/sum at 1h == sum of 1m members
     t1m["h"] = t1m["bucket_ts"].dt.floor("h")
     agg = t1m.groupby(["source", "h"])[["count", "n_tok_sum"]].sum().reset_index()
@@ -56,39 +62,10 @@ def test_token_array_invariant(spark, tokens_df):
     assert out.count() == tokens_df.count()
 
 
-def test_fused_tiers_equal_cascade(spark, tokens_df):
-    """rollup_tiers_fused must be row-identical to the cascade's tier union
-    (same exact histogram → same exact percentiles), just computed in one
-    exchange + one window chain."""
-    import pandas as pd
-
-    from numalogic_spark.operators.rollup import histogram, rollup_tiers_fused
-
-    cfg = RollupConfig()
-    fused = rollup_tiers_fused(histogram(tokens_df, cfg, "minute"), cfg).toPandas()
-    tiers = rollup_cascade(tokens_df, cfg)
-    casc = pd.concat(
-        [tiers[t].toPandas() for t in ("1m", "1h", "1d")], ignore_index=True
-    )
-    assert_frames_match(
-        fused,
-        casc,
-        sort_cols=["tier", "source", "bucket_ts"],
-        float_cols=("n_tok_mean", "n_tok_p95", "token_rate"),
-        atol=0.0,
-    )
-
-
 def test_fingerprinted_histogram(spark, tokens_df):
     """histogram_with_fingerprint: same histogram as histogram(), and the
     derived global invariant equals a direct raw-tier aggregation."""
-    from pyspark.sql import functions as F
-
-    from numalogic_spark.operators.rollup import (
-        histogram,
-        histogram_with_fingerprint,
-        invariant_from_histogram,
-    )
+    from numalogic_spark.operators.rollup import histogram_with_fingerprint, invariant_from_histogram
 
     cfg = RollupConfig()
     hf = histogram_with_fingerprint(tokens_df, cfg, "minute")
@@ -108,129 +85,18 @@ def test_fingerprinted_histogram(spark, tokens_df):
     assert (got["fp"], got["rows"], got["tokens"]) == (exp["fp"], exp["rows"], exp["tokens"])
 
 
-# ---------------------------------------------------------------------
-# incremental continuous-aggregate refresh
-# ---------------------------------------------------------------------
-
-def _split(tokens_df):
-    """Deterministic base/delta split (~10% delta) on doc_id hash — the
-    delta is interleaved in time with the base, i.e. every delta row is
-    'late/out-of-order' relative to an already-rolled-up base."""
-    from pyspark.sql import functions as F
-
-    pred = F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 7
-    return tokens_df.filter(~pred), tokens_df.filter(pred)
-
-
-def test_refresh_tier_equals_recompute_on_touched(spark, tokens_df):
-    """refresh_tier ≡ from-scratch rollup restricted to delta-touched
-    buckets, at every tier, exactly (incl. p95) — lossless-merge identity."""
-    from numalogic_spark.operators.rollup import (
-        bucket,
-        histogram,
-        refresh_tier,
-        rollup_cascade,
-    )
-
-    cfg = RollupConfig()
-    base, delta = _split(tokens_df)
-    assert delta.count() > 0 and base.count() > 0
-    stored = histogram(base, cfg, "minute").persist()
-    dh = histogram(delta, cfg, "minute").persist()
-    full = rollup_cascade(tokens_df, cfg)
-    for tier, unit in (("1m", "minute"), ("1h", "hour"), ("1d", "day")):
-        got = refresh_tier(stored, dh, cfg, tier).toPandas()
-        touched = (
-            dh.select("source", bucket("bucket_ts", unit).alias("bucket_ts"))
-            .distinct()
-        )
-        exp = full[tier].join(touched, ["source", "bucket_ts"], "left_semi").toPandas()
-        assert len(got) > 0
-        assert_frames_match(
-            got, exp,
-            sort_cols=["source", "bucket_ts"],
-            float_cols=("n_tok_mean", "n_tok_p95", "token_rate"),
-            atol=0.0,
-        )
-    stored.unpersist(); dh.unpersist()
-
-
-def test_refresh_commit_reconstructs_full_tier(spark, tokens_df):
-    """Untouched stored tier rows + replacement rows == from-scratch tier
-    over base+delta — the dynamic-partition-overwrite commit semantics."""
-    from numalogic_spark.operators.rollup import (
-        bucket,
-        histogram,
-        refresh_tier,
-        rollup_cascade,
-        touched_coarse_buckets,
-    )
-
-    cfg = RollupConfig()
-    base, delta = _split(tokens_df)
-    stored_h = histogram(base, cfg, "minute").persist()
-    dh = histogram(delta, cfg, "minute").persist()
-    stored_tiers = rollup_cascade(base, cfg)
-    full = rollup_cascade(tokens_df, cfg)
-    for tier in ("1m", "1h", "1d"):
-        touched = touched_coarse_buckets(dh, tier)
-        untouched = stored_tiers[tier].join(
-            touched, ["source", "bucket_ts"], "left_anti"
-        )
-        committed = untouched.unionByName(refresh_tier(stored_h, dh, cfg, tier))
-        assert_frames_match(
-            committed.toPandas(), full[tier].toPandas(),
-            sort_cols=["source", "bucket_ts"],
-            float_cols=("n_tok_mean", "n_tok_p95", "token_rate"),
-            atol=0.0,
-        )
-    stored_h.unpersist(); dh.unpersist()
-
-
-def test_refresh_histogram_modes(spark, tokens_df):
-    """Full-mode refresh_histogram == histogram(base+delta); touched_only
-    returns exactly the touched minute buckets' merged rows."""
-    from numalogic_spark.operators.rollup import histogram, refresh_histogram
-
-    cfg = RollupConfig()
-    base, delta = _split(tokens_df)
-    stored = histogram(base, cfg, "minute")
-    dh = histogram(delta, cfg, "minute")
-    merged_full = refresh_histogram(stored, dh)
-    assert_frames_match(
-        merged_full.toPandas(),
-        histogram(tokens_df, cfg, "minute").toPandas(),
-        sort_cols=["source", "bucket_ts", "v"],
-        float_cols=("v",), atol=0.0,
-    )
-    touched_rows = refresh_histogram(stored, dh, touched_only=True)
-    exp = merged_full.join(
-        dh.select("source", "bucket_ts").distinct(),
-        ["source", "bucket_ts"], "left_semi",
-    )
-    assert_frames_match(
-        touched_rows.toPandas(), exp.toPandas(),
-        sort_cols=["source", "bucket_ts", "v"],
-        float_cols=("v",), atol=0.0,
-    )
-
-
-def test_refresh_new_source_and_empty_delta(spark, tokens_df):
-    """A delta introducing a brand-new source creates its buckets from the
-    delta alone; an empty delta produces zero replacement rows."""
-    from pyspark.sql import functions as F
-
-    from numalogic_spark.operators.rollup import histogram, refresh_cascade
-
-    cfg = RollupConfig()
-    base = tokens_df
-    delta = tokens_df.limit(50).withColumn("source", F.lit("brand_new_src"))
-    stored = histogram(base, cfg, "minute").persist()
-    out = refresh_cascade(stored, delta, cfg)
-    for tier in ("1m", "1h", "1d"):
-        pdf = out[tier].toPandas()
-        assert len(pdf) > 0 and (pdf["source"] == "brand_new_src").all()
-    empty = delta.filter(F.lit(False))
-    out2 = refresh_cascade(stored, empty, cfg)
-    assert all(out2[t].count() == 0 for t in ("h1m", "1m", "1h", "1d"))
-    stored.unpersist()
+def test_tier_filter_sits_below_first_exchange(spark, tokens_df):
+    """A ``tier`` filter on the fused derive is pushed right onto the
+    explode, below the fused aggregate's first Exchange: a single-tier
+    caller shuffles and aggregates only its own tier's rows."""
+    t1m = _tiers(tokens_df).filter(F.col("tier") == "1m")
+    lines = t1m._jdf.queryExecution().executedPlan().toString().splitlines()
+    tier_exchanges = [
+        i for i, line in enumerate(lines)
+        if "Exchange hashpartitioning(" in line and "tier#" in line
+    ]
+    filters = [i for i, line in enumerate(lines) if "Filter" in line and "tier = 1m" in line]
+    assert tier_exchanges and len(filters) == 1, "\n".join(lines)
+    # the plan is one chain, so a deeper node prints on a later line
+    assert filters[0] > max(tier_exchanges), "\n".join(lines)
+    assert "Generate explode(" in lines[filters[0] + 1], "\n".join(lines)

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from numalogic_spark.datagen import TOKEN_SCHEMA, gen_tokens_pandas
-from numalogic_spark.operators.rollup import RollupConfig, rollup_cascade
+from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 from numalogic_spark.streaming.rollup_stream import streaming_ewm, streaming_rollup
 
 
@@ -39,8 +39,10 @@ def test_streaming_rollup_matches_batch(spark, stream_dir):
     got = spark.sql("select * from roll1m").toPandas().sort_values(["source", "bucket_ts"], ignore_index=True)
 
     batch_df = spark.createDataFrame(pdf, TOKEN_SCHEMA)
+    cfg = RollupConfig()
     exp = (
-        rollup_cascade(batch_df)["1m"]
+        rollup_tiers_fused(histogram(batch_df, cfg, "minute"), cfg)
+        .filter("tier = '1m'")
         .toPandas()
         .sort_values(["source", "bucket_ts"], ignore_index=True)
     )

@@ -8,10 +8,13 @@ broadcast joins for fitted stats, and whole-stage codegen coverage.
 from __future__ import annotations
 
 import io
+import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -20,8 +23,8 @@ from numalogic_spark.functions.scalers import fit_stddev_threshold, score_thresh
 from numalogic_spark.operators.gapfill import gapfill_linear
 from numalogic_spark.operators.rollup import (
     RollupConfig,
+    histogram,
     histogram_with_fingerprint,
-    rollup_cascade,
     rollup_tiers_fused,
 )
 from numalogic_spark.session import get_spark
@@ -36,15 +39,16 @@ def grab(df) -> str:
 
 def main() -> None:
     spark = get_spark("plans", cores=2, shuffle_partitions=4)
-    path = "/tmp/plans_tokens.parquet"
+    tmp = tempfile.TemporaryDirectory()
+    path = os.path.join(tmp.name, "plans_tokens.parquet")
     gen_tokens_spark(spark, 2_000, n_sources=5).write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path)
 
     sections = []
-    tiers = rollup_cascade(df, RollupConfig())
-    sections.append(("rollup tier 1m (from one raw scan; NOTE ReadSchema has no `tokens` column — pruned)", grab(tiers["1m"])))
-    sections.append(("rollup tier 1d (cascaded histogram merge — no second raw scan)", grab(tiers["1d"])))
-    sections.append(("gap-fill 1m (ONE exchange+sort: lead() neighbors, sequence-exploded gap rows)", grab(gapfill_linear(tiers["1m"], "1m"))))
+    cfg = RollupConfig()
+    t1m = rollup_tiers_fused(histogram(df, cfg, "minute"), cfg).filter(F.col("tier") == "1m")
+    sections.append(("rollup tier 1m (the fused derive filtered on `tier`: the Filter sits right after the Generate, below the aggregate's Exchange; ReadSchema has no `tokens` column — pruned)", grab(t1m)))
+    sections.append(("gap-fill 1m (ONE exchange+sort: lead() neighbors, sequence-exploded gap rows)", grab(gapfill_linear(t1m, "1m"))))
     fused = rollup_tiers_fused(histogram_with_fingerprint(df, RollupConfig(), "minute"), RollupConfig())
     sections.append(("fused all-tier rollup (invariant fingerprint in the same scan; one window chain for 1m/1h/1d)", grab(fused)))
 
@@ -180,13 +184,14 @@ def main() -> None:
         grab(quantile_transform(ev.select("source", "event_id", "value"), "value", ("source",))),
     ))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("# Physical plans of key operators (`.explain(\"formatted\")`)\n\n")
         f.write("Generated by tools/explain_plans.py on the synthetic token table.\n")
         for title, text in sections:
             f.write(f"\n## {title}\n\n```\n{text}\n```\n")
     print("wrote PLANS.md")
     spark.stop()
+    tmp.cleanup()
 
 
 if __name__ == "__main__":
