@@ -875,53 +875,6 @@ FROM p WHERE inter * 1.0 / (na + nb - inter) >= 0.2
 """
 
 
-def _q_cosine_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.similarity import score_all
-
-    embs = _embs(spark, sf_dir)
-    q = embs.filter("vec_id = 0").select("embedding").collect()[0][0]
-    out = score_all(embs, [float(x) for x in q])
-    return out.select("id", _r6("cos_sim").alias("cos_sim"))
-
-
-_COSINE_SQL = """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id AS id,
-       floor((list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) * 1000000 + 0.5) / 1000000.0 AS cos_sim
-FROM embeddings e, q
-"""
-
-
-def _q_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding outlier signal: cosine of each vector to its label
-    centroid."""
-    from numalogic_spark.operators.similarity import centroid_cosine
-
-    out = centroid_cosine(_embs(spark, sf_dir))
-    return out.select(
-        "vec_id", "label", _r6(F.col("cos_to_centroid")).alias("cos_to_centroid")
-    )
-
-
-_CENTROID_COSINE_SQL = """
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-pos AS (
-  -- decimal sum (exact, order-independent) before the double divide —
-  -- mirrors the engine's deterministic centroid arithmetic
-  SELECT label, t.i,
-         CAST(sum(CAST(v[t.i] AS DECIMAL(27,12))) AS DOUBLE) / count(*) AS c
-  FROM e, unnest(generate_series(1, 64)) AS t(i)
-  GROUP BY 1, 2
-), cent AS (
-  SELECT label, list(c ORDER BY i) AS cent FROM pos GROUP BY 1
-)
-SELECT e.vec_id, e.label,
-       floor(list_cosine_similarity(e.v, cent.cent) * 1000000 + 0.5) / 1000000.0
-         AS cos_to_centroid
-FROM e JOIN cent USING (label)
-"""
-
-
 def _q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from numalogic_spark.operators.dedup import embedding_near_pairs
 
@@ -934,117 +887,6 @@ SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        floor((list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])) * 1000000 + 0.5) / 1000000.0 AS cos_sim
 FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-"""
-
-
-def _q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 30% sample — reproducible keep/drop per row via the
-    portable hash, replayed exactly by the oracle."""
-    from numalogic_spark.operators.sampling import deterministic_sample
-
-    return deterministic_sample(_docs(spark, sf_dir), 0.3).select("doc_id", "source")
-
-
-def _sample_sql(rate: float = 0.3) -> str:
-    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
-
-    p = MERSENNE31
-    fold = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(generate_series(1, greatest(length(s), 1)), "
-        f"i -> CAST(ascii(s[i]) AS BIGINT))), (acc, c) -> (acc * {_CHAR_MULT} + c) % {p})"
-    )
-    return f"""
-WITH d AS (SELECT doc_id, source, CAST(doc_id AS VARCHAR) AS s FROM documents)
-SELECT doc_id, source
-FROM d
-WHERE (({_SAMPLE_A} * ({fold}) + {_SAMPLE_B}) % {p}) / {float(p)} < {rate}
-"""
-
-
-def _q_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixing plan: src0..src9 at weight 3, src10..src19 at weight
-    1, 10k-token budget over whitespace word counts."""
-    from numalogic_spark.operators.sampling import mixture_plan
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        F.size(F.array_remove(F.split(F.lower("text"), r"\s+"), "")).alias("n_tok"),
-    )
-    weights = {f"src{i}": (3.0 if i < 10 else 1.0) for i in range(20)}
-    plan = mixture_plan(docs, weights, 10_000)
-    return plan.select(
-        "source",
-        "n_tok_total",
-        _r6(F.col("weight")).alias("weight"),
-        _r6(F.col("target_tokens")).alias("target_tokens"),
-        _r6(F.col("rate")).alias("rate"),
-        _r6(F.col("expected_tokens")).alias("expected_tokens"),
-        _r6(F.col("shortfall")).alias("shortfall"),
-    )
-
-
-_MIXTURE_SQL = r"""
-WITH wt(source, weight) AS (
-  -- the engine's weight DICT seeded verbatim (mirrors mixture_plan's
-  -- left-join-from-weights): a weighted source absent from the data must
-  -- surface with n_tok_total 0 / rate 0 / full-target shortfall
-  SELECT 'src' || CAST(i AS VARCHAR),
-         (CASE WHEN i < 10 THEN 3.0 ELSE 1.0 END) / 40.0
-  FROM (SELECT unnest(generate_series(0, 19)) AS i)
-), d AS (
-  SELECT source,
-         len(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')) AS n_tok
-  FROM documents
-), per_src AS (
-  SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tok_total FROM d GROUP BY 1
-), w AS (
-  SELECT wt.source, coalesce(per_src.n_tok_total, 0) AS n_tok_total, wt.weight
-  FROM wt LEFT JOIN per_src USING (source)
-), m AS (
-  SELECT source, n_tok_total, weight,
-         weight * 10000.0 AS target_tokens,
-         CASE WHEN n_tok_total > 0
-              THEN least(1.0, weight * 10000.0 / n_tok_total)
-              ELSE 0.0 END AS rate
-  FROM w
-)
-SELECT source, n_tok_total,
-       floor(weight * 1000000 + 0.5) / 1000000.0 AS weight,
-       floor(target_tokens * 1000000 + 0.5) / 1000000.0 AS target_tokens,
-       floor(rate * 1000000 + 0.5) / 1000000.0 AS rate,
-       floor(rate * n_tok_total * 1000000 + 0.5) / 1000000.0 AS expected_tokens,
-       floor(greatest(target_tokens - n_tok_total, 0.0) * 1000000 + 0.5) / 1000000.0 AS shortfall
-FROM m
-"""
-
-
-def _q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training shuffle: shard + within-shard order from the
-    portable hash of doc_id."""
-    from numalogic_spark.operators.sampling import training_order
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    return training_order(docs, 4, ["doc_id"])
-
-
-def _training_order_sql(n_shards: int = 4) -> str:
-    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
-
-    p = MERSENNE31
-    fold = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(generate_series(1, greatest(length(s), 1)), "
-        f"i -> CAST(ascii(s[i]) AS BIGINT))), (acc, c) -> (acc * {_CHAR_MULT} + c) % {p})"
-    )
-    return f"""
-WITH d AS (SELECT doc_id, source, CAST(doc_id AS VARCHAR) AS s FROM documents),
-h AS (SELECT doc_id, source, ({_SAMPLE_A} * ({fold}) + {_SAMPLE_B}) % {p} AS oh FROM d)
-SELECT doc_id, source,
-       CAST(oh % {n_shards} AS INTEGER) AS shard,
-       CAST(row_number() OVER (PARTITION BY oh % {n_shards} ORDER BY oh, doc_id) - 1 AS INTEGER) AS ord
-FROM h
 """
 
 
@@ -1274,216 +1116,6 @@ SELECT DISTINCT a.id AS id_a, b.id AS id_b,
        CAST(bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) AS BIGINT) AS hamming
 FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.cv = b.cv AND a.id < b.id
 WHERE bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) <= {max_hamming}
-"""
-
-
-def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.similarity import lsh_bucketed_ann
-
-    embs = _embs(spark, sf_dir)
-    q = embs.filter("vec_id = 0").select("embedding").collect()[0][0]
-    out = lsh_bucketed_ann(embs, [float(x) for x in q], k=10, multiprobe_hamming=2)
-    return out.select("id", _r6("cos_sim").alias("cos_sim"))
-
-
-def _ann_sql(k: int = 10, n_planes: int = 8, seed: int = 42, dim: int = 64, hamming: int = 2) -> str:
-    """DuckDB replay of the SRP-bucketed ANN probe: the seeded plane matrix
-    is embedded as literals (repr round-trips doubles exactly), buckets are
-    sign-bit sums, and the multiprobe set 'all buckets within hamming≤2 of
-    the query bucket' becomes a bit_count(xor) filter. dim is fixed by the
-    embeddings testdata (TESTDATA.md)."""
-    from numalogic_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    def lit(vec) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in vec) + "]::DOUBLE[]"
-
-    def bucket(vcol: str) -> str:
-        terms = [
-            f"(CASE WHEN list_dot_product({vcol}, {lit(p)}) >= 0.0 THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        ]
-        return "(" + "\n     + ".join(terms) + ")"
-
-    return f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-), qb AS (
-  SELECT qv, {bucket("qv")} AS qbucket FROM q
-), b AS (
-  SELECT e.vec_id AS id, e.embedding::DOUBLE[] AS v,
-         {bucket("e.embedding::DOUBLE[]")} AS bucket
-  FROM embeddings e
-), cand AS (
-  SELECT b.id, b.v, qb.qv
-  FROM b, qb
-  WHERE bit_count(xor(CAST(b.bucket AS BIGINT), CAST(qb.qbucket AS BIGINT))) <= {hamming}
-)
-SELECT id, floor(list_cosine_similarity(v, qv) * 1000000 + 0.5) / 1000000.0 AS cos_sim
-FROM cand
-ORDER BY list_cosine_similarity(v, qv) DESC, id
-LIMIT {k}
-"""
-
-
-def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: seeded k-means codebook + nprobe list probing (the scale
-    path where lists are table partitions). Rows-only; recall vs brute
-    force pytest-gated."""
-    from numalogic_spark.operators.similarity import ivf_ann_topk, ivf_train_centroids
-
-    embs = _embs(spark, sf_dir)
-    q = embs.filter("vec_id = 0").select("embedding").collect()[0][0]
-    # portable sample order → the oracle generator replays the exact
-    # training (shared kmeans_fit) and embeds the codebook as literals
-    cents = ivf_train_centroids(
-        embs, n_centroids=8, sample_rows=2000, seed=42, portable_order_id="vec_id"
-    )
-    out = ivf_ann_topk(embs, [float(x) for x in q], cents, k=10, nprobe=4)
-    return out.select("id", _r6("cos_sim").alias("cos_sim"))
-
-
-def _ivf_sql() -> str:
-    """DuckDB replay of the IVF probe: reproduce the SAME codebook by
-    replaying the portable-hash sample order and the shared numpy
-    kmeans_fit over the sf0.01 embeddings (the driver's oracle scale),
-    then express assignment (first-max argmax over the centroid dots),
-    nprobe filtering, and the cosine top-k in SQL with literal centroids."""
-    import numpy as np
-
-    nprobe, k = 4, 10
-    cents, rel = _semdedup_replay_codebook()
-    qv = np.asarray(
-        [r[1] for r in rel if r[0] == 0][0], dtype=float
-    )
-    qn = qv / np.linalg.norm(qv)
-    probes = np.argsort(-(cents @ qn), kind="stable")[:nprobe].tolist()
-    cent_lits = ", ".join(
-        "[" + ", ".join(repr(float(c)) for c in row) + "]::DOUBLE[]" for row in cents
-    )
-    dots = ", ".join(
-        f"list_inner_product(v, c{i}) AS d{i}" for i in range(len(cents))
-    )
-    c_cols = ", ".join(f"cent[{i + 1}] AS c{i}" for i in range(len(cents)))
-    best = "greatest(" + ", ".join(f"d{i}" for i in range(len(cents))) + ")"
-    assign = (
-        "CASE "
-        + " ".join(f"WHEN d{i} = {best} THEN {i}" for i in range(len(cents)))
-        + " END"
-    )
-    q_lit = "[" + ", ".join(repr(float(v)) for v in qv) + "]::DOUBLE[]"
-    return f"""
-WITH cents AS (SELECT [{cent_lits}] AS cent),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-cc AS (SELECT e.vec_id, e.v, {c_cols} FROM e, cents),
-d AS (SELECT vec_id, v, {dots} FROM cc),
-a AS (SELECT vec_id, v, {assign} AS _list FROM d)
-SELECT vec_id AS id,
-       floor(list_cosine_similarity(v, {q_lit}) * 1000000 + 0.5) / 1000000.0 AS cos_sim
-FROM a WHERE _list IN ({", ".join(str(int(p)) for p in probes)})
-ORDER BY list_cosine_similarity(v, {q_lit}) DESC, vec_id
-LIMIT {k}
-"""
-
-
-def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic pruning (Abbas et al. 2023): k-means cluster the
-    embeddings (same seeded codebook as the IVF query), prune within-cluster
-    near-duplicates keeping the member least similar to its centroid.
-    Oracle replays the codebook as literals (the IVF/MCD discipline)."""
-    from numalogic_spark.operators.dedup import semdedup_prune
-    from numalogic_spark.operators.similarity import ivf_train_centroids
-
-    embs = _embs(spark, sf_dir)
-    cents = ivf_train_centroids(
-        embs, n_centroids=8, sample_rows=2000, seed=42, portable_order_id="vec_id"
-    )
-    # 0.35 prunes ~19% of the synthetic fixture (its hash-derived vectors
-    # have much lower pairwise cosine than real text embeddings — within-
-    # cluster median 0.06 / max 0.51 — so the paper's 0.9-ish eps would be
-    # a no-op here); real corpora tune eps to the target prune rate
-    out = semdedup_prune(embs, cents, threshold=0.35)
-    return out.select(
-        "id", "cluster", _r6("cos_to_centroid").alias("cos_to_centroid"), "kept"
-    )
-
-
-def _semdedup_replay_codebook():
-    """THE shared codebook replay (used by _ivf_sql AND _semdedup_sql so
-    the two oracles can never desynchronize from each other): reproduce
-    the Spark-side ivf_train_centroids(n_centroids=8, sample_rows=2000,
-    seed=42, portable_order_id="vec_id") outside Spark — portable-hash
-    sample order, zero-norm drop, shared numpy kmeans_fit — over the
-    sf0.01 fixture (the driver's oracle scale). Returns (centroids, the
-    raw non-null (vec_id, embedding) rows) so callers needing specific
-    vectors (the IVF query vector) reuse the same read."""
-    import duckdb
-    import numpy as np
-
-    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
-    from numalogic_spark.operators.similarity import kmeans_fit
-
-    seed, n_centroids, sample_rows = 42, 8, 2000
-    rel = duckdb.sql(
-        "SELECT vec_id, embedding FROM '/root/testdata/sf0.01/embeddings.parquet' "
-        "WHERE embedding IS NOT NULL"
-    ).fetchall()
-
-    def unit(vid: int) -> float:
-        acc = seed % MERSENNE31
-        for ch in str(vid):
-            acc = (acc * _CHAR_MULT + ord(ch)) % MERSENNE31
-        return ((_SAMPLE_A * acc + _SAMPLE_B) % MERSENNE31) / MERSENNE31
-
-    ordered = sorted(rel, key=lambda r: (unit(r[0]), r[0]))[:sample_rows]
-    x = [np.asarray(r[1], dtype=float) for r in ordered]
-    x = [v for v in x if np.linalg.norm(v) > 0]
-    return kmeans_fit(np.asarray(x), n_centroids, iters=10, seed=seed), rel
-
-
-def _semdedup_sql() -> str:
-    """DuckDB replay of the SemDeDup decision: literal codebook →
-    first-max assignment + cosine-to-centroid → per-cluster rank →
-    rank-triangle near-dup join → kept = never dominated."""
-    cents, _ = _semdedup_replay_codebook()
-    n = len(cents)
-    dots = ", ".join(
-        "list_inner_product(v, ["
-        + ", ".join(repr(float(c)) for c in row)
-        + "]::DOUBLE[]) AS d" + str(i)
-        for i, row in enumerate(cents)
-    )
-    best = "greatest(" + ", ".join(f"d{i}" for i in range(n)) + ")"
-    assign = (
-        "CASE "
-        + " ".join(f"WHEN d{i} = {best} THEN {i}" for i in range(n))
-        + " END"
-    )
-    # degenerate-row contract mirrors semdedup_prune: NULL embeddings,
-    # embeddings with a null element, and zero-norm embeddings are
-    # excluded (no direction in cosine space; their NULL/NaN semantics
-    # diverge between engines). Pair test divides the inner product by
-    # per-row norms, the exact arithmetic the engine runs.
-    return f"""
-WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            WHERE embedding IS NOT NULL
-              AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-e AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nrm FROM e0
-      WHERE list_inner_product(v, v) > 0),
-d AS (SELECT vec_id, v, nrm, {dots} FROM e),
-a AS (SELECT vec_id, v, nrm, {assign} AS cluster,
-             {best} / nrm AS cos_c FROM d),
-r AS (SELECT vec_id, v, nrm, cluster, cos_c,
-             row_number() OVER (PARTITION BY cluster ORDER BY cos_c ASC, vec_id ASC) AS rn
-      FROM a),
-p AS (SELECT DISTINCT b.vec_id AS id
-      FROM r a JOIN r b ON a.cluster = b.cluster AND a.rn < b.rn
-      WHERE list_inner_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.35)
-SELECT r.vec_id AS id, r.cluster,
-       floor(r.cos_c * 1000000 + 0.5) / 1000000.0 AS cos_to_centroid,
-       (p.id IS NULL) AS kept
-FROM r LEFT JOIN p ON r.vec_id = p.id
 """
 
 
@@ -1838,70 +1470,6 @@ SELECT d.source, d.bucket_s, d.val,
        floor(s.seasonal * 1000000 + 0.5) / 1000000.0 AS seasonal,
        floor((d.val - d.trend - s.seasonal) * 1000000 + 0.5) / 1000000.0 AS remainder
 FROM det d JOIN seas s USING (source, phase)
-"""
-
-
-_PCA_K, _PCA_SAMPLE, _PCA_SEED = 4, 2000, 42
-
-
-def _q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA projection of every embedding onto components fitted on a
-    deterministic portable-hash sample (driver-bounded fit, literal
-    components, one JVM fold per PC — the IVF-codebook discipline)."""
-    from numalogic_spark.operators.similarity import pca_project, pca_train
-
-    embs = _embs(spark, sf_dir)
-    comps, mu, _ = pca_train(
-        embs, k=_PCA_K, sample_rows=_PCA_SAMPLE, seed=_PCA_SEED
-    )
-    out = pca_project(embs, comps, mu)
-    return out.select(
-        "vec_id", "label",
-        *[_r6(f"pc{j}").alias(f"pc{j}") for j in range(1, _PCA_K + 1)],
-    )
-
-
-def _pca_sql() -> str:
-    """Replays the exact fit (portable sample order + shared
-    pca_fit_numpy) over the sf0.01 fixture, then projects in SQL with
-    literal components — list_sum is an in-order fold, matching the
-    engine's zip_with/aggregate exactly."""
-    import duckdb
-    import numpy as np
-
-    from numalogic_spark.functions.exprs import _CHAR_MULT, _SAMPLE_A, _SAMPLE_B, MERSENNE31
-    from numalogic_spark.operators.similarity import pca_fit_numpy
-
-    rel = duckdb.sql(
-        "SELECT vec_id, embedding FROM '/root/testdata/sf0.01/embeddings.parquet' "
-        "WHERE embedding IS NOT NULL"
-    ).fetchall()
-
-    def unit(vid: int) -> float:
-        acc = _PCA_SEED % MERSENNE31
-        for ch in str(vid):
-            acc = (acc * _CHAR_MULT + ord(ch)) % MERSENNE31
-        return ((_SAMPLE_A * acc + _SAMPLE_B) % MERSENNE31) / MERSENNE31
-
-    ordered = sorted(rel, key=lambda r: (unit(r[0]), r[0]))[:_PCA_SAMPLE]
-    x = np.asarray([list(r[1]) for r in ordered], dtype=float)
-    comps, mu, _ = pca_fit_numpy(x, _PCA_K)
-    d = comps.shape[1]
-    cols = []
-    for j, w in enumerate(comps, start=1):
-        bias = 0.0
-        for a, b in zip(mu, w):
-            bias += a * b
-        wlit = "[" + ", ".join(repr(float(v)) for v in w) + "]::DOUBLE[]"
-        cols.append(
-            f"floor((list_sum(list_transform(generate_series(1, {d}), "
-            f"i -> v[i] * ({wlit})[i])) - {bias!r}) * 1000000 + 0.5) / 1000000.0 AS pc{j}"
-        )
-    col_block = ",\n       ".join(cols)
-    return f"""
-SELECT vec_id, label,
-       {col_block}
-FROM (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
 """
 
 
@@ -2535,7 +2103,7 @@ def _q_robust_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _robust_mahalanobis_sql() -> str:
     """Replay the deterministic MCD fit per event_type on the driver's
-    oracle-scale data (sf0.01, like _ivf_sql) with the SAME numpy function
+    oracle-scale data (sf0.01) with the SAME numpy function
     the Spark kernel runs, then score in SQL with the fitted stats as
     literals — the i-major term order matches score_robust_mahalanobis
     exactly, so the doubles are bit-identical."""
@@ -3323,58 +2891,6 @@ FROM pb GROUP BY 1
 """
 
 
-_DSIR_VOCAB = 2000
-
-
-def _q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights: unigram log p_target − log p_raw per doc
-    with target = English docs (operators/sampling.dsir_importance);
-    6dp-quantized log-ratios + decimal sums keep scores engine-exact."""
-    from numalogic_spark.operators.sampling import dsir_importance
-
-    return dsir_importance(
-        _docs(spark, sf_dir), F.col("lang") == "en", max_vocab=_DSIR_VOCAB
-    )
-
-
-def _dsir_sql(v: int = _DSIR_VOCAB) -> str:
-    return rf"""
-WITH w AS (
-  SELECT doc_id, (lang = 'en') AS is_t,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ws
-  FROM documents
-), tok AS (
-  SELECT doc_id, is_t, t.w AS word FROM w, unnest(w.ws) AS t(w)
-), wc AS (
-  SELECT word, count(*) AS raw_c,
-         sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS tgt_c
-  FROM tok GROUP BY 1
-), vocab AS (
-  SELECT word, raw_c, tgt_c FROM wc ORDER BY raw_c DESC, word LIMIT {v}
-), vs AS (SELECT count(*) AS vv FROM vocab),
-tot AS (SELECT sum(raw_c) AS t_raw, sum(tgt_c) AS t_tgt FROM vocab),
-lr AS (
-  SELECT word,
-    CAST(floor(ln((tgt_c + 1.0) / (t_tgt + 1.0 * (vv + 1))) * 1000000 + 0.5) / 1000000.0
-       - floor(ln((raw_c + 1.0) / (t_raw + 1.0 * (vv + 1))) * 1000000 + 0.5) / 1000000.0
-       AS DECIMAL(28,6)) AS lr
-  FROM vocab, tot, vs
-), unk AS (
-  SELECT CAST(floor(ln(1.0 / (t_tgt + 1.0 * (vv + 1))) * 1000000 + 0.5) / 1000000.0
-            - floor(ln(1.0 / (t_raw + 1.0 * (vv + 1))) * 1000000 + 0.5) / 1000000.0
-            AS DECIMAL(28,6)) AS lr_unk
-  FROM tot, vs
-), sc AS (
-  SELECT tok.doc_id, count(*) AS n_tokens,
-         sum(coalesce(lr.lr, (SELECT lr_unk FROM unk))) AS lw
-  FROM tok LEFT JOIN lr USING (word) GROUP BY 1
-)
-SELECT w.doc_id, CAST(coalesce(sc.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(sc.lw, CAST(0 AS DECIMAL(28,6))) AS DOUBLE) AS log_weight
-FROM w LEFT JOIN sc USING (doc_id)
-"""
-
-
 def _q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: every event matched to the mean of the last
     COMPLETED hour of its series (stat stamped at bucket end — the
@@ -3951,8 +3467,8 @@ FROM ee
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # The correctness gate checks list(queries())[:50] against oracle_sql().
-        # Every entry has an oracle; the four that replay a fit over the
-        # sf0.01 fixture fall back to rows-only where it is missing (see
+        # Every entry has an oracle; the one that replays a fit over the
+        # sf0.01 fixture falls back to rows-only where it is missing (see
         # oracle_sql). Keep the order stable.
         "acf_events": _q_acf,
         "cusum_changepoint_events": _q_cusum,
@@ -3965,7 +3481,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "psi_drift_events": _q_psi_drift,
         "dominant_period_events": _q_dominant_period,
         "kalman_level_1h_events": _q_kalman,
-        "pca_project_embeddings": _q_pca_project,
         "series_summary_events": _q_series_summary,
         "trend_slope_events": _q_trend_slope,
         "seasonal_anomalies_events": _q_seasonal_anomalies,
@@ -3978,7 +3493,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lttb_downsample_events": _q_lttb,
         "histogram_quantile_events": _q_hist_quantile,
         "asof_join_events": _q_asof,
-        "dsir_weights_documents": _q_dsir,
         "hll_distinct_events": _q_hll,
         "sessionize_events": _q_sessionize,
         "hll_tier_cascade_events": _q_hll_cascade,
@@ -4007,18 +3521,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compressed_rollup_roundtrip": _q_compress_roundtrip,
         "dedup_exact_documents": _q_dedup_exact,
         "dedup_jaccard_documents": _q_dedup_jaccard,
-        "embedding_cosine_scores": _q_cosine_scores,
-        "centroid_cosine_embeddings": _q_centroid_cosine,
         "embedding_near_pairs": _q_embedding_pairs,
-        "semdedup_prune_embeddings": _q_semdedup,
         "ngram_contamination_documents": _q_contamination,
-        "stratified_sample_documents": _q_sample,
-        "training_order_documents": _q_training_order,
-        "mixture_plan_documents": _q_mixture,
         "minhash_near_dup_documents": _q_minhash,
         "simhash_near_dup_documents": _q_simhash,
-        "ann_topk_embeddings": _q_ann_topk,
-        "ivf_ann_topk_embeddings": _q_ivf_topk,
         "score_pipeline_events": _q_score_pipeline,
         "pivot_metrics_1m": _q_pivot,
         "train_val_split_events": _q_train_val_split,
@@ -4055,13 +3561,8 @@ def oracle_sql() -> dict[str, str]:
         "compressed_rollup_roundtrip": _COMPRESS_SQL,
         "dedup_exact_documents": _DEDUP_EXACT_SQL,
         "dedup_jaccard_documents": _DEDUP_JACCARD_SQL,
-        "embedding_cosine_scores": _COSINE_SQL,
-        "centroid_cosine_embeddings": _CENTROID_COSINE_SQL,
         "embedding_near_pairs": _EMB_PAIRS_SQL,
         "ngram_contamination_documents": _contamination_sql(),
-        "stratified_sample_documents": _sample_sql(),
-        "training_order_documents": _training_order_sql(),
-        "mixture_plan_documents": _MIXTURE_SQL,
         "score_pipeline_events": _score_pipeline_sql(),
         "pivot_metrics_1m": _PIVOT_SQL,
         "train_val_split_events": _SPLIT_SQL,
@@ -4079,7 +3580,6 @@ def oracle_sql() -> dict[str, str]:
         "backtest_events": _backtest_sql(),
         "prometheus_frame_events": _prom_frame_sql(),
         "dedup_clusters_documents": _dedup_clusters_sql(),
-        "ann_topk_embeddings": _ann_sql(),
         "acf_events": _acf_sql(),
         "cusum_changepoint_events": _cusum_sql(),
         "hampel_filter_events": _hampel_sql(),
@@ -4103,7 +3603,6 @@ def oracle_sql() -> dict[str, str]:
         "lttb_downsample_events": _lttb_sql(),
         "histogram_quantile_events": _hist_quantile_sql(),
         "asof_join_events": _ASOF_SQL,
-        "dsir_weights_documents": _dsir_sql(),
         "hll_distinct_events": _hll_sql_builder(),
         "sessionize_events": _SESSIONIZE_SQL,
         "hll_tier_cascade_events": _hll_cascade_sql(),
@@ -4116,31 +3615,14 @@ def oracle_sql() -> dict[str, str]:
         "transformer_ae_inference_events": _transformer_ae_sql(),
         "vae_inference_events": _vae_sql(),
     }
-    # The ivf oracle is generated by REPLAYING the codebook training over
-    # the driver's comparison-scale data (sf0.01 per the driver contract —
-    # it is the one oracle that is data-dependent, valid only at that
-    # scale). If the fixture is unavailable (different machine/layout),
-    # fall back to rows-only rather than failing EVERY oracle.
-    try:
-        out["ivf_ann_topk_embeddings"] = _ivf_sql()
-    except Exception:
-        pass
-    # Same discipline: the robust-Mahalanobis oracle replays the MCD fit
-    # over the sf0.01 fixture and embeds the fitted stats as literals.
+    # The robust-Mahalanobis oracle is generated by REPLAYING the MCD fit
+    # over the driver's comparison-scale data (sf0.01 per the driver
+    # contract) and embeds the fitted stats as literals — the one oracle
+    # that is data-dependent, valid only at that scale. If the fixture is
+    # unavailable (different machine/layout), fall back to rows-only
+    # rather than failing EVERY oracle.
     try:
         out["robust_mahalanobis_events"] = _robust_mahalanobis_sql()
-    except Exception:
-        pass
-    # PCA: the oracle generator replays the portable-hash sample + shared
-    # numpy fit (pca_fit_numpy) and embeds components/biases as literals.
-    try:
-        out["pca_project_embeddings"] = _pca_sql()
-    except Exception:
-        pass
-    # SemDeDup: codebook replayed over the sf0.01 fixture (same
-    # data-dependent-oracle caveat as IVF/MCD/PCA above).
-    try:
-        out["semdedup_prune_embeddings"] = _semdedup_sql()
     except Exception:
         pass
     return out

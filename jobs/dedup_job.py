@@ -6,17 +6,12 @@ Usage:
     spark-submit --master local[8] \
         --py-files dist/numalogic_spark.zip \
         jobs/dedup_job.py --input <documents path> --output <kept path> \
-        [--clusters <clusters path>] [--threshold 0.8] \
-        [--embeddings <embeddings path> --semantic-threshold 0.95 \
-         --centroids 64 --emb-id-col doc_id]
+        [--clusters <clusters path>] [--threshold 0.8]
 
 Pipeline: exact dedup (hash-groupBy keeper) → MinHash-LSH near-dup pairs →
-connected-component clusters → keep one canonical doc per cluster →
-(optional) SemDeDup semantic prune over an embeddings table keyed by the
-document id (`--emb-id-col`; Abbas et al. 2023 — k-means cluster-scoped
-cosine near-dup removal keeping the member least similar to its
-centroid). Writes the kept corpus and (optionally) the (id, cluster_id)
-table; prints a one-line JSON summary.
+connected-component clusters → keep one canonical doc per cluster.
+Writes the kept corpus and (optionally) the (id, cluster_id) table;
+prints a one-line JSON summary.
 
 Dedup is a GLOBAL decision (a pair can straddle any two input splits), so
 unlike the rollup job it does not run under the bucket-granular manifest —
@@ -50,13 +45,6 @@ def main() -> None:
     ap.add_argument("--threshold", type=float, default=0.8)
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
-    ap.add_argument("--embeddings", default=None,
-                    help="optional embeddings table for the SemDeDup stage")
-    ap.add_argument("--emb-id-col", default=None,
-                    help="doc-id column in the embeddings table (default: --id-col)")
-    ap.add_argument("--emb-col", default="embedding")
-    ap.add_argument("--semantic-threshold", type=float, default=0.95)
-    ap.add_argument("--centroids", type=int, default=64)
     args = ap.parse_args()
 
     spark = get_spark("dedup_job")
@@ -77,28 +65,6 @@ def main() -> None:
             clusters.write.mode("overwrite").parquet(args.clusters)
         losers = clusters.filter("id != cluster_id").selectExpr(f"id AS {args.id_col}")
         kept = exact_kept.join(losers, args.id_col, "left_anti")
-        sem_dropped = 0
-        if args.embeddings:
-            from numalogic_spark.operators.dedup import semdedup_prune
-            from numalogic_spark.operators.similarity import ivf_train_centroids
-
-            emb_id = args.emb_id_col or args.id_col
-            embs = spark.read.parquet(args.embeddings)
-            cents = ivf_train_centroids(
-                embs, n_centroids=args.centroids, vec_col=args.emb_col,
-                portable_order_id=emb_id,
-            )
-            pruned_ids = (
-                semdedup_prune(
-                    embs, cents, vec_col=args.emb_col, id_col=emb_id,
-                    threshold=args.semantic_threshold,
-                )
-                .filter("NOT kept")
-                .selectExpr(f"id AS {args.id_col}")
-            )
-            before = kept.count()
-            kept = kept.join(pruned_ids, args.id_col, "left_anti")
-            sem_dropped = before - kept.count()
         kept.write.mode("overwrite").parquet(args.output)
         n_out = spark.read.parquet(args.output).count()
     finally:
@@ -110,8 +76,7 @@ def main() -> None:
                 "rows_in": n_in,
                 "rows_kept": n_out,
                 "exact_dropped": n_in - n_exact,
-                "near_dup_dropped": n_exact - n_out - sem_dropped,
-                "semantic_dropped": sem_dropped,
+                "near_dup_dropped": n_exact - n_out,
                 "wall_sec": round(time.time() - t0, 2),
             }
         )

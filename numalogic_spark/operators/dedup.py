@@ -1124,7 +1124,7 @@ def embedding_near_pairs(
     threshold: float = 0.9,
 ) -> DataFrame:
     """Pairs with cosine ≥ threshold within blocks. The block join bounds
-    the O(n²); for unblocked corpora use similarity.lsh_bucketed_ann."""
+    the O(n²); without `block_col` every pair is compared."""
     cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
     if block_col:
         cols.append(F.col(block_col).alias("blk"))
@@ -1139,255 +1139,6 @@ def embedding_near_pairs(
         cosine_expr(F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>")).alias("cos_sim"),
     )
     return pairs.filter(F.col("cos_sim") >= threshold)
-
-
-def embedding_near_pairs_lsh(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding near-dup for UNBLOCKED corpora: signed-random-projection
-    buckets replace the label block — a pair with cosine ≥ threshold agrees
-    on all n_planes sign bits w.p. (1 - θ/π)^k (Charikar 2002), so near-dups
-    land in the same bucket w.h.p. and the join is per-bucket instead of n².
-
-    Recall misses pairs straddling a hyperplane; raise recall by unioning a
-    second seed's buckets (cheap — the verification cosine dedups).
-    """
-    from numalogic_spark.operators.similarity import _hyperplanes, srp_bucket_expr
-
-    df = df.filter(F.col(vec_col).isNotNull())
-    first = df.select(vec_col).first()
-    if first is None:
-        raise ValueError("no non-null embeddings to pair")
-    dim = len(first[0])
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    out = None
-    for s in (seed, seed + 1):  # two independent hash tables
-        planes = _hyperplanes(dim, n_planes, s)
-        bucketed = base.withColumn("blk", srp_bucket_expr("v", planes))
-        a, b = bucketed.alias("a"), bucketed.alias("b")
-        pairs = a.join(
-            b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cosine_expr(F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>")).alias("cos_sim"),
-        ).filter(F.col("cos_sim") >= threshold)
-        out = pairs if out is None else out.unionByName(pairs)
-    return out.dropDuplicates(["id_a", "id_b"])
-
-
-def _semdedup_assign_kernel(cents: "np.ndarray"):
-    """Big-codebook twin of the literal `_dots` path: one Arrow matmul
-    yielding (argmax cluster, max dot) per row, mirroring
-    similarity._ivf_assign_kernel's first-max semantics. Matmul summation
-    order differs from the literal fold at the ulp level — same accepted
-    trade as the IVF kernel (argmax is ulp-robust away from exact ties);
-    the gated query's codebook is far under _LITERAL_BUDGET so the oracle
-    always exercises the literal path."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cents_t = cents.T.copy()
-
-    def assign(v):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        d = m @ cents_t
-        idx = d.argmax(axis=1)
-        return pd.DataFrame(
-            {"cluster": idx.astype(np.int32), "mx": d[np.arange(len(d)), idx]}
-        )
-
-    return pandas_udf(assign, "struct<cluster: int, mx: double>")
-
-
-def semdedup_prune(
-    df: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    materialize: bool | str = True,
-    use_kernel: bool = True,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
-    k-means clustering the embedding space and pruning near-duplicates
-    WITHIN each cluster only — the clustering bounds the pairwise work
-    (cluster count grows with the corpus, so per-cluster membership stays
-    roughly constant and the per-cluster O(n_c²) never becomes global n²).
-
-    Decision rule (the reference implementation's, made deterministic):
-    rank each cluster's members by (cos_to_centroid ASC, id ASC); a row is
-    PRUNED when any earlier-ranked member of its cluster has cosine ≥
-    `threshold` to it — i.e. among semantic duplicates the member with the
-    LOWEST similarity to the cluster centroid (most atypical) is kept,
-    matching the paper's keep rule, with the id tie-break making the
-    outcome replayable. Comparing against ALL earlier-ranked rows (kept or
-    pruned) mirrors the reference's upper-triangular max-similarity test.
-
-    `threshold` (the paper's eps) is corpus-dependent — tune it to the
-    target prune rate (the paper sweeps it per dataset; ~0.95 suits real
-    text-embedding spaces, far lower for flatter synthetic spaces).
-
-    `centroids` is a trained codebook (similarity.ivf_train_centroids /
-    load_codebook — unit rows, so dot = cosine ranking). Under
-    similarity._LITERAL_BUDGET the codebook dots are inlined as ONE JVM
-    literal array column reused for both the argmax (cluster) and the max
-    (cosine numerator); above it a single Arrow matmul kernel produces
-    both. The pairwise stage is an equi-join on cluster plus a rank
-    triangle — one exchange for the rank window, one partitioned
-    self-join, no global shuffle of pairs — with per-row norms computed
-    ONCE on the ranked frame (the pair stage only evaluates the dot).
-
-    Degenerate embeddings — NULL, containing a null element, or
-    zero-norm — are EXCLUDED from the output: they have no direction in
-    cosine space, and keeping them would force engine-divergent
-    NULL/NaN ordering and comparison semantics into the decision
-    (numpy 0/0 = NaN which Spark compares GREATER than any threshold,
-    while the JVM fold yields NULL which compares false).
-
-    Returns (id, cluster, cos_to_centroid, kept) — the full audit table,
-    not just survivors, so downstream filters and the oracle can both
-    replay the decision.
-    """
-    from numalogic_spark.operators.similarity import _LITERAL_BUDGET, _dot_const_expr
-
-    cents = np.asarray(centroids, dtype=float)
-    norm = F.sqrt(
-        F.aggregate(F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda a, b: a + b)
-    )
-    clean = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .filter(~F.exists(F.col("v"), lambda x: x.isNull()))
-        .withColumn("_nrm", norm)
-        .filter(F.col("_nrm") > 0)
-    )
-    if cents.size <= _LITERAL_BUDGET:
-        # ONE literal dot-array column serves assignment (first-max argmax)
-        # and the cosine numerator (max dot); argmax dot IS the assigned
-        # centroid because centroid rows are unit vectors
-        dots = F.array(*[_dot_const_expr("v", c) for c in cents])
-        base = (
-            clean.withColumn("_dots", dots)
-            .withColumn(
-                "cluster",
-                (F.array_position(F.col("_dots"), F.array_max(F.col("_dots"))) - 1).cast("int"),
-            )
-            .withColumn("cos_c", F.array_max(F.col("_dots")) / F.col("_nrm"))
-            .drop("_dots")
-        )
-    else:
-        # big codebooks would blow the literal plan budget — one Arrow
-        # matmul yields (cluster, max dot) together
-        base = (
-            clean.withColumn("_ac", _semdedup_assign_kernel(cents)(F.col("v")))
-            .withColumn("cluster", F.col("_ac.cluster"))
-            .withColumn("cos_c", F.col("_ac.mx") / F.col("_nrm"))
-            .drop("_ac")
-        )
-    w = Window.partitionBy("cluster").orderBy(F.col("cos_c").asc(), F.col("id").asc())
-    if use_kernel:
-        # Per-cluster blocked-triangle kernel (default): one grouped Arrow
-        # pass per cluster replaces the rank-triangle self-join + per-pair
-        # dot kernel + distinct + keep-flag join. The old shape shuffled
-        # BOTH vectors of every within-cluster pair through the join and
-        # round-tripped n_c²/2 pair rows through Arrow; this shape ships
-        # each vector ONCE (the groupBy exchange reuses the rank window's
-        # cluster partitioning) and evaluates the same upper-triangular
-        # comparisons as blocked numpy — accumulated DIMENSION BY
-        # DIMENSION in index order, so every pair's dot is bit-identical
-        # to the zip_with fold (no BLAS reordering).
-        # Mixed-dimension rows (corrupt input) degrade exactly like the
-        # expression path — a cross-dimension pair never prunes (zip_with
-        # over unequal lengths null-propagates to a false comparison) —
-        # instead of crashing np.stack (the round-5 ADVICE item).
-        import pandas as pd
-
-        from pyspark.sql import types as T
-
-        thr = float(threshold)
-        out_schema = T.StructType(
-            [
-                T.StructField("id", df.schema[id_col].dataType),
-                T.StructField("cluster", T.IntegerType()),
-                T.StructField("cos_to_centroid", T.DoubleType()),
-                T.StructField("kept", T.BooleanType()),
-            ]
-        )
-
-        def decide(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("rn", ignore_index=True)
-            n = len(pdf)
-            kept = np.ones(n, dtype=bool)
-            dims = np.fromiter((len(v) for v in pdf["v"]), dtype=np.int64, count=n)
-            nrm_all = pdf["_nrm"].to_numpy(dtype=np.float64)
-            for d in np.unique(dims):
-                idx = np.nonzero(dims == d)[0]  # ascending → rank order kept
-                m = len(idx)
-                if m < 2:
-                    continue
-                V = np.stack([np.asarray(pdf["v"].iat[i], dtype=np.float64) for i in idx])
-                nrm = nrm_all[idx]
-                B = 4096
-                for j0 in range(1, m, B):
-                    j1 = min(j0 + B, m)
-                    left, right = V[:j1], V[j0:j1]
-                    acc = np.zeros((j1, j1 - j0))
-                    for k in range(V.shape[1]):  # dim order = the fold's order
-                        acc += left[:, k : k + 1] * right[:, k]
-                    cos = acc / (nrm[:j1, None] * nrm[None, j0:j1])
-                    tri = np.arange(j1)[:, None] < (j0 + np.arange(j1 - j0))[None, :]
-                    kept[idx[j0:j1]] &= ~((cos >= thr) & tri).any(axis=0)
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "cluster": pdf["cluster"].astype("int32"),
-                    "cos_to_centroid": pdf["cos_c"],
-                    "kept": kept,
-                }
-            )
-
-        ranked = base.withColumn("rn", F.row_number().over(w))
-        return ranked.groupBy("cluster").applyInPandas(decide, out_schema)
-
-    # the ranked frame feeds BOTH sides of the self-join and the final
-    # keep-flag join — cut the diamond once or the scan + assignment +
-    # rank window re-run 3x (same discipline as minhash_lsh_pairs)
-    ranked = _materialize(base.withColumn("rn", F.row_number().over(w)), materialize)
-    a, b = ranked.alias("a"), ranked.alias("b")
-    # pair verify: the pure-JVM zip_with fold — per-pair, divided by the
-    # per-row norms already on the ranked frame (sqrt(na)*sqrt(nb) is a
-    # per-vector value — recomputing it per pair would be ~2/3 of the
-    # arithmetic)
-    pair_dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pruned = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster")) & (F.col("a.rn") < F.col("b.rn")),
-        )
-        .filter(pair_dot / (F.col("a._nrm") * F.col("b._nrm")) >= F.lit(threshold))
-        .select(F.col("b.id").alias("id"))
-        .distinct()
-        .withColumn("_pruned", F.lit(True))
-    )
-    return ranked.join(pruned, "id", "left").select(
-        "id",
-        "cluster",
-        F.col("cos_c").alias("cos_to_centroid"),
-        F.col("_pruned").isNull().alias("kept"),
-    )
 
 
 def duplicate_ngram_spans(

@@ -29,6 +29,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -57,14 +58,20 @@ def bucket_fingerprints(df: DataFrame, id_col: str, ts_col: str, n_buckets: int)
 
 def load_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
     """Latest entry per bucket. Reads through Spark (works for s3a/hdfs/
-    local alike); a missing or unreadable manifest means a fresh run.
-    mergeSchema handles manifests written before the staleness columns
-    (completed_at, snapshot_id) existed; missing columns read as null,
-    which the staleness filters treat as 'unknown age/origin' → stale."""
+    local alike); a manifest with no committed file yet means a fresh run,
+    and an unreadable one raises. mergeSchema handles manifests written
+    before the staleness columns (completed_at, snapshot_id) existed;
+    missing columns read as null, which the staleness filters treat as
+    'unknown age/origin' → stale."""
     try:
         m = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    except Exception:  # noqa: BLE001 — missing/empty/corrupt → full run
-        return None
+    except AnalysisException as e:
+        # no directory (fresh run) or only a crashed first write's
+        # `_temporary/` (no data file to infer a schema from); any other
+        # error, a corrupt file say, is a damaged manifest
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
     for col, typ in (("completed_at", "double"), ("snapshot_id", "string")):
         if col not in m.columns:
             m = m.withColumn(col, F.lit(None).cast(typ))
@@ -202,9 +209,12 @@ def run_with_manifest(
             .count()
             .withColumnRenamed("count", "rows_out")
         )
-    except Exception:  # noqa: BLE001 — an all-empty output leaves no data
-        # files to infer a schema from (every todo partition was dropped up
-        # front and the write emitted nothing); record zero rows per bucket
+    except AnalysisException as e:
+        # an all-empty output leaves no data files to infer a schema from
+        # (every todo partition was dropped up front and the write emitted
+        # nothing); record zero rows per bucket
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
         rows_out = spark.createDataFrame([], f"{BUCKET_COL} long, rows_out long")
     entries = (
         fps.filter(F.col(BUCKET_COL).isin(todo))

@@ -235,23 +235,6 @@ def test_simhash_banding_recall_complete(spark):
         assert found == brute, f"max_hamming={mh}: banded {found} != brute {brute}"
 
 
-def test_embedding_near_pairs_lsh_recall(spark):
-    """SRP-bucketed near-dup (no block column) recovers planted near-copies."""
-    from numalogic_spark.operators.dedup import embedding_near_pairs_lsh
-
-    rng = np.random.default_rng(42)
-    base = rng.standard_normal((50, 16)).astype(np.float32)
-    vecs = np.vstack([base, base[:10] + rng.standard_normal((10, 16)).astype(np.float32) * 0.01])
-    pdf = pd.DataFrame({"vec_id": np.arange(60, dtype=np.int64), "embedding": list(vecs)})
-    got = embedding_near_pairs_lsh(spark.createDataFrame(pdf), threshold=0.99, n_planes=6).toPandas()
-    found = {tuple(sorted((int(a), int(b)))) for a, b in zip(got["id_a"], got["id_b"])}
-    exp = {(i, 50 + i) for i in range(10)}
-    recall = len(found & exp) / len(exp)
-    assert recall >= 0.8  # two hash tables, 6 planes, cos≈0.9999 pairs
-    assert found <= exp | found  # every returned pair verified ≥ threshold
-    assert (got["cos_sim"] >= 0.99).all()
-
-
 def test_embedding_near_pairs(spark):
     rng = np.random.default_rng(42)
     base = rng.standard_normal((20, 16)).astype(np.float32)
@@ -467,160 +450,3 @@ def test_materialize_persist_mode(spark, corpus):
     assert release_persisted() == 0  # idempotent
     with pytest.raises(ValueError, match="materialize"):
         minhash_lsh_pairs(df, materialize="Persist")
-
-
-def test_semdedup_prune_keep_rule(spark):
-    """SemDeDup keeps, among near-duplicates of one cluster, the member
-    LEAST similar to the centroid (Abbas et al. 2023 keep rule), compares
-    against all earlier-ranked members (reference triu-max semantics), and
-    never prunes across clusters."""
-    from numalogic_spark.operators.dedup import semdedup_prune
-
-    # two well-separated directions -> two clusters; within cluster 0 a
-    # near-duplicate pair where vec 1 hugs the centroid direction more
-    e1 = np.zeros(8); e1[0] = 1.0
-    e2 = np.zeros(8); e2[1] = 1.0
-    dup_a = e1.copy()                      # exactly on centroid axis
-    dup_b = e1 + 0.05 * e2                 # same direction, slightly off
-    lone = e1 + 0.9 * e2                   # same cluster, not a duplicate
-    other = e2.copy()                      # its own cluster
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(4, dtype=np.int64),
-            "embedding": [dup_a, dup_b, lone, other],
-        }
-    )
-    cents = np.vstack([e1, e2])
-    got = (
-        semdedup_prune(spark.createDataFrame(pdf), cents, threshold=0.95)
-        .toPandas()
-        .set_index("id")
-        .sort_index()
-    )
-    # dup_b is farther from the centroid -> kept; dup_a pruned
-    assert bool(got.loc[1, "kept"]) and not bool(got.loc[0, "kept"])
-    assert bool(got.loc[2, "kept"]) and bool(got.loc[3, "kept"])
-    assert int(got.loc[0, "cluster"]) == int(got.loc[1, "cluster"])
-    assert int(got.loc[3, "cluster"]) != int(got.loc[0, "cluster"])
-    # audit column matches numpy cosine-to-assigned-centroid
-    for vid, vec in enumerate([dup_a, dup_b, lone, other]):
-        c = cents[int(got.loc[vid, "cluster"])]
-        exp = vec @ c / np.linalg.norm(vec)
-        np.testing.assert_allclose(got.loc[vid, "cos_to_centroid"], exp, rtol=1e-9)
-
-
-def test_semdedup_prune_no_duplicates_keeps_all(spark):
-    from numalogic_spark.operators.dedup import semdedup_prune
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((30, 16))
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(30, dtype=np.int64), "embedding": list(vecs)}
-    )
-    cents = rng.standard_normal((4, 16))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    got = semdedup_prune(spark.createDataFrame(pdf), cents, threshold=0.9999).toPandas()
-    assert len(got) == 30 and bool(got["kept"].all())
-
-
-def test_semdedup_kernel_equals_expression(spark):
-    """The dim-ordered Arrow pair-cosine kernel must reproduce the
-    zip_with-fold expression path bit-for-bit (same summation order)."""
-    from numalogic_spark.operators.dedup import semdedup_prune
-
-    rng = np.random.default_rng(11)
-    base = rng.standard_normal((40, 12))
-    vecs = np.vstack([base, base[:8] + rng.standard_normal((8, 12)) * 0.01])
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(len(vecs), dtype=np.int64), "embedding": list(vecs)}
-    )
-    cents = rng.standard_normal((3, 12))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    df = spark.createDataFrame(pdf)
-    key = lambda p: p.sort_values("id", ignore_index=True)
-    k = key(semdedup_prune(df, cents, threshold=0.97, use_kernel=True).toPandas())
-    e = key(semdedup_prune(df, cents, threshold=0.97, use_kernel=False).toPandas())
-    assert k.equals(e)
-    assert not bool(k["kept"].all())  # the planted near-dups actually prune
-
-
-def test_semdedup_prune_degenerate_rows_excluded(spark):
-    """NULL embeddings, embeddings with a null element, and zero-norm
-    embeddings are excluded from the output (no direction in cosine
-    space); kernel and expression paths agree on the cleaned corpus."""
-    from numalogic_spark.operators.dedup import semdedup_prune
-
-    e1 = np.zeros(6); e1[0] = 1.0
-    rows = [
-        (0, [float(x) for x in e1]),
-        (1, [float(x) for x in e1 * 0.9]),          # near-dup of 0
-        (2, None),                                   # NULL embedding
-        (3, [0.0] * 6),                              # zero norm
-        (4, [1.0, None, 0.0, 0.0, 0.0, 0.0]),        # null element
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = np.vstack([e1])
-    for uk in (True, False):
-        got = semdedup_prune(df, cents, threshold=0.9, use_kernel=uk).toPandas()
-        assert sorted(got["id"].tolist()) == [0, 1]
-        by_id = got.set_index("id")
-        # identical direction -> the id tie-break keeps the lower id
-        assert bool(by_id.loc[0, "kept"]) and not bool(by_id.loc[1, "kept"])
-
-
-def _semdedup_numpy_reference(ids, vecs, cents, threshold):
-    """Independent pure-numpy replay of the SemDeDup decision rule (first-
-    max assignment, (cos_c ASC, id ASC) rank, prune-if-any-earlier-ranked-
-    neighbor >= eps) — a third implementation beside the Spark operator
-    and the DuckDB oracle."""
-    dots = vecs @ cents.T
-    cl = dots.argmax(axis=1)
-    nrm = np.sqrt((vecs * vecs).sum(axis=1))
-    cos_c = dots.max(axis=1) / nrm
-    kept = {}
-    for c in np.unique(cl):
-        idx = np.where(cl == c)[0]
-        order = sorted(idx, key=lambda i: (cos_c[i], ids[i]))
-        for pos, i in enumerate(order):
-            pruned = any(
-                (vecs[i] @ vecs[j]) / (nrm[i] * nrm[j]) >= threshold
-                for j in order[:pos]
-            )
-            kept[int(ids[i])] = not pruned
-    return cl, cos_c, kept
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
-def test_semdedup_matches_numpy_reference_randomized(spark, seed):
-    """Randomized corpora with planted near-dups: the Spark operator's full
-    (cluster, cos_to_centroid, kept) table must match an independent numpy
-    replay of the decision rule."""
-    from numalogic_spark.operators.dedup import semdedup_prune
-
-    rng = np.random.default_rng(seed)
-    base = rng.standard_normal((30, 10))
-    # planted near-dups are scaled AND slightly perturbed: an exactly-
-    # scaled copy has mathematically IDENTICAL cos_to_centroid to its
-    # base, so the (cos_c, id) rank order between the two would be decided
-    # by which engine's last ulp wins — a measure-zero knife edge real
-    # embeddings don't sit on; the perturbation separates the ranks by
-    # ~1e-3 while keeping pair cosine ~0.9999
-    dup = base[rng.integers(0, 30, 10)] * rng.uniform(0.5, 2.0, (10, 1))
-    vecs = np.vstack([base, dup + rng.standard_normal(dup.shape) * 0.01])
-    ids = np.arange(len(vecs), dtype=np.int64)
-    cents = rng.standard_normal((4, 10))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    t = 0.9
-    pdf = pd.DataFrame({"vec_id": ids, "embedding": list(vecs)})
-    got = (
-        semdedup_prune(spark.createDataFrame(pdf), cents, threshold=t)
-        .toPandas()
-        .set_index("id")
-        .sort_index()
-    )
-    cl, cos_c, kept = _semdedup_numpy_reference(ids, vecs, cents, t)
-    assert list(got["cluster"]) == [int(c) for c in cl]
-    np.testing.assert_allclose(got["cos_to_centroid"], cos_c, rtol=1e-9)
-    assert {i: bool(k) for i, k in got["kept"].items()} == kept
-    # the planted scaled copies actually exercise the prune path
-    assert not all(kept.values())

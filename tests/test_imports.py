@@ -2,11 +2,15 @@
 (`perfbench/*.py`) and `__spark_entry__.py` resolves, function-level
 imports included: importing a module does not run those, so a deleted
 module or name would otherwise only fail when its caller runs. Engine
-imports are those of `numalogic_spark`, `jobs` and `perfbench`."""
+imports are those of `numalogic_spark`, `jobs` and `perfbench`.
+
+COVERAGE.md names only package modules and driver queries that exist."""
 
 import ast
+import fnmatch
 import importlib
 import importlib.util
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -46,3 +50,23 @@ def test_engine_imports_resolve():
                 continue
             unresolved.append(f"{where}: {module}.{name}")
     assert not unresolved, "\n".join(unresolved)
+
+
+def test_coverage_names_exist():
+    """Every `<subpackage>/<module>.py` path in COVERAGE.md is a package
+    module, and every name in a `Q(...)` gate matches a `queries()` key
+    (`*` is a glob)."""
+    from __spark_entry__ import queries
+
+    text = (ROOT / "COVERAGE.md").read_text()
+    missing = [
+        f"numalogic_spark/{d}/{m}.py"
+        for d, m in re.findall(r"\b(operators|functions|streaming|plans|sources)/(\w+)\.py", text)
+        if not (ROOT / "numalogic_spark" / d / f"{m}.py").exists()
+    ]
+    keys = list(queries())
+    for gate in re.findall(r"\bQ\(([^)]*)\)", text):
+        for name in re.findall(r"`([^`]+)`", gate):
+            if not fnmatch.filter(keys, name):
+                missing.append(f"Q(`{name}`)")
+    assert not missing, "\n".join(sorted(set(missing)))

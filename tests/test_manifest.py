@@ -86,6 +86,25 @@ def test_partial_manifest_resumes(spark, tokens_df, tmp_path):
     assert len(r2["skipped_buckets"]) == 5
 
 
+def test_corrupt_manifest_raises(spark, tokens_df, tmp_path):
+    """A manifest directory holding only a crashed first write's
+    `_temporary/` is a fresh run; one holding a file that is not parquet
+    raises instead of silently recomputing every bucket on every rerun."""
+    import os
+
+    import pytest
+
+    out, man = str(tmp_path / "out"), str(tmp_path / "manifest")
+    os.makedirs(os.path.join(man, "_temporary", "0"))
+    r1 = run_with_manifest(spark, tokens_df, _job, out, man, n_buckets=4)
+    assert len(r1["processed_buckets"]) == 4 and not r1["skipped_buckets"]
+
+    with open(os.path.join(man, "part-99999-garbage.snappy.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_with_manifest(spark, tokens_df, _job, out, man, n_buckets=4)
+
+
 def test_fingerprint_order_independent(spark, tokens_df):
     from numalogic_spark.plans.manifest import bucket_fingerprints
 

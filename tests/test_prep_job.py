@@ -1,8 +1,8 @@
-"""End-to-end runs of the stream, diagnostics, retention and dedup jobs
+"""End-to-end runs of the stream, rollup, diagnostics and retention jobs
 (`jobs/*_job.py`): the streaming drain agrees with the batch rollup, the
-diagnostics job's per-feature outputs have the expected row counts,
-retention's kept and expired rows match its audit, and dedup's semantic
-stage accounts for every dropped row."""
+rollup job's summary matches DuckDB over its input and a rerun skips every
+bucket, the diagnostics job's per-feature outputs have the expected row
+counts, and retention's kept and expired rows match its audit."""
 
 import json
 import os
@@ -68,6 +68,53 @@ def test_stream_job_end_to_end(tmp_path):
         """
     ).fetchone()[0]
     assert mism == 0
+
+
+@pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")
+def test_rollup_job_end_to_end(tmp_path):
+    """jobs/rollup_job.py generates its input, then runs the fingerprinted
+    histogram, the manifest-wrapped 1m tier, gap-fill and block stages: the
+    summary's rows, tokens and 1m points match DuckDB over the input, and
+    a rerun on the same input skips every bucket of every stage."""
+    import duckdb
+
+    zip_path = tmp_path / "pkg.zip"
+    subprocess.run(
+        [sys.executable, "-m", "zipfile", "-c", str(zip_path), "numalogic_spark"],
+        cwd=REPO, check=True,
+    )
+    src = tmp_path / "tokens"
+    cmd = [
+        SUBMIT, "--master", "local[4]", "--py-files", str(zip_path),
+        "jobs/rollup_job.py", "--input", str(src), "--output", str(tmp_path / "tier"),
+        "--manifest", str(tmp_path / "manifest"), "--buckets", "4",
+    ]
+
+    def run(*extra):
+        r = subprocess.run(
+            cmd + list(extra), cwd=REPO, capture_output=True, text=True, timeout=420
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        return json.loads(r.stdout.strip().splitlines()[-1])
+
+    first = run("--gen-rows", "5000")
+    rows, tokens, minutes = duckdb.sql(
+        f"""
+        SELECT count(*), sum(n_tok),
+               count(DISTINCT (source, floor(epoch(event_ts) / 60)))
+        FROM '{src}/*.parquet'
+        """
+    ).fetchone()
+    assert (first["rows"], first["tokens"], first["tier_1m_points"]) == (
+        rows, tokens, minutes,
+    )
+    assert first["processed_buckets"] == 4
+
+    second = run()
+    processed = {k: v for k, v in second.items() if "processed" in k}
+    skipped = {k: v for k, v in second.items() if "skipped" in k}
+    assert len(processed) == len(skipped) == 3
+    assert set(processed.values()) == {0} and set(skipped.values()) == {4}
 
 
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")
@@ -149,45 +196,3 @@ def test_retention_job_end_to_end(tmp_path, spark):
     assert any(p.name.startswith("tier=") for p in out.iterdir())
     # daily tier is keep-forever
     assert summary["tiers"]["1d"]["expired"] == 0
-
-
-@pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")
-def test_dedup_job_semantic_stage(tmp_path):
-    """jobs/dedup_job.py with --embeddings runs the SemDeDup stage after
-    exact + near dedup: the summary accounts for every dropped row and the
-    kept corpus excludes the semantically pruned ids."""
-    zip_path = tmp_path / "pkg.zip"
-    subprocess.run(
-        [sys.executable, "-m", "zipfile", "-c", str(zip_path), "numalogic_spark"],
-        cwd=REPO, check=True,
-    )
-    out = tmp_path / "kept"
-    r = subprocess.run(
-        [
-            SUBMIT, "--master", "local[4]", "--py-files", str(zip_path),
-            "jobs/dedup_job.py",
-            "--input", "/root/testdata/sf0.001/documents.parquet",
-            "--output", str(out),
-            "--embeddings", "/root/testdata/sf0.001/embeddings.parquet",
-            "--emb-id-col", "vec_id",
-            "--centroids", "8",
-            # the synthetic hash-derived embeddings have low pairwise
-            # cosine (see the gated query's note) — 0.35 actually prunes
-            "--semantic-threshold", "0.35",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=420,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    summary = json.loads(r.stdout.strip().splitlines()[-1])
-    assert summary["semantic_dropped"] > 0
-    assert (
-        summary["rows_kept"]
-        == summary["rows_in"]
-        - summary["exact_dropped"]
-        - summary["near_dup_dropped"]
-        - summary["semantic_dropped"]
-    )
-    import duckdb
-
-    (n,) = duckdb.sql(f"select count(*) from '{out}/*.parquet'").fetchone()
-    assert n == summary["rows_kept"] > 0

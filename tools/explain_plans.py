@@ -58,24 +58,6 @@ def main() -> None:
     filtered = df.filter(F.col("source") == "src_001").select("source", "event_ts", "n_tok")
     sections.append(("filter+projection (PushedFilters reach the parquet scan)", grab(filtered)))
 
-    # round 3: centroid_cosine at production dims — the posexplode
-    # long-skinny centroid keeps the plan size independent of `dim`
-    # (the inline branch would embed 512 decimal aggregate columns)
-    from numalogic_spark.operators.similarity import centroid_cosine
-
-    emb = spark.range(64).select(
-        F.col("id").alias("vec_id"),
-        (F.col("id") % 3).alias("label"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(512)),
-            lambda i: (F.pmod(F.xxhash64(F.col("id"), i), F.lit(1000)) / 1000.0),
-        ).alias("embedding"),
-    )
-    sections.append((
-        "centroid cosine at dim=512 (posexplode long-skinny centroid: map-side partial agg bounds shuffle at n_groups*dim rows; plan size independent of dim)",
-        grab(centroid_cosine(emb)),
-    ))
-
     # round 4: time-series feature operators — every one rides a single
     # exchange on the series key; re-aggregations reuse that partitioning
     from numalogic_spark.operators.tsfeatures import (
@@ -162,9 +144,8 @@ def main() -> None:
         grab(sessionize(ev.select(F.col("source").alias("user_id"), "ts_s", "event_id", "value"))),
     ))
 
-    # round 4 fourth wave: selection + sketch + interval operators
+    # round 4 fourth wave: sketch + interval operators
     from numalogic_spark.operators.joins import interval_overlap_join
-    from numalogic_spark.operators.sampling import quantile_transform
     from numalogic_spark.operators.sketches import cms_sketch
 
     iv_l = ev.select("source", F.col("event_id").alias("lid"),
@@ -179,9 +160,14 @@ def main() -> None:
         "CMS sketch build (depth-cell explode partial-aggregates map-side; weighted input hashes once per distinct item)",
         grab(cms_sketch(ev.select("source", (F.col("event_id") % 50).cast("string").alias("item")), "item", ["source"])),
     ))
+
+    # windowed AE scoring as the benchmark's backfill runs it: strided
+    # z-scored windows, then the LSTM autoencoder's Arrow kernel
+    from numalogic_spark.operators.score import demo_weights, score_windows, strided_z_windows
+
     sections.append((
-        "quantile transform (one exchange + sort per group; percent_rank over the same partitioning)",
-        grab(quantile_transform(ev.select("source", "event_id", "value"), "value", ("source",))),
+        "AE window scoring (`score_windows` over `strided_z_windows`, LSTM family: ONE exchange on source feeds the lag-grid window; z-scoring is JVM projections below the ArrowEvalPython, the forward pass is that one Arrow kernel, err_mean/err_max a JVM projection above it)",
+        grab(score_windows(strided_z_windows(ev, 8, 4), "lstm", demo_weights("lstm", 8))),
     ))
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
