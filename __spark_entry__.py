@@ -826,329 +826,6 @@ FROM (
 """
 
 
-# --------------------------------------------------------------------------
-# training-data pipeline ops over documents/embeddings
-# --------------------------------------------------------------------------
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_docs(spark, sf_dir), "text", "doc_id")
-
-
-_DEDUP_EXACT_SQL = """
-SELECT md5(text) AS text_hash, min(doc_id) AS keeper_id, count(*) AS cluster_size
-FROM documents GROUP BY 1
-"""
-
-
-def _q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.dedup import jaccard_pairs
-
-    out = jaccard_pairs(_docs(spark, sf_dir), block_cols=["lang", "source"], threshold=0.2)
-    return out.select("id_a", "id_b", "inter", _r6("jaccard").alias("jaccard"))
-
-
-_DEDUP_JACCARD_SQL = """
-WITH w AS (
-  SELECT doc_id, lang, source,
-         len(list_filter(list_distinct(string_split_regex(lower(text), '\\s+')), x -> x <> '')) AS nw,
-         unnest(list_filter(list_distinct(string_split_regex(lower(text), '\\s+')), x -> x <> '')) AS word
-  FROM documents
-), p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.nw AS na, b.nw AS nb, count(*) AS inter
-  FROM w a JOIN w b
-    ON a.word = b.word AND a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-)
-SELECT id_a, id_b, inter,
-       floor((inter * 1.0 / (na + nb - inter)) * 1000000 + 0.5) / 1000000.0 AS jaccard
-FROM p WHERE inter * 1.0 / (na + nb - inter) >= 0.2
-"""
-
-
-def _q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.dedup import embedding_near_pairs
-
-    out = embedding_near_pairs(_embs(spark, sf_dir), threshold=0.3, block_col="label")
-    return out.select("id_a", "id_b", _r6("cos_sim").alias("cos_sim"))
-
-
-_EMB_PAIRS_SQL = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       floor((list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])) * 1000000 + 0.5) / 1000000.0 AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-"""
-
-
-def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test 5-gram decontamination: even doc_ids are the train
-    corpus, odd doc_ids the test corpus."""
-    from numalogic_spark.operators.dedup import ngram_contamination
-
-    docs = _docs(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    test = docs.filter(F.col("doc_id") % 2 == 1)
-    out = ngram_contamination(test, train, n=5)
-    return out.select(
-        "doc_id", "n_grams", "n_matched", _r6(F.col("contamination")).alias("contamination")
-    )
-
-
-def _contamination_sql(n: int = 5) -> str:
-    from numalogic_spark.operators.dedup import BAND_MULT, MERSENNE31
-
-    p = MERSENNE31
-    fold = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(generate_series(1, greatest(length(w), 1)), "
-        f"i -> CAST(ascii(w[i]) AS BIGINT))), (acc, c) -> (acc * 131 + c) % {p})"
-    )
-    gram = f"hs[i]"
-    for j in range(1, n):
-        gram = f"(({gram}) * {BAND_MULT} + hs[i+{j}]) % {p}"
-    return rf"""
-WITH d AS (
-  SELECT doc_id,
-         list_transform(
-           list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''),
-           w -> {fold}) AS hs
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         CASE WHEN len(hs) >= {n}
-              THEN list_distinct(list_transform(generate_series(1, len(hs) - {n - 1}),
-                                                i -> {gram}))
-              ELSE [] END AS grams
-  FROM d
-), train AS (
-  SELECT DISTINCT t.g FROM g, unnest(g.grams) AS t(g) WHERE doc_id % 2 = 0
-), test_g AS (
-  SELECT doc_id, t.g FROM g, unnest(g.grams) AS t(g) WHERE doc_id % 2 = 1
-), m AS (
-  SELECT doc_id,
-         count(*) AS n_grams,
-         -- CAST: DuckDB sum() is HUGEINT -> float64 in pandas vs Spark int64.
-         CAST(sum(CASE WHEN g IN (SELECT g FROM train) THEN 1 ELSE 0 END) AS BIGINT) AS n_matched
-  FROM test_g GROUP BY 1
-)
-SELECT g.doc_id,
-       coalesce(m.n_grams, 0) AS n_grams,
-       coalesce(m.n_matched, 0) AS n_matched,
-       floor(CASE WHEN coalesce(m.n_grams, 0) > 0
-                  THEN CAST(m.n_matched AS DOUBLE) / m.n_grams
-                  ELSE 0.0 END * 1000000 + 0.5) / 1000000.0 AS contamination
-FROM g LEFT JOIN m USING (doc_id)
-WHERE g.doc_id % 2 = 1
-"""
-
-
-def _q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.dedup import minhash_lsh_pairs
-
-    out = minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.8)
-    return out.select("id_a", "id_b", _r6("jaccard").alias("jaccard"))
-
-
-def _minhash_sql(
-    num_hashes: int = 60,
-    bands: int = 12,
-    threshold: float = 0.8,
-    seed: int = 1,
-    n: int = 3,
-    est_margin: float = 0.1,
-) -> str:
-    """DuckDB replay of the ENTIRE MinHash-LSH pipeline — shingle codes,
-    universal-hash permutations, band folding, candidate self-join, the
-    signature-estimate prefilter and the exact-Jaccard verification —
-    using the same modular-arithmetic hash family as operators/dedup.py
-    (same seeded constants)."""
-    from numalogic_spark.operators.dedup import (
-        BAND_MULT,
-        MERSENNE31,
-        SHINGLE_BASE,
-        _minhash_params,
-    )
-
-    p = MERSENNE31
-    rows = num_hashes // bands
-    code = "CAST(ascii(substr(t, i, 1)) AS BIGINT)"
-    for j in range(1, n):
-        code = f"({code} * {SHINGLE_BASE} + ascii(substr(t, i+{j}, 1)))"
-    sig_entries = ",\n    ".join(
-        f"list_min(list_transform(h, x -> ({a} * x + {b}) % {p}))"
-        for a, b in _minhash_params(num_hashes, seed)
-    )
-    band_structs = []
-    for bi in range(bands):
-        acc = str(bi)
-        for ri in range(rows):
-            acc = f"(({acc}) * {BAND_MULT} + sig[{bi * rows + ri + 1}]) % {p}"
-        band_structs.append("{'band': %d, 'bh': %s}" % (bi, acc))
-    structs = ",\n    ".join(band_structs)
-    return f"""
-WITH docs AS (
-  SELECT doc_id AS id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(length(t) - {n - 1}, 1)), i -> {code})) AS codes
-  FROM (SELECT doc_id, lower(text) AS t FROM documents)
-  WHERE len(regexp_replace(t, '\s', '', 'g')) > 0  -- engine's degenerate-doc guard
-), hs AS (
-  SELECT id, list_transform(codes, c -> c % {p}) AS h FROM docs
-), sig AS (
-  SELECT id, [{sig_entries}] AS sig FROM hs
-), sl AS (
-  SELECT id, sig, u.band AS band, u.bh AS bh
-  FROM (SELECT id, sig, unnest([{structs}]) AS u FROM sig)
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM sl a JOIN sl b
-    ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-   AND len(list_filter(generate_series(1, {num_hashes}), i -> a.sig[i] = b.sig[i]))
-       / {float(num_hashes)} >= {max(threshold - est_margin, 0.0)}
-), pairs AS (
-  SELECT c.id_a, c.id_b,
-         len(list_intersect(da.codes, db.codes)) AS inter,
-         len(da.codes) AS na, len(db.codes) AS nb
-  FROM cand c JOIN docs da ON da.id = c.id_a JOIN docs db ON db.id = c.id_b
-)
-SELECT id_a, id_b,
-       floor((inter * 1.0 / (na + nb - inter)) * 1000000 + 0.5) / 1000000.0 AS jaccard
-FROM pairs WHERE inter * 1.0 / (na + nb - inter) >= {threshold}
-"""
-
-
-def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from numalogic_spark.operators.dedup import simhash_near_pairs
-
-    out = simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
-    return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
-
-
-def _simhash_sql(max_hamming: int = 3) -> str:
-    """DuckDB replay of the full 124-bit SimHash pipeline: per-word char
-    folds → universal hashes → packed contributions → per-bit majority →
-    chunk banding → hamming verification, with the same seeded constants
-    as operators/dedup.py."""
-    from numalogic_spark.operators.dedup import (
-        _CHAR_MULT_1,
-        _CHAR_MULT_2,
-        _PACK,
-        MERSENNE31,
-        _simhash_params,
-    )
-
-    p = MERSENNE31
-    (a1, b1, c1), (a2, b2, c2), (a3, b3, c3), (a4, b4, c4) = _simhash_params()
-
-    def fold(mult: int) -> str:
-        return (
-            "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            "list_transform(generate_series(1, greatest(length(w), 1)), "
-            "i -> CAST(ascii(w[i]) AS BIGINT))), "
-            f"(acc, c) -> (acc * {mult} + c) % {p})"
-        )
-
-    h1, h2 = fold(_CHAR_MULT_1), fold(_CHAR_MULT_2)
-
-    def g(a: int, b: int, c: int) -> str:
-        # products reduced mod p before summing (2^63 overflow guard)
-        return f"((({a} * ({h1})) % {p} + ({b} * ({h2})) % {p} + {c}) % {p})"
-
-    lo = f"{g(a1, b1, c1)} + {g(a2, b2, c2)} * {_PACK}"
-    hi = f"{g(a3, b3, c3)} + {g(a4, b4, c4)} * {_PACK}"
-
-    def majority(col: str) -> str:
-        terms = [
-            f"(CASE WHEN 2 * len(list_filter({col}, v -> ((v >> {b}) & 1) = 1)) > len({col}) "
-            f"THEN {1 << b} ELSE 0 END)"
-            for b in range(62)
-        ]
-        return "CAST(" + "\n      + ".join(terms) + " AS BIGINT)"
-
-    n_chunks = max_hamming + 1
-    per_long = (n_chunks + 1) // 2
-    chunk_structs = []
-
-    def add_chunks(col: str, n: int) -> None:
-        if n <= 0:  # max_hamming=0 → single chunk on sim_lo only
-            return
-        base = 62 // n
-        off = 0
-        for ci in range(n):
-            width = base + (62 - base * n if ci == n - 1 else 0)
-            mask = (1 << width) - 1
-            chunk_structs.append(
-                "{'chunk': %d, 'cv': (%s >> %d) & %d}" % (len(chunk_structs), col, off, mask)
-            )
-            off += width
-
-    add_chunks("sim_lo", per_long)
-    add_chunks("sim_hi", n_chunks - per_long)
-    structs = ",\n    ".join(chunk_structs)
-    return f"""
-WITH words AS (
-  SELECT doc_id AS id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ws
-  FROM documents
-  WHERE len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) > 0
-), packs AS (
-  SELECT id,
-         list_transform(ws, w -> {lo}) AS plo,
-         list_transform(ws, w -> {hi}) AS phi
-  FROM words
-), sig AS (
-  SELECT id, {majority("plo")} AS sim_lo, {majority("phi")} AS sim_hi FROM packs
-), chunks AS (
-  SELECT id, sim_lo, sim_hi, u.chunk AS chunk, u.cv AS cv
-  FROM (SELECT id, sim_lo, sim_hi, unnest([{structs}]) AS u FROM sig)
-)
-SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-       CAST(bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) AS BIGINT) AS hamming
-FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.cv = b.cv AND a.id < b.id
-WHERE bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) <= {max_hamming}
-"""
-
-
-def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: MinHash-LSH pairs → connected components →
-    (id, cluster_id = min id of the component). The transitive-closure
-    step is what turns pair lists into an actual dedup decision."""
-    from numalogic_spark.operators.dedup import minhash_lsh_pairs, near_dup_clusters
-
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.8)
-    return near_dup_clusters(pairs).select("id", "cluster_id")
-
-
-def _dedup_clusters_sql() -> str:
-    """Recursive-CTE replay: same MinHash pairs (shared SQL), then
-    min-label reachability closure."""
-    mh = _minhash_sql()
-    return f"""
-WITH RECURSIVE mh AS ({mh}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM mh
-  UNION
-  SELECT id_b, id_a FROM mh
-),
-reach(id, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id
-)
-SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id
-"""
-
-
 def _q_prometheus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 Prometheus connector frame: events reshaped into the connector's
     response shape (metric rows carrying (ts, value-string) arrays), then
@@ -2410,42 +2087,6 @@ FROM z
 """
 
 
-def _q_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-doc duplicate word-8-gram coverage per document (Lee et al.
-    exact-substring dedup signal; operators/dedup.py)."""
-    from numalogic_spark.operators.dedup import duplicate_ngram_spans
-
-    return duplicate_ngram_spans(_docs(spark, sf_dir), n=8, min_docs=2)
-
-
-_DUP_NGRAM_SQL = r"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ws
-  FROM documents
-), g AS (
-  SELECT doc_id, md5(array_to_string(ws[i:i+7], ' ')) AS gram
-  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 6)) AS i
-        FROM w WHERE len(ws) >= 8)
-), gd AS (
-  SELECT gram, doc_id, count(*) AS c FROM g GROUP BY 1, 2
-), flagged AS (
-  SELECT gram FROM gd GROUP BY gram HAVING count(*) >= 2
-), dup AS (
-  SELECT doc_id, sum(c) AS n_dup
-  FROM gd JOIN flagged USING (gram) GROUP BY doc_id
-)
-SELECT w.doc_id,
-       CAST(greatest(len(ws) - 7, 0) AS BIGINT) AS n_grams,
-       CAST(coalesce(dup.n_dup, 0) AS BIGINT) AS n_dup_grams,
-       CASE WHEN len(ws) >= 8 THEN
-         floor(CAST(coalesce(dup.n_dup, 0) AS DOUBLE)
-               / CAST(len(ws) - 7 AS DOUBLE) * 1000000 + 0.5) / 1000000.0
-       ELSE 0.0 END AS dup_frac
-FROM w LEFT JOIN dup ON w.doc_id = dup.doc_id
-"""
-
-
 def _q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LTTB shape-preserving downsample to 20 points per series
     (operators/promql.py); the oracle replays the sequential bucket
@@ -2773,6 +2414,10 @@ def _q_hll_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hll_cascade_sql(m: int = 256) -> str:
     return _hll_sql_builder(m, include_exact=False)
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _q_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3489,7 +3134,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "m4_downsample_events": _q_m4,
         "retention_policy_events": _q_retention,
         "sax_symbols_events": _q_sax,
-        "dup_ngram_spans_documents": _q_dup_ngrams,
         "lttb_downsample_events": _q_lttb,
         "histogram_quantile_events": _q_hist_quantile,
         "asof_join_events": _q_asof,
@@ -3499,7 +3143,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_overlap_join_events": _q_interval_join,
         "cms_freq_documents": _q_cms,
         "staleness_report_events": _q_staleness,
-        "dedup_clusters_documents": _q_dedup_clusters,
         "ae_inference_events": _q_ae_inference,
         "conv_ae_inference_events": _q_conv_ae_inference,
         "lstm_ae_inference_events": _q_lstm_ae_inference,
@@ -3519,12 +3162,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tanh_scaler_stddev_threshold": _q_tanh_scaler,
         "percentile_scaler_threshold": _q_percentile_scaler,
         "compressed_rollup_roundtrip": _q_compress_roundtrip,
-        "dedup_exact_documents": _q_dedup_exact,
-        "dedup_jaccard_documents": _q_dedup_jaccard,
-        "embedding_near_pairs": _q_embedding_pairs,
-        "ngram_contamination_documents": _q_contamination,
-        "minhash_near_dup_documents": _q_minhash,
-        "simhash_near_dup_documents": _q_simhash,
         "score_pipeline_events": _q_score_pipeline,
         "pivot_metrics_1m": _q_pivot,
         "train_val_split_events": _q_train_val_split,
@@ -3559,10 +3196,6 @@ def oracle_sql() -> dict[str, str]:
         "tanh_scaler_stddev_threshold": _TANH_SCALER_SQL,
         "percentile_scaler_threshold": _PCT_SCALER_SQL,
         "compressed_rollup_roundtrip": _COMPRESS_SQL,
-        "dedup_exact_documents": _DEDUP_EXACT_SQL,
-        "dedup_jaccard_documents": _DEDUP_JACCARD_SQL,
-        "embedding_near_pairs": _EMB_PAIRS_SQL,
-        "ngram_contamination_documents": _contamination_sql(),
         "score_pipeline_events": _score_pipeline_sql(),
         "pivot_metrics_1m": _PIVOT_SQL,
         "train_val_split_events": _SPLIT_SQL,
@@ -3570,8 +3203,6 @@ def oracle_sql() -> dict[str, str]:
         "sliding_window_salted_stats": _SLIDING_SQL,
         "rollup_1m_sql_api": _ROLLUP_SQL_API_ORACLE,
         "multi_metric_rollup_lineitem": _MULTI_ROLLUP_SQL,
-        "minhash_near_dup_documents": _minhash_sql(),
-        "simhash_near_dup_documents": _simhash_sql(),
         "mahalanobis_events": _mahalanobis_sql(),
         "sklearn_scalers_events": _SKLEARN_SCALERS_SQL,
         "seasonal_naive_1h_events": _SEASONAL_NAIVE_SQL,
@@ -3579,7 +3210,6 @@ def oracle_sql() -> dict[str, str]:
         "ewm_smooth_events": _ewm_smooth_sql(),
         "backtest_events": _backtest_sql(),
         "prometheus_frame_events": _prom_frame_sql(),
-        "dedup_clusters_documents": _dedup_clusters_sql(),
         "acf_events": _acf_sql(),
         "cusum_changepoint_events": _cusum_sql(),
         "hampel_filter_events": _hampel_sql(),
@@ -3599,7 +3229,6 @@ def oracle_sql() -> dict[str, str]:
         "m4_downsample_events": _M4_SQL,
         "retention_policy_events": _retention_sql(),
         "sax_symbols_events": _SAX_SQL,
-        "dup_ngram_spans_documents": _DUP_NGRAM_SQL,
         "lttb_downsample_events": _lttb_sql(),
         "histogram_quantile_events": _hist_quantile_sql(),
         "asof_join_events": _ASOF_SQL,

@@ -1,19 +1,9 @@
-"""Expression-level utilities: the portable hash family under the HLL/CMS
-sketches and the document operators, the cross-engine rounding helper,
-and `let_bind`.
-
-`let_bind` is the workhorse: Catalyst's CollapseProject inlines a projected
-expression into every downstream reference, and runtime subexpression
-elimination does NOT cover higher-order-function lambdas — so an expensive
-array expression referenced k times is computed k times. Binding it as a
-lambda variable of a single-element `transform` forces exactly-once
-evaluation per row while staying fully declarative (no persist/checkpoint
-barrier, no shuffle).
+"""Expression-level utilities: the portable hash under the HLL and
+Count-Min sketches, and `round6`, the cross-engine 6-dp rounding that the
+sketch and PromQL operators apply to their doubles.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -50,30 +40,6 @@ def portable_hash_long(id_col: str | Column, salt: int = 0) -> Column:
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     folded = _word_char_fold(c.cast("string"), _CHAR_MULT, init=salt)
     return (F.lit(_SAMPLE_A) * folded + F.lit(_SAMPLE_B)) % F.lit(MERSENNE31)
-
-
-def ensure_parallelism(df, min_parts: int | None = None):
-    """Repartition iff the input has fewer partitions than the cluster's
-    default parallelism — the degenerate single-file/local case. At real
-    scale parquet splits already provide the parallelism and this is a
-    no-op (no shuffle). Operators whose per-row work is heavy (shingling,
-    signatures) call this so one fat file can't serialize a whole stage —
-    especially when self-joins re-evaluate the scan subtree per side."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def let_bind(expr: Column, body: Callable[[Column], Column]) -> Column:
-    """let x = expr in body(x): evaluate `expr` ONCE per row, reference it
-    many times inside `body` as a cheap lambda-variable lookup.
-
-    Implementation: element_at(transform(array(expr), x -> body(x)), 1) —
-    the array wrapper evaluates `expr` a single time; `body` sees the bound
-    NamedLambdaVariable instead of the expression tree.
-    """
-    return F.element_at(F.transform(F.array(expr), body), 1)
 
 
 def round6(c: Column) -> Column:

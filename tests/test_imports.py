@@ -4,13 +4,19 @@ imports included: importing a module does not run those, so a deleted
 module or name would otherwise only fail when its caller runs. Engine
 imports are those of `numalogic_spark`, `jobs` and `perfbench`.
 
-COVERAGE.md names only package modules and driver queries that exist."""
+Also: the package modules that no core job and no benchmark file imports
+are an explicit list; COVERAGE.md, SURVEY.md and README.md name only
+package modules, tests and driver queries that exist; and
+`tools/selfcheck.py` checks the driver contract of its own checkout."""
 
 import ast
 import fnmatch
 import importlib
 import importlib.util
+import os
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -53,20 +59,105 @@ def test_engine_imports_resolve():
 
 
 def test_coverage_names_exist():
-    """Every `<subpackage>/<module>.py` path in COVERAGE.md is a package
-    module, and every name in a `Q(...)` gate matches a `queries()` key
-    (`*` is a glob)."""
+    """Every `<subpackage>/<module>.py` path in COVERAGE.md, SURVEY.md and
+    README.md is a package module, every `T(test_...)` gate in COVERAGE.md
+    names a test file, and every name in a `Q(...)` gate matches a
+    `queries()` key (`*` is a glob)."""
     from __spark_entry__ import queries
 
-    text = (ROOT / "COVERAGE.md").read_text()
     missing = [
-        f"numalogic_spark/{d}/{m}.py"
-        for d, m in re.findall(r"\b(operators|functions|streaming|plans|sources)/(\w+)\.py", text)
+        f"{doc}: numalogic_spark/{d}/{m}.py"
+        for doc in ("COVERAGE.md", "SURVEY.md", "README.md")
+        for d, m in re.findall(
+            r"\b(operators|functions|streaming|plans|sources)/(\w+)\.py", (ROOT / doc).read_text()
+        )
         if not (ROOT / "numalogic_spark" / d / f"{m}.py").exists()
     ]
+    text = (ROOT / "COVERAGE.md").read_text()
+    for gate in re.findall(r"\bT\(([^)]*)\)", text):
+        for name in re.findall(r"\btest_\w+", gate):
+            if not (ROOT / "tests" / f"{name}.py").exists():
+                missing.append(f"T({name})")
     keys = list(queries())
     for gate in re.findall(r"\bQ\(([^)]*)\)", text):
         for name in re.findall(r"`([^`]+)`", gate):
             if not fnmatch.filter(keys, name):
                 missing.append(f"Q(`{name}`)")
     assert not missing, "\n".join(sorted(set(missing)))
+
+
+# Package modules that neither a core job nor the benchmark imports. A cut
+# that orphans a module, or deletes one of these, edits this list.
+UNREACHED = [
+    "blocks",
+    "config",
+    "functions.exprs",
+    "functions.robust",
+    "operators.backtest",
+    "operators.forecast",
+    "operators.joins",
+    "operators.promql",
+    "operators.reshape",
+    "operators.sketches",
+    "operators.tsfeatures",
+    "plans.router",
+    "plans.skew",
+    "sources.connectors",
+    "streaming.ae_stream",
+    "streaming.trainer_gate",
+    "synthetic",
+]
+
+
+def test_unreached_modules():
+    """Walk engine imports (function-level ones included) from the core
+    jobs and every `perfbench/*.py`; the package modules left over are
+    exactly UNREACHED."""
+    jobs = ("rollup", "refresh", "retention", "stream", "score")
+    todo = [ROOT / "jobs" / f"{j}_job.py" for j in jobs] + sorted((ROOT / "perfbench").glob("*.py"))
+    seen = set()
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        for _, module, name in _engine_imports(path):
+            for target in (module, f"{module}.{name}") if name else (module,):
+                file = ROOT.joinpath(*target.split(".")).with_suffix(".py")
+                if file.exists():
+                    todo.append(file)
+    package = ROOT / "numalogic_spark"
+    unreached = sorted(
+        ".".join(p.relative_to(package).with_suffix("").parts)
+        for p in package.rglob("*.py")
+        if p.name != "__init__.py" and p not in seen
+    )
+    assert unreached == UNREACHED
+
+
+def test_selfcheck_checks_its_own_checkout(tmp_path):
+    """`tools/selfcheck.py` imports the `__spark_entry__.py` next to it,
+    not one at a fixed path: a copy of the script beside a stub entry
+    module loads the stub."""
+    (tmp_path / "tools").mkdir()
+    script = tmp_path / "tools" / "selfcheck.py"
+    script.write_text((ROOT / "tools" / "selfcheck.py").read_text())
+    (tmp_path / "__spark_entry__.py").write_text("")
+    load = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location('selfcheck', sys.argv[1])\n"
+        "mod = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(mod)\n"
+        "print(mod.E.__file__)\n"
+    )
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    out = subprocess.run(
+        [sys.executable, "-c", load, str(script)],
+        cwd=cwd,
+        env={**os.environ, "PYTHONPATH": str(ROOT)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert Path(out.stdout.strip()).resolve() == (tmp_path / "__spark_entry__.py").resolve()

@@ -1,5 +1,7 @@
-"""Structured Streaming rollup ≡ batch rollup on the same data, and the
-stateful streaming EWM ≡ the batch EWM kernel across micro-batch splits."""
+"""Each streaming operator ≡ its batch counterpart on the same rows split
+into micro-batches: the 1m rollup (and its watermark drop of late data),
+and the stateful EWM, Hampel, Page-Hinkley, counter-delta, M4 and
+sessionize operators."""
 
 import numpy as np
 import pandas as pd
@@ -95,55 +97,6 @@ def test_streaming_ewm_matches_batch_kernel(spark, stream_dir):
     np.testing.assert_allclose(got["ewm"].to_numpy(), expdf["ewm"].to_numpy(), rtol=1e-9)
 
 
-def test_streaming_exact_dedup_first_seen(spark, tmp_path):
-    """Stateful streaming dedup: across 3 micro-batches, exactly one row
-    per distinct text passes through — the FIRST arrival — and the
-    survivor set matches batch exact-dedup over the concatenated stream."""
-    import datetime as dt
-
-    from numalogic_spark.streaming.dedup_stream import streaming_exact_dedup
-
-    t0 = dt.datetime(2024, 1, 1)
-    texts = [f"document body number {i % 7}" for i in range(21)]  # 7 distinct, 3× each
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i:03d}" for i in range(21)],
-            "text": texts,
-            "event_ts": [t0 + dt.timedelta(minutes=i) for i in range(21)],
-        }
-    )
-    schema = "doc_id string, text string, event_ts timestamp"
-    d = tmp_path / "dedup_src"
-    for i, chunk in enumerate(np.array_split(np.arange(len(pdf)), 3)):
-        spark.createDataFrame(pdf.iloc[chunk], schema).repartition(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)  # one file per micro-batch: the
-        # duplicate of a batch-1 doc arriving in batch 2/3 must hit STATE,
-        # not within-batch dedup
-        .parquet(str(d) + "/part*")
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from dedup_stream").toPandas()
-    # one survivor per distinct text; first arrival (min ts) wins
-    assert len(got) == 7
-    exp_first = pdf.sort_values(["event_ts", "doc_id"]).groupby("text").head(1)
-    assert set(got["doc_id"]) == set(exp_first["doc_id"])
-    # survivor set matches the batch dedup keeper semantics on arrival order
-    assert set(got["doc_id"]) == {f"d{i:03d}" for i in range(7)}
-
-
 def test_streaming_rollup_drops_late_data(spark, tmp_path):
     """Watermark semantics: an event arriving after its window's watermark
     has passed is DROPPED — the finalized bucket keeps its on-time count;
@@ -207,161 +160,6 @@ def test_streaming_rollup_drops_late_data(spark, tmp_path):
     assert got.loc[t(0), "n_tok_sum"] == 12.0
     # the minute-11 window never crossed the watermark -> not emitted
     assert t(11) not in got.index
-
-
-def test_streaming_minhash_candidates(spark, tmp_path):
-    """Incremental LSH: planted duplicate/near-duplicate docs arriving in
-    DIFFERENT micro-batches are proposed as candidate pairs (state carries
-    earlier arrivals' signatures); the candidate set covers every pair the
-    batch pipeline verifies at the same threshold."""
-    import glob
-    import os
-    import time as _time
-
-    from numalogic_spark.operators.dedup import minhash_lsh_pairs
-    from numalogic_spark.streaming.dedup_stream import streaming_minhash_candidates
-
-    base = [
-        "the quick brown fox jumps over the lazy dog near the river bank today",
-        "spark executes declarative dataframe plans with catalyst optimizing joins and scans",
-        "tokenized training sequences roll up into minute hour and day retention tiers",
-        "completely unrelated text about cooking pasta with garlic olive oil and basil",
-    ]
-    batches = []
-    for v in range(3):  # batch v holds variant v of every base text
-        rows = []
-        for i, t in enumerate(base):
-            text = t if v == 0 else (t + " indeed" if v == 1 else t + " indeed truly")
-            rows.append({"doc_id": f"d{i}_{v}", "text": text})
-        batches.append(pd.DataFrame(rows))
-    schema = "doc_id string, text string"
-    d = tmp_path / "lsh_src"
-    now = _time.time()
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, schema).repartition(1).write.parquet(str(d / f"part{i}"))
-        for f in glob.glob(str(d / f"part{i}" / "*.parquet")):
-            os.utime(f, (now - 60 + 10 * i, now - 60 + 10 * i))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d) + "/part*")
-    )
-    q = (
-        streaming_minhash_candidates(stream)
-        .writeStream.format("memory")
-        .queryName("lsh_cand")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = (
-        spark.sql("select * from lsh_cand")
-        .toPandas()
-        .drop_duplicates(["id_a", "id_b"])
-    )
-    cand = set(zip(got["id_a"], got["id_b"]))
-    # candidates must cover every batch-verified pair on the full corpus
-    full = spark.createDataFrame(pd.concat(batches, ignore_index=True), schema)
-    verified = minhash_lsh_pairs(full).toPandas()
-    assert len(verified) > 0
-    missed = [p for p in zip(verified["id_a"], verified["id_b"]) if p not in cand]
-    assert not missed, missed
-    # cross-batch coverage specifically: variants of one text live in
-    # different micro-batches, so the state (not within-batch logic) found them
-    cross = [(a, b) for a, b in cand if a.split("_")[1] != b.split("_")[1]]
-    assert len(cross) >= len(base)
-    # no candidate pairs across unrelated base texts
-    assert all(a.split("_")[0] == b.split("_")[0] for a, b in cand)
-
-
-def test_streaming_minhash_no_duplicate_emission(spark, tmp_path):
-    """ADVICE round-2: a row that enters state must not ALSO be compared
-    via the within-batch list — each (id_a, id_b, band) candidate is
-    emitted at most once per batch."""
-    import glob
-    import os
-    import time as _time
-
-    from numalogic_spark.streaming.dedup_stream import streaming_minhash_candidates
-
-    # one batch of three near-identical docs: every pair collides in many
-    # bands; the pre-fix code double-compared rows that entered state
-    text = "the same text repeated across documents for bucket collision purposes"
-    rows = [{"doc_id": f"d{i}", "text": text + (" extra" if i == 2 else "")} for i in range(3)]
-    schema = "doc_id string, text string"
-    d = tmp_path / "lsh_dup"
-    spark.createDataFrame(pd.DataFrame(rows), schema).repartition(1).write.parquet(str(d / "p0"))
-    now = _time.time()
-    for f in glob.glob(str(d / "p0" / "*.parquet")):
-        os.utime(f, (now - 60, now - 60))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(str(d) + "/p*")
-    )
-    q = (
-        streaming_minhash_candidates(stream)
-        .writeStream.format("memory")
-        .queryName("lsh_dupcheck")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from lsh_dupcheck").toPandas()
-    assert len(got) > 0
-    dup_mask = got.duplicated(["id_a", "id_b", "band"], keep=False)
-    assert not dup_mask.any(), got[dup_mask].to_string()
-
-
-def test_streaming_minhash_redelivery_no_duplicate(spark, tmp_path):
-    """At-least-once replay: a state-resident id re-delivered in a later
-    batch must not also enter the within-batch list — a new row matching it
-    emits the candidate pair exactly once (review finding round 3)."""
-    import glob
-    import os
-    import time as _time
-
-    from numalogic_spark.streaming.dedup_stream import streaming_minhash_candidates
-
-    text = "identical text shared by every document in this redelivery scenario"
-    schema = "doc_id string, text string"
-    d = tmp_path / "lsh_redeliver"
-    # re-delivered id sorts AFTER the new id — the harder order: the new
-    # row is processed first, pairs against state, and the replayed row
-    # must then be skipped entirely (not just kept out of batch_ids)
-    b0 = pd.DataFrame([{"doc_id": "dZ", "text": text}])
-    b1 = pd.DataFrame([{"doc_id": "dZ", "text": text}, {"doc_id": "dA", "text": text},
-                       {"doc_id": "dA", "text": text}])  # + same-batch duplicate
-    now = _time.time()
-    for i, b in enumerate([b0, b1]):
-        spark.createDataFrame(b, schema).repartition(1).write.parquet(str(d / f"p{i}"))
-        for f in glob.glob(str(d / f"p{i}" / "*.parquet")):
-            os.utime(f, (now - 60 + 10 * i, now - 60 + 10 * i))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d) + "/p*")
-    )
-    q = (
-        streaming_minhash_candidates(stream)
-        .writeStream.format("memory")
-        .queryName("lsh_redeliver")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from lsh_redeliver").toPandas()
-    # the (dA, dZ) pair must appear exactly once per band — the pre-fix
-    # code emitted it twice (replayed state copy re-ran the compare loop,
-    # and a same-batch duplicate occupied two batch slots)
-    per_band = got.groupby(["id_a", "id_b", "band"]).size()
-    assert (per_band == 1).all(), got.to_string()
-    assert {("dA", "dZ")} == set(zip(got["id_a"], got["id_b"]))
 
 
 def test_streaming_hampel_matches_batch_kernel(spark, tmp_path):
