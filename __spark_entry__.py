@@ -15,22 +15,19 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from numalogic_spark.functions import transforms as TX
+from numalogic_spark.functions.exprs import round6
 from numalogic_spark.operators.gapfill import gapfill_linear
 from numalogic_spark.operators.rollup import RollupConfig, histogram, rollup_tiers_fused
 
-def _r6(col):
-    """Deterministic 6-dp rounding: floor(x*1e6 + 0.5)/1e6 on BOTH engines.
 
-    Spark's round() is HALF_UP while DuckDB's is half-to-even; on exact .5
-    ties (common for means of 2-dp values) they disagree. floor() has one
-    definition everywhere, so identical doubles round identically.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+def _r6(col: str | Column) -> Column:
+    """`round6` of a column or column name: the cross-engine 6-dp rounding
+    that every oracle replays as floor(x * 1000000 + 0.5) / 1000000.0."""
+    return round6(F.col(col) if isinstance(col, str) else col)
 
 
 EVENTS_CFG = RollupConfig(
@@ -878,10 +875,6 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-_ACF_LAGS = (1, 2, 3, 6, 12)
-_EVT_WINDOW_SQL = "PARTITION BY event_type ORDER BY floor(epoch(ts)), event_id"
-
-
 def _evt_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events as a per-series frame: source=event_type, integral-second
     ts + event_id ordering (the ewm_smooth ordering discipline)."""
@@ -893,141 +886,9 @@ def _evt_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series autocorrelation (statsmodels-style full-mean estimator)
-    at lags 1/2/3/6/12 — decimal raw moments, one sort + one agg."""
-    from numalogic_spark.operators.tsfeatures import acf
-
-    out = acf(_evt_series(spark, sf_dir), lags=_ACF_LAGS)
-    return out.select("source", "lag", "n_used", _r6("acf_value").alias("acf_value"))
-
-
-def _acf_sql() -> str:
-    """DuckDB replay: identical decimal moments (Σx, Σx², Σx·lag_k as
-    DECIMAL(19,6) sums → exact), identical double expression shapes for
-    mean/variance/ACF, UNION ALL unpivot per lag."""
-    lag_cols = ",\n         ".join(
-        f"lag(CAST(value AS DECIMAL(19,6)), {k}) OVER w AS l{k}" for k in _ACF_LAGS
-    )
-    mom_cols = ",\n         ".join(
-        f"count(l{k}) AS nk{k},\n"
-        f"         CAST(sum(xd * l{k}) AS DOUBLE) AS sxl{k},\n"
-        f"         CAST(sum(CASE WHEN l{k} IS NOT NULL THEN xd END) AS DOUBLE) AS sxk{k},\n"
-        f"         CAST(sum(l{k}) AS DOUBLE) AS slk{k}"
-        for k in _ACF_LAGS
-    )
-    mu = "(sx / CAST(n AS DOUBLE))"
-    den = "(sxx - (sx * sx) / CAST(n AS DOUBLE))"
-    arms = "\nUNION ALL\n".join(
-        f"SELECT source, {k} AS lag, nk{k} AS n_used,\n"
-        f"       floor((CASE WHEN {den} > 0.0 AND nk{k} > 0 THEN\n"
-        f"         (sxl{k} - {mu} * (sxk{k} + slk{k}) + CAST(nk{k} AS DOUBLE) * {mu} * {mu}) / {den}\n"
-        f"         ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0 AS acf_value\n"
-        f"FROM m"
-        for k in _ACF_LAGS
-    )
-    return f"""
-WITH b AS (
-  SELECT event_type AS source,
-         CAST(value AS DECIMAL(19,6)) AS xd,
-         {lag_cols}
-  FROM events
-  WINDOW w AS ({_EVT_WINDOW_SQL})
-), m AS (
-  SELECT source,
-         count(*) AS n,
-         CAST(sum(xd) AS DOUBLE) AS sx,
-         CAST(sum(xd * xd) AS DOUBLE) AS sxx,
-         {mom_cols}
-  FROM b GROUP BY 1
-)
-{arms}
-"""
-
-
-def _q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series CUSUM change-point (standardized cumulative sum,
-    earliest argmax of |s|) — running decimal sum, one sort reused."""
-    from numalogic_spark.operators.tsfeatures import cusum_changepoint
-
-    return cusum_changepoint(_evt_series(spark, sf_dir))
-
-
-def _cusum_sql() -> str:
-    return f"""
-WITH b AS (
-  SELECT event_type AS source,
-         CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, event_id,
-         CAST(sum(CAST(value AS DECIMAL(19,6)))
-              OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run,
-         row_number() OVER w AS pos,
-         CAST(value AS DECIMAL(19,6)) AS xd
-  FROM events
-  WINDOW w AS ({_EVT_WINDOW_SQL})
-), m AS (
-  SELECT source, count(*) AS n,
-         CAST(sum(xd) AS DOUBLE) AS sx,
-         CAST(sum(xd * xd) AS DOUBLE) AS sxx
-  FROM b GROUP BY 1
-), st AS (
-  SELECT source, n, sx / CAST(n AS DOUBLE) AS mu,
-         CASE WHEN (sxx - (sx * sx) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE) > 0.0
-              THEN sqrt((sxx - (sx * sx) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))
-              ELSE 0.0 END AS sd
-  FROM m
-), s AS (
-  SELECT b.source, st.n, b.ts_s, b.event_id, b.pos,
-         CASE WHEN st.sd > 0.0
-              THEN abs((b.run - CAST(b.pos AS DOUBLE) * st.mu) / st.sd)
-              ELSE 0.0 END AS s_abs
-  FROM b JOIN st USING (source)
-)
-SELECT source, n, ts_s AS cp_ts_s, event_id AS cp_event_id, pos AS cp_pos,
-       floor(s_abs * 1000000 + 0.5) / 1000000.0 AS s_abs_max
-FROM (SELECT *, row_number() OVER (PARTITION BY source ORDER BY s_abs DESC, pos ASC) AS rk FROM s)
-WHERE rk = 1
-"""
-
-
-def _q_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-window Hampel filter (rolling exact median + MAD outlier
-    flag) — sorted-array medians via JVM HOFs, one sort per series."""
-    from numalogic_spark.operators.tsfeatures import hampel_filter
-
-    return hampel_filter(_evt_series(spark, sf_dir), window=11, n_sigmas=3.0)
-
-
-def _hampel_sql(window: int = 11, n_sigmas: float = 3.0) -> str:
-    # `//` (int div) in DuckDB ≡ Spark's double-div + int-cast truncation;
-    # a bare CAST would ROUND and pick the wrong middle element
-    return f"""
-WITH b AS (
-  SELECT event_type AS source,
-         CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, event_id, value,
-         list_sort(list(value)
-           OVER (w ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)) AS arr
-  FROM events
-  WINDOW w AS ({_EVT_WINDOW_SQL})
-), s AS (
-  SELECT source, ts_s, event_id, value, arr,
-         (arr[(len(arr) + 1) // 2] + arr[(len(arr) + 2) // 2]) / 2.0 AS med
-  FROM b
-), s2 AS (
-  SELECT source, ts_s, event_id, value, med,
-         (d[(len(d) + 1) // 2] + d[(len(d) + 2) // 2]) / 2.0 AS mad
-  FROM (SELECT *, list_sort(list_transform(arr, a -> abs(a - med))) AS d FROM s)
-)
-SELECT source, ts_s, event_id, value,
-       floor(med * 1000000 + 0.5) / 1000000.0 AS med,
-       floor(mad * 1000000 + 0.5) / 1000000.0 AS mad,
-       abs(value - med) > {n_sigmas} * 1.4826 * mad AS is_outlier
-FROM s2
-"""
-
-
 def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1h-bucketed per-source value sums (decimal-exact, 6-dp output) —
-    the regular-series input for STL / Holt."""
+    the regular-series input for Holt / Kalman."""
     return (
         _evt_series(spark, sf_dir)
         .groupBy(
@@ -1045,14 +906,6 @@ _HOURLY_SQL = """
          floor(CAST(sum(CAST(value AS DECIMAL(15,6))) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS val
   FROM events GROUP BY 1, 2
 """
-
-
-def _q_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical additive decomposition (2×24 MA trend, centered phase-
-    mean seasonal, remainder) on the 1h-bucketed event series."""
-    from numalogic_spark.operators.tsfeatures import stl_lite
-
-    return stl_lite(_hourly_series(spark, sf_dir), period=24, bucket_seconds=3600)
 
 
 def _q_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1106,297 +959,6 @@ FROM rec
 """
 
 
-def _stl_sql(period: int = 24) -> str:
-    half = period // 2
-    return f"""
-WITH hourly AS (
-  SELECT event_type AS source,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS bucket_s,
-         floor(CAST(sum(CAST(value AS DECIMAL(15,6))) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS val
-  FROM events GROUP BY 1, 2
-), t AS (
-  SELECT source, bucket_s, val,
-         CASE WHEN lag(vd, {half}) OVER w IS NOT NULL
-                   AND lead(vd, {half}) OVER w IS NOT NULL
-                   AND count(*) OVER (w ROWS BETWEEN {half} PRECEDING AND {half} FOLLOWING) = {period + 1}
-              THEN CAST(sum(vd) OVER (w ROWS BETWEEN {half} PRECEDING AND {half} FOLLOWING)
-                        - 0.5 * lag(vd, {half}) OVER w
-                        - 0.5 * lead(vd, {half}) OVER w AS DOUBLE) / {float(period)}
-         END AS trend
-  FROM (SELECT *, CAST(val AS DECIMAL(15,6)) AS vd FROM hourly)
-  WINDOW w AS (PARTITION BY source ORDER BY bucket_s)
-), det AS (
-  SELECT source, bucket_s, val, trend,
-         (bucket_s // 3600) % {period} AS phase,
-         CAST(floor((val - trend) * 1000000 + 0.5) / 1000000.0 AS DECIMAL(15,6)) AS dd
-  FROM t WHERE trend IS NOT NULL
-), seas0 AS (
-  SELECT source, phase,
-         CAST(floor((CAST(sum(dd) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5)
-              / 1000000.0 AS DECIMAL(15,6)) AS sr6
-  FROM det GROUP BY 1, 2
-), seas AS (
-  SELECT s.source, s.phase,
-         CAST(s.sr6 AS DOUBLE) - c.c AS seasonal
-  FROM seas0 s
-  JOIN (SELECT source, CAST(sum(sr6) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS c
-        FROM seas0 GROUP BY 1) c USING (source)
-)
-SELECT d.source, d.bucket_s, d.val,
-       floor(d.trend * 1000000 + 0.5) / 1000000.0 AS trend,
-       floor(s.seasonal * 1000000 + 0.5) / 1000000.0 AS seasonal,
-       floor((d.val - d.trend - s.seasonal) * 1000000 + 0.5) / 1000000.0 AS remainder
-FROM det d JOIN seas s USING (source, phase)
-"""
-
-
-def _q_series_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-series describe (count/min/quantiles/max/mean/std) via
-    the value-histogram trick — distinct-value state, not row state."""
-    from numalogic_spark.operators.tsfeatures import series_summary
-
-    out = series_summary(_evt_series(spark, sf_dir))
-    qcols = [c for c in out.columns if c.startswith("q")]
-    return out.select(
-        "source", "n", "vmin", *qcols, "vmax",
-        _r6("mean").alias("mean"), _r6("std").alias("std"),
-    )
-
-
-def _series_summary_sql(
-    quantiles=(0.25, 0.5, 0.75, 0.95, 0.99), scale: int = 100
-) -> str:
-    qexprs = ",\n       ".join(
-        f"CAST(min(CASE WHEN cum >= CAST(ceil({float(q)!r} * CAST(n AS DOUBLE)) AS BIGINT)"
-        f" THEN k END) AS DOUBLE) / {float(scale)!r} AS q{int(round(q * 100)):02d}"
-        for q in quantiles
-    )
-    return f"""
-WITH h AS (
-  SELECT event_type AS source,
-         CAST(floor(value * {float(scale)!r} + 0.5) AS BIGINT) AS k,
-         count(*) AS c
-  FROM events GROUP BY 1, 2
-), cum AS (
-  SELECT source, k, c,
-         sum(c) OVER (PARTITION BY source ORDER BY k
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         sum(c) OVER (PARTITION BY source) AS n
-  FROM h
-), m AS (
-  SELECT source,
-       CAST(first(n) AS BIGINT) AS n,
-       CAST(min(k) AS DOUBLE) / {float(scale)!r} AS vmin,
-       {qexprs},
-       CAST(max(k) AS DOUBLE) / {float(scale)!r} AS vmax,
-       CAST(sum(CAST(k AS DECIMAL(18,0)) * CAST(c AS DECIMAL(19,0))) AS DOUBLE) AS sk,
-       CAST(sum(CAST(k * k AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))) AS DOUBLE) AS skk
-  FROM cum GROUP BY 1
-)
-SELECT source, n, vmin, {', '.join(f"q{int(round(q * 100)):02d}" for q in quantiles)}, vmax,
-       floor(((sk / CAST(n AS DOUBLE)) / {float(scale)!r}) * 1000000 + 0.5) / 1000000.0 AS mean,
-       floor((CASE WHEN (skk - (sk * sk) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE) > 0.0
-              THEN sqrt((skk - (sk * sk) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)) / {float(scale)!r}
-              ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0 AS std
-FROM m
-"""
-
-
-def _q_pot_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPOT-style extreme-value threshold per series: exact histogram
-    quantile u + closed-form (MoM) GPD fit over the exceedances."""
-    from numalogic_spark.operators.tsfeatures import pot_threshold
-
-    out = pot_threshold(
-        _evt_series(spark, sf_dir), u_quantile=0.95, target_prob=1e-4
-    )
-    return out.select(
-        "source", "n", "u", "n_exceed",
-        _r6("xi").alias("xi"), _r6("sigma").alias("sigma"), _r6("z_q").alias("z_q"),
-    )
-
-
-def _pot_sql(u_quantile: float = 0.95, target_prob: float = 1e-4, scale: int = 100) -> str:
-    uq, p, sc = repr(float(u_quantile)), repr(float(target_prob)), repr(float(scale))
-    fit = """
-  SELECT us.source, us.n, us.u,
-         CAST(coalesce(mom.n_exceed, 0) AS BIGINT) AS n_exceed,
-         se / CAST(mom.n_exceed AS DOUBLE) AS m,
-         (see - (se * se) / CAST(mom.n_exceed AS DOUBLE)) / CAST(mom.n_exceed AS DOUBLE) AS v
-  FROM us LEFT JOIN mom USING (source)
-"""
-    return f"""
-WITH h AS (
-  SELECT event_type AS source,
-         CAST(floor(value * {sc} + 0.5) AS BIGINT) AS k, count(*) AS c
-  FROM events GROUP BY 1, 2
-), cum AS (
-  SELECT source, k, c,
-         sum(c) OVER (PARTITION BY source ORDER BY k
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         sum(c) OVER (PARTITION BY source) AS n
-  FROM h
-), us AS (
-  SELECT source, CAST(first(n) AS BIGINT) AS n,
-         CAST(min(CASE WHEN cum >= CAST(ceil({uq} * CAST(n AS DOUBLE)) AS BIGINT)
-                  THEN k END) AS DOUBLE) / {sc} AS u
-  FROM cum GROUP BY 1
-), exc AS (
-  SELECT e.event_type AS source, CAST(e.value - us.u AS DECIMAL(19,6)) AS ed
-  FROM events e JOIN us ON us.source = e.event_type
-  WHERE e.value > us.u
-), mom AS (
-  SELECT source, count(*) AS n_exceed,
-         CAST(sum(ed) AS DOUBLE) AS se,
-         CAST(sum(ed * ed) AS DOUBLE) AS see
-  FROM exc GROUP BY 1
-), f AS ({fit}
-), g AS (
-  SELECT source, n, u, n_exceed,
-         0.5 * (1.0 - (m * m) / v) AS xi,
-         0.5 * m * ((m * m) / v + 1.0) AS sigma,
-         ({p} * CAST(n AS DOUBLE)) / CAST(n_exceed AS DOUBLE) AS r,
-         (n_exceed > 1 AND v > 0.0) AS ok, m, v
-  FROM f
-)
-SELECT source, n, u, n_exceed,
-       floor((CASE WHEN ok THEN xi END) * 1000000 + 0.5) / 1000000.0 AS xi,
-       floor((CASE WHEN ok THEN sigma END) * 1000000 + 0.5) / 1000000.0 AS sigma,
-       floor((CASE WHEN ok THEN
-           CASE WHEN abs(xi) < 1e-09 THEN u - sigma * ln(r)
-                ELSE u + (sigma / xi) * (pow(r, -xi) - 1.0) END
-         END) * 1000000 + 0.5) / 1000000.0 AS z_q
-FROM g
-"""
-
-
-def _q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series OLS trend on position (slope/intercept/r²) from decimal
-    raw moments — one sort + one agg."""
-    from numalogic_spark.operators.tsfeatures import trend_slope
-
-    out = trend_slope(_evt_series(spark, sf_dir))
-    return out.select(
-        "source", "n",
-        _r6("slope").alias("slope"),
-        _r6("intercept").alias("intercept"),
-        _r6("r2").alias("r2"),
-    )
-
-
-def _trend_slope_sql() -> str:
-    return f"""
-WITH b AS (
-  -- (19,6) not (15,6): DuckDB multiplies (15,6)x(15,6) in scaled INT64
-  -- and overflows near 3e3; widening forces INT128. The VALUES are the
-  -- same exact decimals Spark sums at (15,6), so the doubles agree.
-  SELECT event_type AS source,
-         CAST(row_number() OVER ({_EVT_WINDOW_SQL}) AS DECIMAL(19,6)) AS xd,
-         CAST(value AS DECIMAL(19,6)) AS yd
-  FROM events
-), m AS (
-  SELECT source, count(*) AS n,
-         CAST(sum(xd) AS DOUBLE) AS sx,
-         CAST(sum(yd) AS DOUBLE) AS sy,
-         CAST(sum(xd * xd) AS DOUBLE) AS sxx,
-         CAST(sum(yd * yd) AS DOUBLE) AS syy,
-         CAST(sum(xd * yd) AS DOUBLE) AS sxy
-  FROM b GROUP BY 1
-), s AS (
-  SELECT source, n,
-         CASE WHEN (CAST(n AS DOUBLE) * sxx - sx * sx) > 0.0
-              THEN (CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx)
-              ELSE 0.0 END AS slope,
-         CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-         CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         CAST(n AS DOUBLE) * syy - sy * sy AS vy,
-         sx, sy
-  FROM m
-)
-SELECT source, n,
-       floor(slope * 1000000 + 0.5) / 1000000.0 AS slope,
-       floor(((sy - slope * sx) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000.0 AS intercept,
-       floor((CASE WHEN vx > 0.0 AND vy > 0.0 THEN (num * num) / (vx * vy) ELSE 0.0 END)
-             * 1000000 + 0.5) / 1000000.0 AS r2
-FROM s
-"""
-
-
-def _q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-robust anomaly flags: STL-lite remainder median/MAD test
-    per series (the non-iterative S-H-ESD core)."""
-    from numalogic_spark.operators.tsfeatures import seasonal_anomalies, stl_lite
-
-    dec = stl_lite(_hourly_series(spark, sf_dir), period=24, bucket_seconds=3600)
-    return seasonal_anomalies(dec, n_sigmas=3.0)
-
-
-def _seasonal_anomalies_sql(n_sigmas: float = 3.0) -> str:
-    return f"""
-WITH dec AS ({_stl_sql()}),
-st AS (
-  SELECT source,
-         (arr[(len(arr) + 1) // 2] + arr[(len(arr) + 2) // 2]) / 2.0 AS rem_med, arr
-  FROM (SELECT source, list_sort(list(remainder)) AS arr FROM dec GROUP BY 1)
-), st2 AS (
-  SELECT source, rem_med,
-         (d[(len(d) + 1) // 2] + d[(len(d) + 2) // 2]) / 2.0 AS rem_mad
-  FROM (SELECT source, rem_med,
-               list_sort(list_transform(arr, a -> abs(a - rem_med))) AS d
-        FROM st)
-)
-SELECT dec.source, dec.bucket_s, dec.val, dec.trend, dec.seasonal, dec.remainder,
-       floor(rem_med * 1000000 + 0.5) / 1000000.0 AS rem_med,
-       floor(rem_mad * 1000000 + 0.5) / 1000000.0 AS rem_mad,
-       abs(dec.remainder - rem_med) > {n_sigmas} * 1.4826 * rem_mad AS is_anomaly
-FROM dec JOIN st2 USING (source)
-"""
-
-
-_PH_DELTA, _PH_LAMBDA = 0.0, 200.0
-
-
-def _q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page–Hinkley drift test on the hourly series — sequential
-    running-mean recursion in applyInPandas, 6-dp ph output."""
-    from numalogic_spark.operators.tsfeatures import page_hinkley
-
-    out = page_hinkley(
-        _hourly_series(spark, sf_dir), delta=_PH_DELTA, lam=_PH_LAMBDA
-    )
-    return out.select("source", "bucket_s", "val", _r6("ph").alias("ph"), "alarm")
-
-
-def _page_hinkley_sql() -> str:
-    d, lam = repr(float(_PH_DELTA)), repr(float(_PH_LAMBDA))
-    m_new = f"r.m + (i.val - (r.s + i.val) / CAST(i.pos AS DOUBLE) - {d})"
-    return f"""
-WITH RECURSIVE hourly AS ({_HOURLY_SQL}),
-ix AS (
-  SELECT source, bucket_s, val,
-         row_number() OVER (PARTITION BY source ORDER BY bucket_s) AS pos
-  FROM hourly
-),
-rec AS (
-  SELECT source, pos, bucket_s, val,
-         val AS s,
-         (val - val - {d}) AS m,
-         (val - val - {d}) AS mmin
-  FROM ix WHERE pos = 1
-  UNION ALL
-  SELECT i.source, i.pos, i.bucket_s, i.val,
-         r.s + i.val AS s,
-         {m_new} AS m,
-         least(r.mmin, {m_new}) AS mmin
-  FROM rec r JOIN ix i ON i.source = r.source AND i.pos = r.pos + 1
-)
-SELECT source, bucket_s, val,
-       floor((m - mmin) * 1000000 + 0.5) / 1000000.0 AS ph,
-       (m - mmin) > {lam} AS alarm
-FROM rec
-"""
-
-
 _KF_Q, _KF_R = 1.0, 4.0
 
 
@@ -1445,251 +1007,6 @@ SELECT source, bucket_s, val,
        floor(gain * 1000000 + 0.5) / 1000000.0 AS gain,
        floor(innov * 1000000 + 0.5) / 1000000.0 AS innovation
 FROM rec
-"""
-
-
-_PERIOD_LAGS = tuple(range(2, 37))
-
-
-def _q_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Auto-detected seasonality: the lag in 2..36 with the highest
-    hourly-series autocorrelation (ties → smallest lag) — the
-    configure-`period`-for-STL/SeasonalNaive helper."""
-    from numalogic_spark.operators.tsfeatures import acf
-
-    hourly = _hourly_series(spark, sf_dir)
-    scored = acf(
-        hourly, value_col="val", source_col="source",
-        order_cols=("bucket_s",), lags=_PERIOD_LAGS,
-    )
-    pick = Window.partitionBy("source").orderBy(
-        F.desc("acf_value"), F.asc("lag")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(pick))
-        .filter(F.col("_rk") == 1)
-        .select(
-            "source",
-            F.col("lag").alias("period"),
-            "n_used",
-            _r6("acf_value").alias("acf_value"),
-        )
-    )
-
-
-def _dominant_period_sql() -> str:
-    lag_cols = ",\n         ".join(
-        f"lag(CAST(val AS DECIMAL(19,6)), {k}) OVER w AS l{k}" for k in _PERIOD_LAGS
-    )
-    mom_cols = ",\n         ".join(
-        f"count(l{k}) AS nk{k},\n"
-        f"         CAST(sum(xd * l{k}) AS DOUBLE) AS sxl{k},\n"
-        f"         CAST(sum(CASE WHEN l{k} IS NOT NULL THEN xd END) AS DOUBLE) AS sxk{k},\n"
-        f"         CAST(sum(l{k}) AS DOUBLE) AS slk{k}"
-        for k in _PERIOD_LAGS
-    )
-    mu = "(sx / CAST(n AS DOUBLE))"
-    den = "(sxx - (sx * sx) / CAST(n AS DOUBLE))"
-    arms = "\nUNION ALL\n".join(
-        f"SELECT source, {k} AS lag, nk{k} AS n_used,\n"
-        f"       CASE WHEN {den} > 0.0 AND nk{k} > 0 THEN\n"
-        f"         (sxl{k} - {mu} * (sxk{k} + slk{k}) + CAST(nk{k} AS DOUBLE) * {mu} * {mu}) / {den}\n"
-        f"         ELSE 0.0 END AS acf_value\n"
-        f"FROM m"
-        for k in _PERIOD_LAGS
-    )
-    return f"""
-WITH hourly AS ({_HOURLY_SQL}),
-b AS (
-  SELECT source,
-         CAST(val AS DECIMAL(19,6)) AS xd,
-         {lag_cols}
-  FROM hourly
-  WINDOW w AS (PARTITION BY source ORDER BY bucket_s)
-), m AS (
-  SELECT source,
-         count(*) AS n,
-         CAST(sum(xd) AS DOUBLE) AS sx,
-         CAST(sum(xd * xd) AS DOUBLE) AS sxx,
-         {mom_cols}
-  FROM b GROUP BY 1
-), scored AS (
-{arms}
-)
-SELECT source, lag AS period, n_used,
-       floor(acf_value * 1000000 + 0.5) / 1000000.0 AS acf_value
-FROM (SELECT *, row_number() OVER (PARTITION BY source ORDER BY acf_value DESC, lag ASC) AS rk
-      FROM scored)
-WHERE rk = 1
-"""
-
-
-_PSI_BINS = 10
-
-
-def _q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI between the first and second time halves of each hourly
-    series — quantile bins from the first half, Laplace-smoothed
-    shares, sorted-fold sum."""
-    from numalogic_spark.operators.tsfeatures import psi_drift
-
-    out = psi_drift(_hourly_series(spark, sf_dir), n_bins=_PSI_BINS)
-    return out.select("source", "n_first", "n_second", _r6("psi").alias("psi"))
-
-
-def _psi_sql(n_bins: int = _PSI_BINS, scale: int = 100) -> str:
-    sc = repr(float(scale))
-    edge_sel = ",\n         ".join(
-        f"CAST(min(CASE WHEN cum >= CAST(ceil({j / n_bins!r} * CAST(n1 AS DOUBLE)) AS BIGINT)"
-        f" THEN k END) AS DOUBLE) / {sc} AS e{j}"
-        for j in range(1, n_bins)
-    )
-    bin_expr = " + ".join(
-        f"(CASE WHEN v > e{j} THEN 1 ELSE 0 END)" for j in range(1, n_bins)
-    )
-    lap = repr(float(n_bins) / 2.0)
-    return f"""
-WITH hourly AS ({_HOURLY_SQL}),
-ix AS (
-  SELECT source, val AS v,
-         row_number() OVER (PARTITION BY source ORDER BY bucket_s) AS pos,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM hourly
-), base AS (
-  SELECT source, v, CASE WHEN pos <= n // 2 THEN 1 ELSE 2 END AS half FROM ix
-), h1 AS (
-  SELECT source, CAST(floor(v * {sc} + 0.5) AS BIGINT) AS k, count(*) AS c
-  FROM base WHERE half = 1 GROUP BY 1, 2
-), cum AS (
-  SELECT source, k,
-         sum(c) OVER (PARTITION BY source ORDER BY k
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         sum(c) OVER (PARTITION BY source) AS n1
-  FROM h1
-), edges AS (
-  SELECT source,
-         {edge_sel}
-  FROM cum GROUP BY 1
-), binned AS (
-  SELECT b.source, b.half, ({bin_expr}) AS bin
-  FROM base b JOIN edges USING (source)
-), counts AS (
-  SELECT source, half, bin, count(*) AS c FROM binned GROUP BY 1, 2, 3
-), halves AS (
-  SELECT source, half, count(*) AS hn FROM base GROUP BY 1, 2
-), grid AS (
-  SELECT h.source, h.half, g.b, h.hn,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS c
-  FROM halves h
-  CROSS JOIN (SELECT unnest(generate_series(0, {n_bins - 1})) AS b) g
-  LEFT JOIN counts c ON c.source = h.source AND c.half = h.half AND c.bin = g.b
-), pq AS (
-  SELECT source, half, b, hn,
-         (CAST(c AS DOUBLE) + 0.5) / (CAST(hn AS DOUBLE) + {lap}) AS sh
-  FROM grid
-), terms AS (
-  SELECT p.source,
-         CAST(p.hn AS BIGINT) AS n_first, CAST(q.hn AS BIGINT) AS n_second,
-         (q.sh - p.sh) * ln(q.sh / p.sh) AS t
-  FROM (SELECT * FROM pq WHERE half = 1) p
-  JOIN (SELECT * FROM pq WHERE half = 2) q USING (source, b)
-)
-SELECT source, n_first, n_second,
-       floor(list_sum(list_sort(list(t))) * 1000000 + 0.5) / 1000000.0 AS psi
-FROM terms GROUP BY 1, 2, 3
-"""
-
-
-_CCF_LAGS = (-3, -2, -1, 0, 1, 2, 3)
-
-
-def _q_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead/lag cross-correlation for every source pair on the hourly
-    grid — shift-join (no per-series sort), one join for all lags."""
-    from numalogic_spark.operators.tsfeatures import ccf_pairs
-
-    out = ccf_pairs(_hourly_series(spark, sf_dir), lags=_CCF_LAGS)
-    return out.select("src_a", "src_b", "lag", "n", _r6("ccf").alias("ccf"))
-
-
-def _ccf_sql() -> str:
-    lag_list = ", ".join(str(k) for k in _CCF_LAGS)
-    return f"""
-WITH hourly AS ({_HOURLY_SQL}),
-a AS (
-  SELECT source AS src_a, bucket_s, CAST(val AS DECIMAL(19,6)) AS xd FROM hourly
-), b AS (
-  SELECT source AS src_b, t.k AS lag,
-         bucket_s + CAST(t.k AS BIGINT) * 3600 AS bucket_s,
-         CAST(val AS DECIMAL(19,6)) AS yd
-  FROM hourly, unnest([{lag_list}]) AS t(k)
-), m AS (
-  SELECT src_a, src_b, lag, count(*) AS n,
-         CAST(sum(xd) AS DOUBLE) AS sx,
-         CAST(sum(yd) AS DOUBLE) AS sy,
-         CAST(sum(xd * xd) AS DOUBLE) AS sxx,
-         CAST(sum(yd * yd) AS DOUBLE) AS syy,
-         CAST(sum(xd * yd) AS DOUBLE) AS sxy
-  FROM a JOIN b USING (bucket_s)
-  WHERE src_a < src_b
-  GROUP BY 1, 2, 3
-)
-SELECT src_a, src_b, lag, n,
-       floor((CASE WHEN CAST(n AS DOUBLE) > 1.0
-                        AND (CAST(n AS DOUBLE) * sxx - sx * sx) > 0.0
-                        AND (CAST(n AS DOUBLE) * syy - sy * sy) > 0.0
-              THEN (CAST(n AS DOUBLE) * sxy - sx * sy)
-                   / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy))
-              END) * 1000000 + 0.5) / 1000000.0 AS ccf
-FROM m
-"""
-
-
-def _q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 24h Pearson correlation for every source pair on the
-    hourly grid — the co-movement diagnostic (decimal window moments,
-    parallelism = pairs)."""
-    from numalogic_spark.operators.tsfeatures import (
-        aligned_pair_series, rolling_corr)
-
-    h = _hourly_series(spark, sf_dir)
-    # all-pairs default is the oracle's shape (5 sources); production
-    # callers bound the grid with pairs= / top_k_by_variance=
-    pairs = aligned_pair_series(h)
-    out = rolling_corr(
-        pairs, "x", "y", key_cols=("src_a", "src_b"), order_col="bucket_s", window=24
-    )
-    return out.select(
-        "src_a", "src_b", "bucket_s", "x", "y", _r6("corr").alias("corr")
-    )
-
-
-def _rolling_corr_sql(window: int = 24) -> str:
-    return f"""
-WITH hourly AS ({_HOURLY_SQL}),
-p AS (
-  SELECT a.source AS src_a, b.source AS src_b, a.bucket_s,
-         a.val AS x, b.val AS y,
-         CAST(a.val AS DECIMAL(19,6)) AS xd, CAST(b.val AS DECIMAL(19,6)) AS yd
-  FROM hourly a JOIN hourly b USING (bucket_s)
-  WHERE a.source < b.source
-), m AS (
-  SELECT src_a, src_b, bucket_s, x, y,
-         CAST(count(*) OVER w AS DOUBLE) AS n,
-         CAST(sum(xd) OVER w AS DOUBLE) AS sx,
-         CAST(sum(yd) OVER w AS DOUBLE) AS sy,
-         CAST(sum(xd * xd) OVER w AS DOUBLE) AS sxx,
-         CAST(sum(yd * yd) OVER w AS DOUBLE) AS syy,
-         CAST(sum(xd * yd) OVER w AS DOUBLE) AS sxy
-  FROM p
-  WINDOW w AS (PARTITION BY src_a, src_b ORDER BY bucket_s
-               ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)
-)
-SELECT src_a, src_b, bucket_s, x, y,
-       floor((CASE WHEN n > 1.0 AND (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
-              THEN (n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-              END) * 1000000 + 0.5) / 1000000.0 AS corr
-FROM m
 """
 
 
@@ -2045,45 +1362,6 @@ SELECT tier,
        min(CASE WHEN {keep} THEN bucket_s END) AS min_kept_s,
        max(CASE WHEN {keep} THEN bucket_s END) AS max_kept_s
 FROM t, mx GROUP BY tier
-"""
-
-
-def _q_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAX symbolization: per-series PAA(16) z-normalized to a 4-letter
-    Gaussian-breakpoint alphabet (operators/tsfeatures.py)."""
-    from numalogic_spark.operators.tsfeatures import sax_symbols
-
-    return sax_symbols(_evt_series(spark, sf_dir), segment=16, alphabet=4)
-
-
-_SAX_SQL = """
-WITH b AS (
-  SELECT event_type AS source, CAST(value AS DECIMAL(15,6)) AS vd,
-         CAST((row_number() OVER (PARTITION BY event_type
-               ORDER BY floor(epoch(ts)), event_id) - 1) // 16 AS BIGINT) AS segment
-  FROM events
-), paa AS (
-  SELECT source, segment, count(*) AS n_in_segment,
-         CAST(sum(vd) AS DOUBLE) / count(*) AS praw
-  FROM b GROUP BY 1, 2
-), mom AS (
-  SELECT source, count(*) AS n, CAST(sum(vd) AS DOUBLE) AS sx,
-         CAST(sum(CAST(vd * vd AS DECIMAL(31,12))) AS DOUBLE) AS sxx
-  FROM b GROUP BY 1
-), z AS (
-  SELECT p.source, p.segment, p.n_in_segment, p.praw,
-         floor((CASE WHEN sxx / n - (sx / n) * (sx / n) > 0
-                THEN (praw - sx / n) / sqrt(sxx / n - (sx / n) * (sx / n))
-                ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0 AS zz
-  FROM paa p JOIN mom m ON p.source = m.source
-)
-SELECT source, segment, n_in_segment,
-       floor(praw * 1000000 + 0.5) / 1000000.0 AS paa,
-       zz AS z,
-       substr('abcd', 1 + (CASE WHEN zz >= -0.674490 THEN 1 ELSE 0 END
-                         + CASE WHEN zz >= 0.0 THEN 1 ELSE 0 END
-                         + CASE WHEN zz >= 0.674490 THEN 1 ELSE 0 END), 1) AS symbol
-FROM z
 """
 
 
@@ -3115,25 +2393,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Every entry has an oracle; the one that replays a fit over the
         # sf0.01 fixture falls back to rows-only where it is missing (see
         # oracle_sql). Keep the order stable.
-        "acf_events": _q_acf,
-        "cusum_changepoint_events": _q_cusum,
-        "hampel_filter_events": _q_hampel,
-        "stl_decompose_events": _q_stl,
         "holt_linear_1h_events": _q_holt,
-        "rolling_corr_pairs_events": _q_rolling_corr,
-        "ccf_pairs_events": _q_ccf,
-        "page_hinkley_1h_events": _q_page_hinkley,
-        "psi_drift_events": _q_psi_drift,
-        "dominant_period_events": _q_dominant_period,
         "kalman_level_1h_events": _q_kalman,
-        "series_summary_events": _q_series_summary,
-        "trend_slope_events": _q_trend_slope,
-        "seasonal_anomalies_events": _q_seasonal_anomalies,
-        "pot_threshold_events": _q_pot_threshold,
         "counter_rate_events": _q_counter_rate,
         "m4_downsample_events": _q_m4,
         "retention_policy_events": _q_retention,
-        "sax_symbols_events": _q_sax,
         "lttb_downsample_events": _q_lttb,
         "histogram_quantile_events": _q_hist_quantile,
         "asof_join_events": _q_asof,
@@ -3210,25 +2474,11 @@ def oracle_sql() -> dict[str, str]:
         "ewm_smooth_events": _ewm_smooth_sql(),
         "backtest_events": _backtest_sql(),
         "prometheus_frame_events": _prom_frame_sql(),
-        "acf_events": _acf_sql(),
-        "cusum_changepoint_events": _cusum_sql(),
-        "hampel_filter_events": _hampel_sql(),
-        "stl_decompose_events": _stl_sql(),
         "holt_linear_1h_events": _holt_sql(),
-        "rolling_corr_pairs_events": _rolling_corr_sql(),
-        "ccf_pairs_events": _ccf_sql(),
-        "page_hinkley_1h_events": _page_hinkley_sql(),
-        "psi_drift_events": _psi_sql(),
-        "dominant_period_events": _dominant_period_sql(),
         "kalman_level_1h_events": _kalman_sql(),
-        "series_summary_events": _series_summary_sql(),
-        "trend_slope_events": _trend_slope_sql(),
-        "seasonal_anomalies_events": _seasonal_anomalies_sql(),
-        "pot_threshold_events": _pot_sql(),
         "counter_rate_events": _COUNTER_RATE_SQL,
         "m4_downsample_events": _M4_SQL,
         "retention_policy_events": _retention_sql(),
-        "sax_symbols_events": _SAX_SQL,
         "lttb_downsample_events": _lttb_sql(),
         "histogram_quantile_events": _hist_quantile_sql(),
         "asof_join_events": _ASOF_SQL,

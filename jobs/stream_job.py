@@ -1,5 +1,5 @@
 """spark-submit entrypoint: STREAMING 1m rollup (the live half of the
-kappa layout — stream appends the 1m tier, the batch cascade derives
+kappa layout — stream appends the 1m tier, the batch rollup derives
 1h/1d from it; see streaming/rollup_stream.py).
 
 Usage:
@@ -19,7 +19,7 @@ Design notes for the cluster deployment this mirrors:
   when the watermark passes its end — exactly-once tier rows under the
   checkpointed sink (the micro-batch analog of the manifest's
   bucket-granular idempotence);
-- output parquet partitioned by source, so the batch cascade reading the
+- output parquet partitioned by source, so the batch rollup reading the
   1m tier prunes partitions;
 - optional stateful EWM side-output (applyInPandasWithState) demonstrates
   custom per-series state at scale: state is (source)-keyed, O(1) per
@@ -33,6 +33,8 @@ from __future__ import annotations
 
 import argparse
 import json
+
+from pyspark.errors import AnalysisException
 
 from numalogic_spark.session import get_spark
 
@@ -59,8 +61,11 @@ def main() -> None:
     spark = get_spark("stream_job")
     try:
         static = spark.read.parquet(args.input)  # schema from the at-rest table
-        static.schema  # force analysis — raises if the dir is empty/absent
-    except Exception:
+    except AnalysisException as e:
+        # an absent or still-empty input dir; any other error, a corrupt
+        # file say, is a damaged input and propagates
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         if not args.schema_from:
             raise SystemExit(
                 "--input has no readable parquet yet; pass --schema-from "
@@ -103,16 +108,14 @@ def main() -> None:
     q.awaitTermination()
     if q2 is not None:
         q2.awaitTermination()
-    try:
-        out = spark.read.parquet(args.output)
-        summary = {
-            "tier_rows": out.count(),
-            "sources": out.select("source").distinct().count(),
-        }
-    except Exception:
-        # an append-mode sink whose watermark finalized zero buckets leaves
-        # only an empty _spark_metadata log — a successful (if empty) drain
-        summary = {"tier_rows": 0, "sources": 0}
+    # read back with the tier schema: an append-mode sink whose watermark
+    # finalized zero buckets leaves only an empty _spark_metadata log, which
+    # has no file to infer a schema from but is a successful (if empty) drain
+    out = spark.read.schema(tiers.schema).parquet(args.output)
+    summary = {
+        "tier_rows": out.count(),
+        "sources": out.select("source").distinct().count(),
+    }
     print(json.dumps(summary))
 
 

@@ -72,6 +72,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from numalogic_spark.functions.exprs import round6
+
 TANH_CLAMP = 20.0
 
 
@@ -264,7 +266,7 @@ def window_scores_np(weights: AEWeights, z: np.ndarray) -> tuple[np.ndarray, np.
     s = errs[:, 0].copy()
     for k in range(1, L):
         s = s + errs[:, k]
-    mean6 = np.floor(s / float(L) * 1e6 + 0.5) / 1e6
+    mean6 = _round6_np(s / float(L))
     return mean6, errs.max(axis=1)
 
 
@@ -317,7 +319,7 @@ def ae_window_scores(
     s: Column = F.element_at("recon_err", 1)
     for k in range(2, L + 1):
         s = s + F.element_at("recon_err", k)
-    mean6 = F.floor(s / F.lit(float(L)) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    mean6 = round6(s / F.lit(float(L)))
     return out.withColumn("err_mean", mean6).withColumn(
         "err_max", F.array_max("recon_err")
     )

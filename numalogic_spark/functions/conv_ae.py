@@ -62,6 +62,7 @@ from numalogic_spark.functions.ae import (
     round6_sql,
     sql_error_exprs,
 )
+from numalogic_spark.functions.exprs import round6
 
 SIGMOID_CLAMP = 88.72  # the reference's float32 exp-overflow clip
 
@@ -370,7 +371,7 @@ def conv_ae_window_scores(
     s = F.element_at("recon_err", 1)
     for k in range(2, L + 1):
         s = s + F.element_at("recon_err", k)
-    mean6 = F.floor(s / F.lit(float(L)) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    mean6 = round6(s / F.lit(float(L)))
     return out.withColumn("err_mean", mean6).withColumn(
         "err_max", F.array_max("recon_err")
     )

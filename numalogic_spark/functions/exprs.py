@@ -1,6 +1,11 @@
 """Expression-level utilities: the portable hash under the HLL and
-Count-Min sketches, and `round6`, the cross-engine 6-dp rounding that the
-sketch and PromQL operators apply to their doubles.
+Count-Min sketches, and `round6`, the cross-engine 6-dp rounding.
+
+`round6` is the one Spark-side copy of that rounding. Its callers: the
+`err_mean` of every AE family's window scores (`ae`, `lstm_ae`,
+`conv_ae`, `vae`, `transformer_ae`), the HLL estimate and PromQL rates,
+and the driver queries through `__spark_entry__._r6`. The numpy kernels
+use `functions.ae._round6_np` and the SQL replays `functions.ae.round6_sql`.
 """
 
 from __future__ import annotations

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from numalogic_spark.functions.ae import _round6_np, round6_sql
+from numalogic_spark.functions.exprs import round6
 
 
 @dataclass(frozen=True)
@@ -380,7 +381,7 @@ def vae_window_scores(
     s = F.element_at("recon_err", 1)
     for k in range(2, L + 1):
         s = s + F.element_at("recon_err", k)
-    mean6 = F.floor(s / F.lit(float(L)) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    mean6 = round6(s / F.lit(float(L)))
     return out.withColumn("err_mean", mean6).withColumn(
         "err_max", F.array_max("recon_err")
     )

@@ -314,7 +314,7 @@ def kalman_level(
     initialized x̂_1 = z_1, P_1 = r (gain/innovation NULL at t=1).
     q = process variance, r = observation variance; r/q sets the
     smoothing horizon. Sequential recursion in applyInPandas (the
-    Holt/Page-Hinkley design point); constants are pre-folded IEEE
+    `holt_linear` design point); constants are pre-folded IEEE
     values so the driver's recursive-CTE oracle replays the identical
     op sequence bit-for-bit.
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from numalogic_spark.functions.ae import round6_sql
+from numalogic_spark.functions.ae import _round6_np, round6_sql
 
 FAMILIES = ("vanilla", "sparse", "conv", "lstm", "transformer", "vae")
 
@@ -176,13 +176,11 @@ def score_windows_np(family: str, weights, z):
     scalar shape every gated query emits, with the same left-to-right
     6-dp snapped mean fold as `functions.ae.window_scores_np` (which
     this generalizes; the vanilla path is arithmetic-identical)."""
-    import numpy as np
-
     errs = errors_np(family)(weights, z)
     s = errs[:, 0].copy()
     for k in range(1, errs.shape[1]):
         s = s + errs[:, k]
-    mean6 = np.floor(s / float(errs.shape[1]) * 1e6 + 0.5) / 1e6
+    mean6 = _round6_np(s / float(errs.shape[1]))
     return mean6, errs.max(axis=1)
 
 

@@ -3,14 +3,16 @@
 The reference runs as a Numaflow streaming pipeline but delegates all
 windowing to the platform (SURVEY §2.9: payloads arrive pre-windowed,
 `Datum` watermarks unused by the UDFs). Here the engine owns it:
-event-time windows + watermarks for late data, and an
-applyInPandasWithState kernel for custom stateful per-series smoothing
-(the streaming analog of ExpMovingAverage, transforms/_movavg.py:100-113).
+event-time windows + watermarks for late data (`streaming_rollup`,
+`streaming_m4`, `streaming_sessionize`), and applyInPandasWithState
+kernels that carry per-series state across micro-batches:
+`streaming_ewm` (the streaming analog of ExpMovingAverage,
+transforms/_movavg.py:100-113) and `streaming_counter_deltas`.
 
 Batch and streaming share the same aggregate definitions, so a backfill
-(batch cascade) and the live path (this module) produce consistent tiers —
-the "kappa" layout a lakehouse deployment would use: stream → 1m appends,
-batch cascade → 1h/1d from the 1m table.
+(`rollup_tiers_fused`) and the live path (this module, run by
+jobs/stream_job.py) produce consistent 1m tiers — the "kappa" layout a
+lakehouse deployment would use.
 """
 
 from __future__ import annotations
@@ -156,176 +158,6 @@ def streaming_ewm(
         fn,
         outputStructType=_EWM_OUT_SCHEMA,
         stateStructType=_EWM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_HAMPEL_STATE_SCHEMA = T.StructType(
-    [T.StructField("tail", T.ArrayType(T.DoubleType()), True)]
-)
-_HAMPEL_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("event_ts", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("med", T.DoubleType()),
-        T.StructField("mad", T.DoubleType()),
-        T.StructField("is_outlier", T.BooleanType()),
-    ]
-)
-
-
-def streaming_hampel(
-    stream_df: DataFrame,
-    window: int = 11,
-    n_sigmas: float = 3.0,
-    source_col: str = "source",
-    ts_col: str = "event_ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Stateful streaming Hampel filter: the trailing-window operator
-    (operators/tsfeatures.hampel_filter) continued across micro-batches.
-    The per-series state is just the last `window-1` values in event-time
-    order — the whole reason the batch operator uses a TRAILING window is
-    that this state is bounded and the flag at t never looks ahead.
-
-    Identical arithmetic to the batch kernel (sorted-window mean-of-
-    middles median/MAD, same constant folding, same floor-1e6 rounding),
-    so batch ≡ stream on the concatenated input (tests/test_streaming.py).
-    Assumes per-series event-time-ordered arrival across micro-batches
-    (the streaming_ewm contract)."""
-    import numpy as np
-
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
-    thresh_mult = float(n_sigmas) * 1.4826
-
-    def _r6(x: float) -> float:
-        import math
-
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        (source,) = key
-        tail = list(state.get[0]) if state.exists else []
-        whole = pd.concat(list(pdfs), ignore_index=True)
-        if not len(whole):
-            yield pd.DataFrame(
-                {c.name: pd.Series([], dtype="object") for c in _HAMPEL_OUT_SCHEMA}
-            )
-            return
-        whole = whole.sort_values(ts_col, kind="mergesort")
-        vals = [float(v) for v in whole[value_col]]
-        buf = np.asarray(tail + vals, dtype=float)
-        k = len(tail)
-        meds, mads, flags = [], [], []
-        for i in range(len(vals)):
-            win = buf[max(0, k + i - window + 1) : k + i + 1]
-            sw = np.sort(win)
-            n = len(sw)
-            med = (sw[(n - 1) // 2] + sw[n // 2]) / 2.0
-            dv = np.sort(np.abs(win - med))
-            mad = (dv[(n - 1) // 2] + dv[n // 2]) / 2.0
-            meds.append(_r6(med))
-            mads.append(_r6(mad))
-            flags.append(bool(abs(vals[i] - med) > thresh_mult * mad))
-        state.update(([float(v) for v in buf[-(window - 1) :]],))
-        yield pd.DataFrame(
-            {
-                "source": source,
-                "event_ts": whole[ts_col].to_numpy(),
-                "value": vals,
-                "med": meds,
-                "mad": mads,
-                "is_outlier": flags,
-            }
-        )
-
-    return stream_df.groupBy(source_col).applyInPandasWithState(
-        fn,
-        outputStructType=_HAMPEL_OUT_SCHEMA,
-        stateStructType=_HAMPEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_PH_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("s", T.DoubleType()),
-        T.StructField("m", T.DoubleType()),
-        T.StructField("mmin", T.DoubleType()),
-    ]
-)
-_PH_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("event_ts", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("ph", T.DoubleType()),
-        T.StructField("alarm", T.BooleanType()),
-    ]
-)
-
-
-def streaming_page_hinkley(
-    stream_df: DataFrame,
-    delta: float = 0.0,
-    lam: float = 50.0,
-    source_col: str = "source",
-    ts_col: str = "event_ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Stateful streaming Page–Hinkley drift detector: the batch
-    recursion (operators/tsfeatures.page_hinkley) continued across
-    micro-batches with four scalars of state per series — (n, Σx, m,
-    min m). Identical IEEE op sequence to the batch loop, so batch ≡
-    stream on the concatenated input. Event-time-ordered arrival per
-    series assumed (the streaming_ewm contract)."""
-    d, lam_ = float(delta), float(lam)
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        (source,) = key
-        if state.exists:
-            n, s, m, mmin = state.get
-        else:
-            n, s, m, mmin = 0, 0.0, 0.0, float("inf")
-        whole = pd.concat(list(pdfs), ignore_index=True)
-        if not len(whole):
-            yield pd.DataFrame(
-                {c.name: pd.Series([], dtype="object") for c in _PH_OUT_SCHEMA}
-            )
-            return
-        whole = whole.sort_values(ts_col, kind="mergesort")
-        vals = [float(v) for v in whole[value_col]]
-        phs, alarms = [], []
-        for x in vals:
-            s += x
-            n += 1
-            mean = s / n
-            m = m + (x - mean - d)
-            if m < mmin:
-                mmin = m
-            ph = m - mmin
-            phs.append(ph)
-            alarms.append(ph > lam_)
-        state.update((int(n), float(s), float(m), float(mmin)))
-        yield pd.DataFrame(
-            {
-                "source": source,
-                "event_ts": whole[ts_col].to_numpy(),
-                "value": vals,
-                "ph": phs,
-                "alarm": alarms,
-            }
-        )
-
-    return stream_df.groupBy(source_col).applyInPandasWithState(
-        fn,
-        outputStructType=_PH_OUT_SCHEMA,
-        stateStructType=_PH_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

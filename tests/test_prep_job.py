@@ -1,11 +1,11 @@
-"""End-to-end runs of the stream, rollup, diagnostics and retention jobs
+"""End-to-end runs of the stream, rollup and retention jobs
 (`jobs/*_job.py`): the streaming drain agrees with the batch rollup, the
 rollup job's summary matches DuckDB over its input and a rerun skips every
-bucket, the diagnostics job's per-feature outputs have the expected row
-counts, and retention's kept and expired rows match its audit."""
+bucket, and retention's kept and expired rows match its audit."""
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -70,6 +70,40 @@ def test_stream_job_end_to_end(tmp_path):
     assert mism == 0
 
 
+def test_stream_job_corrupt_output_fails(spark, tmp_path, monkeypatch, capsys):
+    """A part file of the sink that its `_spark_metadata` log lists is
+    corrupted after a drain: the rerun, with no new input, fails instead
+    of reporting an empty drain."""
+    from jobs import stream_job
+    from numalogic_spark.datagen import gen_tokens_spark
+
+    src, out = tmp_path / "tokens", tmp_path / "tier1m"
+    gen_tokens_spark(spark, 3000, n_sources=3).coalesce(2).write.parquet(str(src))
+    argv = [
+        "stream_job.py", "--input", str(src), "--output", str(out),
+        "--checkpoint", str(tmp_path / "ckpt"), "--once",
+    ]
+    monkeypatch.setattr(sys, "argv", argv)
+    monkeypatch.setattr(stream_job, "get_spark", lambda *a, **k: spark)
+
+    stream_job.main()
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["tier_rows"] > 0
+
+    log = sorted((out / "_spark_metadata").glob("[0-9]*"), key=lambda p: int(p.name))
+    listed = [
+        json.loads(line)["path"]
+        for p in log
+        for line in p.read_text().splitlines()[1:]
+    ]
+    part = listed[0].removeprefix("file://")
+    size = os.path.getsize(part)
+    with open(part, "r+b") as f:
+        f.write(b"\0" * size)
+
+    with pytest.raises(Exception, match=re.escape(os.path.basename(part))):
+        stream_job.main()
+
+
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")
 def test_rollup_job_end_to_end(tmp_path):
     """jobs/rollup_job.py generates its input, then runs the fingerprinted
@@ -115,34 +149,6 @@ def test_rollup_job_end_to_end(tmp_path):
     skipped = {k: v for k, v in second.items() if "skipped" in k}
     assert len(processed) == len(skipped) == 3
     assert set(processed.values()) == {0} and set(skipped.values()) == {4}
-
-
-@pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")
-def test_diagnostics_job_end_to_end(tmp_path):
-    zip_path = tmp_path / "pkg.zip"
-    subprocess.run(
-        [sys.executable, "-m", "zipfile", "-c", str(zip_path), "numalogic_spark"],
-        cwd=REPO, check=True,
-    )
-    out = tmp_path / "diag"
-    r = subprocess.run(
-        [
-            SUBMIT, "--master", "local[4]", "--py-files", str(zip_path),
-            "jobs/diagnostics_job.py",
-            "--input", "/root/testdata/sf0.001/events.parquet",
-            "--output", str(out),
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=420,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    summary = json.loads(r.stdout.strip().splitlines()[-1])
-    rows = summary["rows"]
-    assert set(rows) == {"acf", "cusum", "hampel", "stl", "holt", "rolling_corr"}
-    # per-series shapes: 5 sources, 5 lags; hampel = one row per event
-    assert rows["acf"] == 25
-    assert rows["cusum"] == 5
-    assert rows["hampel"] == 1000
-    assert all(v > 0 for v in rows.values())
 
 
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="spark-submit not available")

@@ -1,7 +1,6 @@
 """Each streaming operator ≡ its batch counterpart on the same rows split
 into micro-batches: the 1m rollup (and its watermark drop of late data),
-and the stateful EWM, Hampel, Page-Hinkley, counter-delta, M4 and
-sessionize operators."""
+the stateful EWM and counter-delta operators, and M4 and sessionize."""
 
 import numpy as np
 import pandas as pd
@@ -160,136 +159,6 @@ def test_streaming_rollup_drops_late_data(spark, tmp_path):
     assert got.loc[t(0), "n_tok_sum"] == 12.0
     # the minute-11 window never crossed the watermark -> not emitted
     assert t(11) not in got.index
-
-
-def test_streaming_hampel_matches_batch_kernel(spark, tmp_path):
-    """Stateful streaming Hampel ≡ the batch tsfeatures kernel on the
-    concatenated stream: med/mad/flag identical across micro-batch splits
-    (state = trailing window-1 values)."""
-    import datetime as dt
-
-    from numalogic_spark.operators.tsfeatures import hampel_filter
-    from numalogic_spark.streaming.rollup_stream import streaming_hampel
-
-    rng = np.random.default_rng(23)
-    rows = []
-    t0 = dt.datetime(2024, 1, 1)
-    for s in range(3):
-        x = np.round(10 + np.cumsum(rng.normal(0, 1, 90)), 2)
-        x[40 + s] += 50.0  # inject one spike per series
-        for i, v in enumerate(x):
-            # strictly increasing per-series ts: no ordering ties between
-            # the batch sort and the kernel's mergesort
-            rows.append((f"s{s}", t0 + dt.timedelta(seconds=10 * i), float(v)))
-    pdf = pd.DataFrame(rows, columns=["source", "event_ts", "value"])
-    schema = "source string, event_ts timestamp, value double"
-
-    d = tmp_path / "hampel_src"
-    for i, chunk in enumerate(np.array_split(np.arange(len(pdf)), 3)):
-        spark.createDataFrame(pdf.iloc[chunk], schema).repartition(1).write.parquet(
-            str(d / f"part{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(d) + "/part*")
-    )
-    q = (
-        streaming_hampel(stream, window=11, n_sigmas=3.0)
-        .writeStream.format("memory")
-        .queryName("hampelq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = (
-        spark.sql("select * from hampelq")
-        .toPandas()
-        .sort_values(["source", "event_ts"], ignore_index=True)
-    )
-
-    batch = (
-        hampel_filter(
-            spark.createDataFrame(pdf, schema),
-            order_cols=("event_ts",),
-            window=11,
-            n_sigmas=3.0,
-        )
-        .toPandas()
-        .sort_values(["source", "event_ts"], ignore_index=True)
-    )
-    assert len(got) == len(batch) == len(pdf)
-    assert (got["med"].to_numpy() == batch["med"].to_numpy()).all()
-    assert (got["mad"].to_numpy() == batch["mad"].to_numpy()).all()
-    assert (got["is_outlier"].to_numpy() == batch["is_outlier"].to_numpy()).all()
-    # the injected spikes are flagged
-    flagged = got[got["is_outlier"]]
-    assert len(flagged) >= 3
-
-
-def test_streaming_page_hinkley_matches_batch(spark, tmp_path):
-    """Stateful streaming Page–Hinkley ≡ the batch recursion across
-    micro-batch splits (4 scalars of state), and the drift alarm fires
-    after an injected mean shift."""
-    import datetime as dt
-
-    from numalogic_spark.operators.tsfeatures import page_hinkley
-    from numalogic_spark.streaming.rollup_stream import streaming_page_hinkley
-
-    rng = np.random.default_rng(29)
-    rows = []
-    t0 = dt.datetime(2024, 1, 1)
-    for s in range(2):
-        x = 20 + rng.normal(0, 1, 240)
-        x[150:] += 8.0  # mean shift
-        for i, v in enumerate(x):
-            rows.append((f"s{s}", t0 + dt.timedelta(hours=i), float(round(v, 2))))
-    pdf = pd.DataFrame(rows, columns=["source", "event_ts", "value"])
-    schema = "source string, event_ts timestamp, value double"
-
-    d = tmp_path / "ph_src"
-    for i, chunk in enumerate(np.array_split(np.arange(len(pdf)), 3)):
-        spark.createDataFrame(pdf.iloc[chunk], schema).repartition(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(d) + "/part*")
-    )
-    q = (
-        streaming_page_hinkley(stream, delta=0.0, lam=50.0)
-        .writeStream.format("memory")
-        .queryName("phq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = (
-        spark.sql("select * from phq")
-        .toPandas()
-        .sort_values(["source", "event_ts"], ignore_index=True)
-    )
-
-    batch_in = pdf.assign(
-        bucket_s=(pdf["event_ts"] - t0).dt.total_seconds().astype(int)
-    )[["source", "bucket_s", "value"]].rename(columns={"value": "val"})
-    batch = (
-        page_hinkley(spark.createDataFrame(batch_in), delta=0.0, lam=50.0)
-        .toPandas()
-        .sort_values(["source", "bucket_s"], ignore_index=True)
-    )
-    assert len(got) == len(batch) == len(pdf)
-    assert (got["ph"].to_numpy() == batch["ph"].to_numpy()).all()
-    assert (got["alarm"].to_numpy() == batch["alarm"].to_numpy()).all()
-    # alarm fires only after the shift, for every series
-    for s, g in got.groupby("source"):
-        g = g.reset_index(drop=True)
-        first_alarm = g.index[g["alarm"]].min()
-        assert 150 <= first_alarm <= 200
 
 
 def test_streaming_counter_deltas_match_batch(spark, tmp_path):

@@ -58,62 +58,19 @@ def main() -> None:
     filtered = df.filter(F.col("source") == "src_001").select("source", "event_ts", "n_tok")
     sections.append(("filter+projection (PushedFilters reach the parquet scan)", grab(filtered)))
 
-    # round 4: time-series feature operators — every one rides a single
-    # exchange on the series key; re-aggregations reuse that partitioning
-    from numalogic_spark.operators.tsfeatures import (
-        acf,
-        cusum_changepoint,
-        hampel_filter,
-        stl_lite,
-    )
-
+    # a small per-series event frame and its hourly sums, shared by the
+    # PromQL, join and sketch operators below
     ev = spark.range(5000).select(
         (F.col("id") % 5).cast("string").alias("source"),
         (F.col("id") * 60).alias("ts_s"),
         F.col("id").alias("event_id"),
         (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0).alias("value"),
     )
-    sections.append((
-        "ACF lags 1/2/3/6/12 (ONE exchange on source: every lag column from the same sort, decimal moments partial-agg map-side, stack unpivot adds no shuffle)",
-        grab(acf(ev)),
-    ))
-    sections.append((
-        "CUSUM change-point (running decimal sum + moments reuse one exchange; per-series stats come back as BroadcastHashJoin; argmax is a second sort, not a second exchange)",
-        grab(cusum_changepoint(ev)),
-    ))
-    sections.append((
-        "Hampel filter (rolling sorted-array median/MAD as JVM HOFs over one window sort; no Python, no second exchange)",
-        grab(hampel_filter(ev)),
-    ))
     hourly = ev.groupBy("source", (F.col("ts_s") - F.col("ts_s") % 3600).alias("bucket_s")).agg(
         F.sum("value").alias("val")
     )
-    sections.append((
-        "STL-lite decomposition (trend from one window sort; seasonal fit is a tiny source*phase table joined back twice via BroadcastHashJoin)",
-        grab(stl_lite(hourly)),
-    ))
 
-    # round 4 second wave: histogram-statistics + drift + pair operators
-    from numalogic_spark.operators.tsfeatures import (
-        ccf_pairs,
-        pot_threshold,
-        series_summary,
-    )
-
-    sections.append((
-        "series summary (distinct-value histogram: one groupBy + a tiny per-series window; quantiles/mean/std read off the histogram, never a row-level sort)",
-        grab(series_summary(ev)),
-    ))
-    sections.append((
-        "POT/GPD extreme-value threshold (histogram quantile u broadcast back; exceedance moments are one partial-agg groupBy; fit is a closed-form projection)",
-        grab(pot_threshold(ev)),
-    ))
-    sections.append((
-        "CCF pair cross-correlation (lag explode + time-shift equi-join — no per-series sort; moments partial-aggregate on (pair, lag))",
-        grab(ccf_pairs(hourly)),
-    ))
-
-    # round 4 third wave: counter semantics, downsampling, as-of, sketch
+    # counter semantics, downsampling, as-of, sketch
     from numalogic_spark.operators.joins import asof_join_backward
     from numalogic_spark.operators.promql import (
         counter_rate,
@@ -144,7 +101,7 @@ def main() -> None:
         grab(sessionize(ev.select(F.col("source").alias("user_id"), "ts_s", "event_id", "value"))),
     ))
 
-    # round 4 fourth wave: sketch + interval operators
+    # sketch + interval operators
     from numalogic_spark.operators.joins import interval_overlap_join
     from numalogic_spark.operators.sketches import cms_sketch
 
